@@ -18,7 +18,7 @@ Cost model per batch (B = batch size, N = base size, B << N):
   batch's bucket keys — a map-side scan of the base, no base shuffle;
 - the sha-collapsed base representatives are READ from the persisted
   ``band_reps`` stage (written once by the full run, rolled forward
-  append-only by ``merged_state``) — no per-batch base-wide
+  append-only by ``append_state_delta``) — no per-batch base-wide
   re-aggregation;
 - exact-dup probing broadcasts the batch's distinct shas the same way;
 - connected components run on the TOUCHED subgraph only: new edges
@@ -42,6 +42,7 @@ from deduplidog_spark.operators import minhash as mh
 from deduplidog_spark.operators import simhash as sh
 from deduplidog_spark.operators import substring as ss
 from deduplidog_spark.operators.actions import action_plan, run_metrics
+from deduplidog_spark.operators.candidates import _bucket_pairs
 from deduplidog_spark.operators.cluster import connected_components, elect_keepers
 from deduplidog_spark.operators.exact import collapse_sha_reps
 from deduplidog_spark.operators.verify import verify_candidate_pairs
@@ -79,9 +80,9 @@ class BaseState:
     bands: DataFrame | None  # slim band table (None in exact mode)
     labels: DataFrame  # (fid, component)
     # sha-collapsed representative band rows (one per distinct sha) —
-    # persisted by the full run / write_state so an append batch never
-    # re-aggregates the base band table; None for pre-round-3 snapshots
-    # (incremental_dedupe then falls back to a one-off base collapse)
+    # persisted by the full run and rolled forward by the delta chain
+    # so an append batch never re-aggregates the base band table; set
+    # in every band mode, None in exact mode
     band_reps: DataFrame | None = None
 
 
@@ -94,15 +95,16 @@ class IncrementalResult:
     plan: DataFrame  # action-plan rows for affected components
     metrics: DataFrame
     dropped_buckets: DataFrame | None = None
-    new_bands: DataFrame | None = None  # batch slim band table (reused by merged_state)
+    new_bands: DataFrame | None = None  # batch slim band table (appended by append_state_delta)
     # representative band rows for shas the batch introduced (not in
-    # base): merged_state appends these to the base band_reps, keeping
-    # the "one rep per distinct sha" invariant without any aggregation
+    # base): append_state_delta appends these to the base band_reps,
+    # keeping the "one rep per distinct sha" invariant without any
+    # aggregation
     new_band_reps: DataFrame | None = None
     # labels of the AFFECTED subgraph only (batch fids + members of
     # base components a batch edge touches) — the batch-sized label
-    # delta the delta state layout appends; `labels` above remains the
-    # full updated table for callers that materialize whole state
+    # delta append_state_delta writes; `labels` above remains the full
+    # updated table
     label_updates: DataFrame | None = None
 
 
@@ -124,27 +126,10 @@ def load_state(spark: SparkSession, cfg: DedupConfig) -> BaseState:
             )
         raise ValueError("incremental dedup needs a checkpoint target in cfg")
 
-    bands = rd(_BAND_STAGE[cfg.mode]) if cfg.mode in _BAND_STAGE else None
-    band_reps = None
+    bands = band_reps = None
     if cfg.mode in _BAND_STAGE:
-        from pyspark.errors import AnalysisException
-
-        try:  # stage exists since round 3; older snapshots → fallback
-            band_reps = rd("band_reps")
-        except AnalysisException as e:
-            # ONLY a missing stage means "pre-round-3 snapshot" — any
-            # other failure (permissions, corrupt parquet, transient
-            # storage fault) must surface, not silently reinstate the
-            # per-batch base-wide aggregation the stage exists to avoid.
-            # Match the structured error class, not the message text
-            # (message formats change across Spark versions; a renamed
-            # message would turn a corrupt stage into a silent fallback).
-            get_cls = getattr(e, "getCondition", None) or e.getErrorClass
-            err = get_cls() or ""
-            if err.startswith(("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND")):
-                band_reps = None
-            else:
-                raise
+        bands = rd(_BAND_STAGE[cfg.mode])
+        band_reps = rd("band_reps")
     return BaseState(
         files=rd("files"), bands=bands, labels=rd("cc_labels"),
         band_reps=band_reps,
@@ -166,15 +151,6 @@ def _slim_bands(files_full: DataFrame, cfg: DedupConfig) -> DataFrame:
     raise ValueError(f"_slim_bands: unsupported mode {cfg.mode!r}")
 
 
-def _collapse_reps(bands: DataFrame) -> DataFrame:
-    """One representative band row per distinct sha — the bootstrap/
-    fallback collapse; steady-state appends never run this (the
-    persisted band_reps stage + per-batch fresh reps carry the
-    invariant forward with no base-wide aggregation). Delegates to the
-    shared kernel so rep selection cannot diverge from the full run."""
-    return collapse_sha_reps(bands)
-
-
 def _explode(slim: DataFrame, cfg: DedupConfig) -> DataFrame:
     return (
         ss.explode_fingerprints(slim)
@@ -186,8 +162,8 @@ def _explode(slim: DataFrame, cfg: DedupConfig) -> DataFrame:
 def incremental_candidate_pairs(
     new_rows: DataFrame, base_rows: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """Candidate pairs touching ≥1 batch doc. Same grouped expansion
-    and hot-bucket cap as candidates.lsh_candidate_pairs, restricted to
+    """Candidate pairs touching ≥1 batch doc. Same bucket kernel and
+    hot-bucket cap as candidates.lsh_candidate_pairs, restricted to
     buckets where a batch doc lands: the batch's distinct bucket keys
     BROADCAST against the base band table (left-semi — the base side
     never shuffles), and base-base pairs inside a bucket are skipped in
@@ -205,60 +181,12 @@ def incremental_candidate_pairs(
     hot = new_rows.select("band_id", "band_hash").distinct()
     base_hits = base_rows.join(
         F.broadcast(hot), ["band_id", "band_hash"], "left_semi"
-    ).select("fid", "band_id", "band_hash").withColumn("is_new", F.lit(False))
+    ).select("fid", "band_id", "band_hash", F.lit(False).alias("is_new"))
     members = base_hits.unionByName(
-        new_rows.select("fid", "band_id", "band_hash").withColumn(
-            "is_new", F.lit(True)
-        )
+        new_rows.select("fid", "band_id", "band_hash", F.lit(True).alias("is_new"))
     )
-    counts = members.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bucket_size"),
-        F.sum(F.when(F.col("is_new"), 0).otherwise(1)).alias("n_base"),
-    )
-    dropped_report = counts.filter(
-        F.col("bucket_size") > cfg.max_bucket_size
-    ).withColumn(
-        # true ⇔ the base run kept this bucket (its base-only size was
-        # under the cap) but the batch pushed it over: base labels may
-        # retain edges a full recompute would not emit
-        "base_kept_divergence",
-        (F.col("n_base") > 0) & (F.col("n_base") <= cfg.max_bucket_size),
-    )
-    # only 2..cap buckets reach the group stage (mirrors
-    # candidates.lsh_candidate_pairs r6 shape): singleton buckets can't
-    # pair and oversized ones are dropped+logged, so the group-side
-    # exchange carries only pair-producing rows — AQE broadcasts the
-    # multi-member key set when it fits, making the probe map-side
-    multi = counts.filter(
-        (F.col("bucket_size") > 1)
-        & (F.col("bucket_size") <= cfg.max_bucket_size)
-    ).select("band_id", "band_hash")
-    buckets = (
-        members.join(multi, ["band_id", "band_hash"], "left_semi")
-        .groupBy("band_id", "band_hash")
-        .agg(F.collect_list(F.struct("fid", "is_new")).alias("ms"))
-    )
-    ms = F.col("ms")
-    combos = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.size(ms)),
-                lambda y: F.struct(
-                    F.least(x["fid"], y["fid"]).alias("id_a"),
-                    F.greatest(x["fid"], y["fid"]).alias("id_b"),
-                    (x["is_new"] | y["is_new"]).alias("touches_new"),
-                ),
-            ),
-        )
-    )
-    pairs = (
-        buckets.select(F.explode(combos).alias("p"))
-        .filter(F.col("p.touches_new"))
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return pairs, dropped_report
+    # no materialize: the bucket table is batch-sized here
+    return _bucket_pairs(members, cfg, lambda d: d)
 
 
 def incremental_exact_edges(
@@ -307,9 +235,11 @@ def incremental_labels(
         F.col("component").alias("id_a"), F.col("fid").alias("id_b")
     )
     sub = connected_components(
-        # new edges touch >=1 batch fid and are canonical+unique; star
-        # edges are one row per base member of a touched component --
-        # disjoint and duplicate-free, so skip the edge dedup shuffle
+        # skip the edge dedup shuffle: duplicates are possible (an
+        # exact star edge (center, member) equals a subgraph star edge
+        # when a touched component's id is that sha group's center) but
+        # do not change the labels -- min-label propagation ignores
+        # edge multiplicity; they only ride along in per-round shuffles
         new_edges.union(star), max_iterations, assume_unique_edges=True,
     )
     updated = base_labels.join(sub, "fid", "left_anti").unionByName(sub)
@@ -333,11 +263,7 @@ def state_from_result(result, base_raw: DataFrame, cfg: DedupConfig) -> BaseStat
             files=result.files,
             bands=result.bands,
             labels=result.clusters.select("fid", "component"),
-            band_reps=(
-                result.band_reps
-                if result.band_reps is not None
-                else _collapse_reps(result.bands)
-            ),
+            band_reps=result.band_reps,
         )
     full = ingest(base_raw, cfg).withColumn("fid", F.concat_ws("/", "repo", "path"))
     bands = _slim_bands(full, cfg) if cfg.mode in _BAND_STAGE else None
@@ -345,7 +271,7 @@ def state_from_result(result, base_raw: DataFrame, cfg: DedupConfig) -> BaseStat
         files=result.files,
         bands=bands,
         labels=result.clusters.select("fid", "component"),
-        band_reps=_collapse_reps(bands) if bands is not None else None,
+        band_reps=collapse_sha_reps(bands) if bands is not None else None,
     )
 
 
@@ -420,8 +346,8 @@ def incremental_dedupe(
         seen = state.files.filter(F.col("sha").isNotNull()).select("sha").distinct()
         # NULL-sha (quarantined) rows never match a left_anti key, so
         # without this filter EVERY batch would mint a fresh NULL-sha
-        # representative and merged_state would accumulate one dead rep
-        # per append — violating the band_reps one-rep-per-distinct-sha
+        # representative and the band_reps log would accumulate one
+        # dead rep per append — violating the one-rep-per-distinct-sha
         # invariant (their band_hashes are NULL, so they contribute no
         # band rows anyway)
         fresh = new_slim.filter(F.col("sha").isNotNull()).join(
@@ -435,15 +361,10 @@ def incremental_dedupe(
         # (dropping buckets the full run keeps — breaking label
         # equivalence) and emit one candidate pair per copy. The reps
         # are READ from the persisted band_reps stage (written by the
-        # full run / write_state) so no batch ever pays a base-wide
-        # aggregation shuffle; the groupBy below is only the fallback
-        # for snapshots written before the stage existed.
-        if state.band_reps is not None:
-            base_reps = state.band_reps
-        else:
-            base_reps = _collapse_reps(state.bands)
+        # full run, rolled forward by append_state_delta) so no batch
+        # ever pays a base-wide aggregation shuffle.
         pairs, dropped = incremental_candidate_pairs(
-            _explode(reps, cfg), _explode(base_reps, cfg), cfg
+            _explode(reps, cfg), _explode(state.band_reps, cfg), cfg
         )
         union_slim = state.bands.unionByName(new_slim)
         if cfg.mode == "simhash":
@@ -482,73 +403,11 @@ def incremental_dedupe(
     )
 
 
-def merged_state(result: IncrementalResult, state: BaseState, cfg: DedupConfig,
-                 new_raw: DataFrame | None = None) -> BaseState:
-    """The next snapshot's base state (caller writes it to the NEXT
-    checkpoint location — never overwrite the state being read):
-    files ∪ batch, bands ∪ batch bands, updated labels. The batch band
-    table computed (and localCheckpointed) by ``incremental_dedupe``
-    is reused — the Arrow signature stage is never paid twice;
-    ``new_raw`` is only consulted as a fallback for results produced
-    before ``new_bands`` existed."""
-    bands = state.bands
-    band_reps = None
-    if bands is not None:
-        if result.new_bands is not None:
-            bands = _union_audit_tolerant(bands, result.new_bands)
-        elif new_raw is not None:
-            new_full = ingest(new_raw, cfg).withColumn(
-                "fid", F.concat_ws("/", "repo", "path")
-            )
-            bands = bands.unionByName(_slim_bands(new_full, cfg))
-        # roll the rep table forward WITHOUT aggregating: base reps
-        # stay valid (a batch copy of an existing sha rides the exact
-        # star edges, its rep identity is immaterial to labels), and
-        # the batch's fresh-sha reps were already collapsed batch-side
-        # by incremental_dedupe — append-only state growth, O(B) work
-        if state.band_reps is not None and result.new_band_reps is not None:
-            band_reps = _union_audit_tolerant(
-                state.band_reps, result.new_band_reps
-            )
-        else:
-            band_reps = _collapse_reps(bands)
-    return BaseState(
-        files=_union_audit_tolerant(state.files, result.new_files),
-        bands=bands,
-        labels=result.labels,
-        band_reps=band_reps,
-    )
-
-
-def write_state(spark: SparkSession, state: BaseState, cfg: DedupConfig,
-                checkpoint_dir: str) -> None:
-    """Persist a (merged) state as the stage layout ``load_state``
-    reads, under a NEW checkpoint_dir — chaining daily appends:
-    run N loads from dir N-1 and writes dir N."""
-    out = checkpoint_dir.rstrip("/") + "/" + cfg.fingerprint()
-    state.files.write.mode("overwrite").parquet(out + "/files")
-    if state.bands is not None and cfg.mode in _BAND_STAGE:
-        state.bands.write.mode("overwrite").parquet(
-            out + "/" + _BAND_STAGE[cfg.mode]
-        )
-        # persist the rep table so the NEXT batch probes it directly;
-        # computed at most once (bootstrap) — steady-state it is the
-        # prior stage plus the batch's fresh reps, no aggregation
-        reps = (
-            state.band_reps
-            if state.band_reps is not None
-            else _collapse_reps(state.bands)
-        )
-        reps.write.mode("overwrite").parquet(out + "/band_reps")
-    state.labels.write.mode("overwrite").parquet(out + "/cc_labels")
-
-
 # --- delta state layout: O(batch) roll-forward ---------------------------
 #
-# write_state rewrites every stage in full per roll-forward — fine for
-# a daily CLI append, O(base) I/O per micro-batch on a stream (round-3
-# VERDICT weak #3). The delta layout stores each stage as an
-# append-log of batch-keyed partitions instead:
+# Rewriting every stage in full per roll-forward would cost O(base) I/O
+# per micro-batch (round-3 VERDICT weak #3). The delta layout stores
+# each stage as an append-log of batch-keyed partitions instead:
 #
 #   <root>/<fingerprint>/delta/<stage>/batch_id=<k>/part-*.parquet
 #
@@ -563,7 +422,7 @@ def write_state(spark: SparkSession, state: BaseState, cfg: DedupConfig,
 # - the loader unions partitions (partition pruning skips batches
 #   ≥ the one being processed — a crashed attempt's partial writes
 #   are invisible to its own replay) and collapses labels
-#   latest-batch-wins, mirroring write_state's full label overwrite;
+#   latest-batch-wins;
 # - compact_state_delta (round 5) periodically folds the chain into a
 #   fresh SEED partition and prunes superseded partitions, bounding
 #   read-side work: without it every load lists O(chain) partition
@@ -862,12 +721,7 @@ def write_state_delta(
     store.write(state.files, "files", batch_id)
     if state.bands is not None and cfg.mode in _BAND_STAGE:
         store.write(state.bands, _BAND_STAGE[cfg.mode], batch_id)
-        reps = (
-            state.band_reps
-            if state.band_reps is not None
-            else _collapse_reps(state.bands)
-        )
-        store.write(reps, "band_reps", batch_id)
+        store.write(state.band_reps, "band_reps", batch_id)
     store.write(state.labels, "cc_labels", batch_id)
 
 

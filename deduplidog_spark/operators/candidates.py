@@ -25,85 +25,103 @@ from pyspark.sql import functions as F
 from deduplidog_spark.config import DedupConfig
 
 
-def lsh_candidate_pairs(
-    band_rows: DataFrame, cfg: DedupConfig, materialize=None
+def _bucket_pairs(
+    members: DataFrame, cfg: DedupConfig, materialize
 ) -> tuple[DataFrame, DataFrame]:
-    """band rows (fid, band_id, band_hash) → distinct pairs
-    (id_a < id_b). Returns (pairs, dropped_buckets_report).
+    """THE LSH bucket kernel, shared by the full run
+    (``lsh_candidate_pairs``) and the append path
+    (``incremental.incremental_candidate_pairs``): rows (fid, band_id,
+    band_hash, is_new) → (distinct pairs id_a < id_b with at least one
+    ``is_new`` endpoint, dropped-buckets report).
 
-    Grouped pair generation, not a self-join: in-bucket pairs are
-    expanded by a JVM transform/slice expression inside the aggregated
-    partition. The count pre-pass combines map-side — its shuffle
-    carries ~one compact row per distinct (band_id, band_hash) per
-    partition — and classifies buckets in one pass: hot buckets above
-    ``max_bucket_size`` (rare by construction: byte-identical content
-    is sha-collapsed before banding) are dropped and logged, singleton
-    buckets (the overwhelming majority — honest band hashes rarely
-    collide) never reach the group stage at all, and only the 2..cap
-    keys are grouped, so per-group state is bounded at cap × fid
-    bytes and the group-side exchange carries only pair-producing
-    rows (usually elided entirely: AQE broadcasts the multi-member
-    key set and the probe is a map-side semi join).
+    One count pre-pass (map-side combinable — its shuffle carries ~one
+    compact key row per distinct (band_id, band_hash) per partition)
+    classifies every bucket: > ``max_bucket_size`` → dropped and
+    *logged*, per standard LSH practice (SURVEY §4.3); == 1 → can never
+    emit a pair. Only the 2..cap keys — the REAL candidate buckets, tiny
+    relative to the band table because honest buckets are singletons —
+    reach the collect_list, so per-group state is bounded at cap × fid
+    bytes and the group-side exchange carries only pair-producing rows
+    (bench: 5.8M band rows → ~0.4M). When the multi-key set fits the
+    broadcast threshold AQE turns the probe into a map-side semi join,
+    removing the full-table exchange outright (guide §2.3/§2.4); on a
+    high-dup-rate corpus where it outgrows the threshold, AQE falls
+    back to a shuffled join.
 
-    ``materialize`` is the caller's checkpoint hook (the pipeline
-    passes its parquet ``_ckpt`` so the bucket table survives executor
-    loss and resumes across runs, instead of pinning rows in executor
-    storage via localCheckpoint)."""
-    if materialize is None:
-        # eager=False: the bucket table has exactly one consumer (the
-        # in-bucket pair expansion, a full scan), so the lazy form
-        # caches identically while skipping the separate
-        # materialization job + driver barrier
-        materialize = lambda d: d.localCheckpoint(eager=False)  # noqa: E731
-    # One count pre-pass (map-side combinable — its shuffle carries
-    # ~one compact key row per distinct (band_id, band_hash) per
-    # partition) classifies every bucket: > cap → dropped and *logged*,
-    # per standard LSH practice (SURVEY §4.3); == 1 → can never emit a
-    # pair. Only the 2..cap keys — the REAL candidate buckets, tiny
-    # relative to the band table because honest buckets are singletons —
-    # reach the collect_list. The r5 shape anti-joined only the
-    # oversized keys and then shuffled the ENTIRE band table again to
-    # group it; restricting the group-side input to multi-member keys
-    # first means the second exchange carries only rows that can
-    # produce pairs (bench: 5.8M band rows → ~0.4M), and when the
-    # multi-key set fits the broadcast threshold AQE turns the probe
-    # into a map-side semi join, removing the full-table exchange
-    # outright (guide §2.3/§2.4). On a high-dup-rate corpus where the
-    # multi-key set outgrows the threshold, AQE falls back to a
-    # shuffled join — the same full-table exchange the old shape
-    # always paid, plus one compact key shuffle.
-    counts = band_rows.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bucket_size")
+    The report carries ``n_base`` (members with ``is_new`` false) and
+    ``base_kept_divergence``: true ⇔ the base run kept this bucket (its
+    base-only size was under the cap) but the new rows pushed it over,
+    so base labels may retain edges a full recompute would not emit.
+
+    ``materialize`` is applied exactly once, to the 2..cap bucket
+    table (fid lists per bucket)."""
+    cap = cfg.max_bucket_size
+    counts = members.groupBy("band_id", "band_hash").agg(
+        F.count("*").alias("bucket_size"),
+        F.sum(F.when(F.col("is_new"), 0).otherwise(1)).alias("n_base"),
     )
-    dropped_report = counts.filter(F.col("bucket_size") > cfg.max_bucket_size)
+    dropped_report = counts.filter(F.col("bucket_size") > cap).withColumn(
+        "base_kept_divergence", (F.col("n_base") > 0) & (F.col("n_base") <= cap)
+    )
     multi = counts.filter(
-        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= cfg.max_bucket_size)
+        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= cap)
     ).select("band_id", "band_hash")
     buckets = materialize(
-        band_rows.join(multi, ["band_id", "band_hash"], "left_semi")
+        members.join(multi, ["band_id", "band_hash"], "left_semi")
         .groupBy("band_id", "band_hash")
-        .agg(F.collect_list("fid").alias("ids"))
+        .agg(F.collect_list(F.struct("fid", "is_new")).alias("ms"))
     )
     # element i pairs with every j > i: transform over indices, slice
     # for the tail, flatten + explode — stays in whole-stage codegen
-    ids = F.col("ids")
+    ms = F.col("ms")
     combos = F.flatten(
         F.transform(
-            ids,
+            ms,
             lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
+                F.slice(ms, i + 2, F.size(ms)),
                 lambda y: F.struct(
-                    F.least(x, y).alias("id_a"), F.greatest(x, y).alias("id_b")
+                    F.least(x["fid"], y["fid"]).alias("id_a"),
+                    F.greatest(x["fid"], y["fid"]).alias("id_b"),
+                    (x["is_new"] | y["is_new"]).alias("touches_new"),
                 ),
             ),
         )
     )
     pairs = (
         buckets.select(F.explode(combos).alias("p"))
+        .filter(F.col("p.touches_new"))
         .select("p.id_a", "p.id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
     return pairs, dropped_report
+
+
+def lsh_candidate_pairs(
+    band_rows: DataFrame, cfg: DedupConfig, materialize=None
+) -> tuple[DataFrame, DataFrame]:
+    """band rows (fid, band_id, band_hash) → distinct pairs
+    (id_a < id_b). Returns (pairs, dropped_buckets_report).
+
+    Grouped pair generation, not a self-join: every row is marked new
+    and fed to the shared bucket kernel (``_bucket_pairs``), which
+    expands in-bucket pairs by a JVM transform/slice expression inside
+    the aggregated partition.
+
+    ``materialize`` is the caller's checkpoint hook for the bucket
+    table (the pipeline passes its parquet ``_ckpt`` so the table
+    survives executor loss and resumes across runs, instead of pinning
+    rows in executor storage via localCheckpoint)."""
+    if materialize is None:
+        # eager=False: the bucket table has exactly one consumer (the
+        # in-bucket pair expansion, a full scan), so the lazy form
+        # caches identically while skipping the separate
+        # materialization job + driver barrier
+        materialize = lambda d: d.localCheckpoint(eager=False)  # noqa: E731
+    return _bucket_pairs(
+        band_rows.select("fid", "band_id", "band_hash", F.lit(True).alias("is_new")),
+        cfg,
+        materialize,
+    )
 
 
 def salt_column(key, unique_col, buckets: int):
@@ -123,7 +141,7 @@ def salt_column(key, unique_col, buckets: int):
 def drop_oversized_groups(
     df: DataFrame, keys: list[str], cap: int, size_col: str = "group_size"
 ) -> tuple[DataFrame, DataFrame]:
-    """THE skew-cap kernel: count pre-pass + broadcast anti-join.
+    """Group skew cap: count pre-pass + broadcast anti-join.
 
     Removes groups larger than ``cap`` BEFORE any per-group state
     (bucket lists, inverted lists, owner lists) materializes. The
@@ -133,9 +151,11 @@ def drop_oversized_groups(
     alternative shuffles the full table on exactly the skewed key the
     cap exists to guard (windows don't partial-aggregate).
 
-    One kernel shared by the LSH band stage, both ANN paths, and
-    fork detection — the cap semantics must agree everywhere or the
-    dropped-group reports stop being comparable across operators.
+    Shared by both ANN paths, the media Hamming join and fork
+    detection, so the cap semantics agree across those operators. The
+    LSH band stage does NOT use it: ``_bucket_pairs`` classifies
+    buckets in its own count pre-pass, because it keeps the 2..cap
+    keys rather than anti-joining the oversized ones.
 
     Returns (pruned, oversized_report); the report carries the group
     keys plus ``size_col``.

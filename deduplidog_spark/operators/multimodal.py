@@ -831,9 +831,9 @@ def near_dup_media_pairs(
 
     Skew guard: bucket occupancy is counted on the exact-chunk side
     and keys above ``max_bucket_size`` are removed from BOTH sides by
-    the shared broadcast-anti-join cap kernel BEFORE the join — the
-    same drop-and-log semantics as the text LSH path
-    (candidates.drop_oversized_groups). A pair whose only shared
+    the shared broadcast-anti-join cap kernel
+    (candidates.drop_oversized_groups) BEFORE the join — the same
+    drop-and-log semantics as the text LSH path. A pair whose only shared
     bucket is over the cap is dropped (and reported), standard LSH
     practice. The cap DEFAULTS TO None (no cap): the default output is
     unconditionally the exhaustive Hamming pair set, so recall loss

@@ -198,6 +198,9 @@ def verify_candidate_pairs(
     scan, so the (small) surviving pair set broadcasts against it and
     content never crosses a shuffle — else from ``files``.
     ``sigs`` (fid, sig) optionally enables the signature-agreement gate.
+    Its fids must be a subset of ``files``' fids: the signature column
+    is inner-joined onto the ``files`` features, so a pair with an
+    endpoint missing from ``files`` is dropped.
     """
     if contents is None:
         contents = files.select("fid", "content")
@@ -274,7 +277,9 @@ def verify_candidate_pairs(
             cset = cset.localCheckpoint(eager=False)
             ca = cset.select(F.col("fid").alias("id_a"), F.col("content").alias("content_a"))
             cb = cset.select(F.col("fid").alias("id_b"), F.col("content").alias("content_b"))
-            lcs = make_lcs_udf()
+            # non-deterministic for the same reason as the Jaccard UDF
+            # below: the lcs_len filter must not duplicate the UDF
+            lcs = make_lcs_udf().asNondeterministic()
             out = (
                 out.join(ca, "id_a").join(cb, "id_b")
                 .withColumn("lcs_len", lcs(F.col("content_a"), F.col("content_b")))

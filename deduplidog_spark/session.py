@@ -138,7 +138,11 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
         def _warm(s: "pd.Series") -> "pd.Series":
             from deduplidog_spark.functions import hashing as H
 
-            return s.map(lambda t: int(H.shingle_hashes_u64(t, 5)[0]))
+            # masked into int64 range: a raw uint64 hash >= 2**63 only
+            # fits a `long` column through an unsafe Arrow cast
+            return s.map(
+                lambda t: int(H.shingle_hashes_u64(t, 5)[0]) & 0x7FFFFFFFFFFFFFFF
+            )
 
         _warm.__annotations__ = {"s": pd.Series, "return": pd.Series}
         warm = pandas_udf(_warm, "long")
@@ -158,5 +162,8 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
         strings.mapInPandas(
             _ident, "id long, s string"
         ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass  # prewarm is best-effort; never fail session construction
+    except Exception as e:
+        # prewarm is best-effort; never fail session construction
+        import warnings
+
+        warnings.warn(f"Python worker prewarm skipped: {e!r}", stacklevel=2)

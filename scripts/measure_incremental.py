@@ -35,7 +35,11 @@ def main() -> None:
 
     from deduplidog_spark.benchgen import synth_corpus
     from deduplidog_spark.config import DedupConfig
-    from deduplidog_spark.incremental import incremental_dedupe, load_state
+    from deduplidog_spark.incremental import (
+        append_state_delta,
+        incremental_dedupe,
+        load_state,
+    )
     from deduplidog_spark.pipeline import dedupe
     from deduplidog_spark.session import get_spark
 
@@ -76,8 +80,6 @@ def main() -> None:
     # append pays — keeper election + action plan, persisted outputs,
     # and the state roll-forward (files/bands/labels written for the
     # next batch) — just like the full recompute persists its stages
-    from deduplidog_spark.incremental import merged_state, write_state
-
     t0 = time.time()
     res = incremental_dedupe(
         batch_raw, cfg, state,
@@ -89,12 +91,11 @@ def main() -> None:
     res.labels.write.mode("overwrite").parquet(os.path.join(tmp, "append_labels"))
     n_labels = res.labels.count()
     t_incr = time.time() - t0
-    # state roll-forward timed separately: the parquet-dir layout must
-    # REWRITE the base-sized band/file tables, while a production
-    # Iceberg state table appends the batch-sized delta only — so this
-    # leg is an upper bound that shrinks to ~0 on a real lakehouse
+    # state roll-forward timed separately: the delta layout appends
+    # the batch-sized partitions only (files, bands, fresh-sha reps,
+    # affected labels) — nothing base-sized is rewritten
     t0 = time.time()
-    write_state(spark, merged_state(res, state, cfg), cfg, os.path.join(tmp, "ckpt_next"))
+    append_state_delta(spark, res, cfg, os.path.join(tmp, "state"), batch_id=0)
     t_roll = time.time() - t0
 
     cfg_full = cfg.with_(checkpoint_dir=os.path.join(tmp, "ckpt_full"))

@@ -3,46 +3,36 @@
 Usage (via scripts/submit.sh):
     spark-submit --py-files deduplidog_spark.zip scripts/run_dedupe.py \
         <corpus_location> <checkpoint_target> [mode] [jaccard_threshold] \
-        [--append <batch_location>]
+        [--append <batch_location>] \
+        [--collapse-versions [--version-order-col <col>]]
 
-``checkpoint_target`` is either a path (parquet stage dirs) or
+``checkpoint_target`` is either a path or
 ``table:<catalog.db.prefix>[:format]`` for catalog-table stage
 checkpoints — e.g. ``table:lake.db.run1:iceberg`` on a cluster with
 the Iceberg runtime (north_rule), or ``table:run1`` for the session
 catalog's default format.
 
-``--append <batch_location>``: incremental mode — dedupe the batch
-against the state a PRIOR run persisted under the same checkpoint
-target and config (deduplidog_spark/incremental.py: batch-only
-signatures, broadcast probing of the base band table, subgraph
-connected components). Writes the batch plan and the UPDATED label
-table under ``<checkpoint>/<fingerprint>/append/`` AND rolls the base
-state forward (files ∪ batch, bands ∪ batch bands, merged labels) to
-``--state-out`` (default ``<checkpoint>_next``) so the NEXT append
-run chains: point its <checkpoint_target> at that directory.
-
-``--state-layout delta`` — THE DEFAULT since round 5 (shared with the
-streaming path via streaming.incremental.DEFAULT_STATE_LAYOUT; the two
-entry points to the same chain used to default differently, r4 VERDICT
-wrong #3): the O(batch)-roll-forward chain (shared code:
-streaming.incremental.process_append_batch). <checkpoint_target> is
-then the DELTA ROOT, a plain path: the full run bootstraps it (state
-partitions as batch_id=-1 plus base contents); every later ``--append``
-run against the SAME root auto-assigns the next batch id, writes only
-batch-sized partitions, and needs no --state-out juggling.
+With a path target, the full run bootstraps an append chain rooted
+there (streaming.incremental.bootstrap_append_state): the state stages
+become the ``batch_id=-1`` partitions of a batch-keyed delta log, next
+to the base contents. Every later ``--append <batch_location>`` run
+against the SAME root dedupes the batch against base ∪ earlier batches
+(deduplidog_spark/incremental.py: batch-only signatures, broadcast
+probing of the base band table, subgraph connected components),
+auto-assigns the next batch id, writes the batch plan to
+``<root>/plans/batch_id=<k>`` and appends only batch-sized state
+partitions (shared code: streaming.incremental.process_append_batch).
 Daily-ingest loop:
 
     run_dedupe.py lake.parquet /state
     run_dedupe.py lake.parquet /state --append day1.parquet
     run_dedupe.py lake.parquet /state --append day2.parquet
 
-Migration from pre-round-5 defaults: chains created with the old
-snapshot default keep working — pass ``--state-layout snapshot``
-explicitly (the flag is the legacy shape, not removed). Three classic
-shapes auto-fall back to snapshot with a note when no flag is given:
-table: checkpoint targets, --collapse-versions runs, and explicit
---state-out roll-forward targets, none of which can host a delta
-chain.
+``table:`` targets and ``--collapse-versions`` runs cannot host an
+append chain (contents/plans are path-partitioned; appends reject
+collapse): their full runs write plain stage checkpoints, and
+``--append`` with either is refused. A root holding state of the old
+whole-copy snapshot layout (``s<9 digits>`` dirs) is refused too.
 """
 
 from __future__ import annotations
@@ -50,18 +40,22 @@ from __future__ import annotations
 import sys
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from deduplidog_spark.config import DedupConfig
-from deduplidog_spark.incremental import (
-    incremental_dedupe,
-    load_state,
-    merged_state,
-    write_state,
-)
 from deduplidog_spark.metrics import lineage_report, lineage_report_table
 from deduplidog_spark.pipeline import dedupe
 from deduplidog_spark.sources.readers import read_corpus
+from deduplidog_spark.streaming.incremental import (
+    bootstrap_append_state,
+    next_delta_batch_id,
+    process_append_batch,
+)
+
+USAGE = (
+    "usage: run_dedupe.py <corpus_location> <checkpoint_target> "
+    "[mode] [tau] [--append <batch_location>] "
+    "[--collapse-versions [--version-order-col <col>]]"
+)
 
 
 def _take_flag(argv: list[str], flag: str) -> str | None:
@@ -77,26 +71,16 @@ def _take_flag(argv: list[str], flag: str) -> str | None:
 
 def main() -> None:
     argv = list(sys.argv[1:])
-    from deduplidog_spark.streaming.incremental import DEFAULT_STATE_LAYOUT
-
     batch_loc = _take_flag(argv, "--append")
-    state_out = _take_flag(argv, "--state-out")
-    state_layout_flag = _take_flag(argv, "--state-layout")
-    state_layout = state_layout_flag or DEFAULT_STATE_LAYOUT
-    if state_layout not in ("snapshot", "delta"):
-        sys.exit(f"--state-layout must be snapshot or delta, got {state_layout!r}")
-    if state_layout_flag == "delta" and state_out:
-        # only an EXPLICIT delta request conflicts; with the defaulted
-        # layout, --state-out is a classic snapshot-chain shape that
-        # falls back below instead of failing a previously-valid call
-        sys.exit(
-            "--state-out is a snapshot-layout knob; the delta layout "
-            "appends batch-keyed partitions under the root itself"
-        )
     version_order = _take_flag(argv, "--version-order-col")
     collapse = "--collapse-versions" in argv
     if collapse:
         argv.remove("--collapse-versions")
+    unknown = [a for a in argv if a.startswith("--")]
+    if unknown:
+        # a stale option (e.g. the removed --state-out) must not be
+        # read as a positional argument
+        sys.exit(f"unknown option {unknown[0]}\n{USAGE}")
     if version_order and not collapse:
         sys.exit(
             "--version-order-col only orders the --collapse-versions "
@@ -104,16 +88,23 @@ def main() -> None:
             "or neither"
         )
     if len(argv) < 2:
-        sys.exit(
-            "usage: run_dedupe.py <corpus_location> <checkpoint_target> "
-            "[mode] [tau] [--append <batch_location> [--state-out <dir>]] "
-            "[--state-layout snapshot|delta] "
-            "[--collapse-versions [--version-order-col <col>]]"
-        )
+        sys.exit(USAGE)
     corpus_loc = argv[0]
     ckpt = argv[1]
     mode = argv[2] if len(argv) > 2 else "minhash"
     tau = float(argv[3]) if len(argv) > 3 else 0.7
+    if batch_loc is not None and ckpt.startswith("table:"):
+        sys.exit(
+            "--append takes a plain path as the state root: the append "
+            "chain's contents and plans are path-partitioned, so a "
+            "table: target cannot host one"
+        )
+    if batch_loc is not None and collapse:
+        sys.exit(
+            "--collapse-versions is a full-run pre-stage and cannot be "
+            "combined with --append (a batch may supersede base "
+            "versions); collapse upstream and append the collapsed batch"
+        )
 
     spark = SparkSession.builder.appName("deduplidog-spark").getOrCreate()
     common = dict(
@@ -133,123 +124,31 @@ def main() -> None:
     else:
         cfg = DedupConfig(checkpoint_dir=ckpt, **common)
 
-    if state_layout == "delta" and not state_layout_flag:
-        # the default layout is delta (r4 VERDICT #7: both entry points
-        # to the append chain share DEFAULT_STATE_LAYOUT), but three
-        # classic-run shapes cannot host a chain: table: targets (no
-        # path root for contents/plans), --collapse-versions runs
-        # (appends reject collapse), and explicit --state-out roll-
-        # forward targets (a snapshot-chain knob) — those fall back to
-        # the legacy flow with a note instead of failing a
-        # previously-valid call
-        if ckpt.startswith("table:") or collapse or state_out:
-            print(
-                "note: running the classic stage-checkpoint flow "
-                "(table: targets, --collapse-versions runs and "
-                "--state-out targets cannot host a delta append "
-                "chain); pass --state-layout snapshot to silence "
-                "this note",
-                file=sys.stderr,
-            )
-            state_layout = "snapshot"
-    if state_layout == "delta":
-        if collapse:
-            # appends reject collapse_versions, so a collapse-seeded
-            # chain would be unusable after the expensive bootstrap —
-            # fail here with the CLI-shaped message (the library
-            # bootstrap raises the same rejection)
-            sys.exit(
-                "--collapse-versions cannot seed a --state-layout delta "
-                "append chain (appends reject it — a batch may supersede "
-                "base versions); collapse upstream, write the collapsed "
-                "snapshot, and bootstrap from that"
-            )
-        if ckpt.startswith("table:"):
-            sys.exit(
-                "--state-layout delta takes a plain path as the state "
-                "root (contents/plans are path-partitioned; the STATE "
-                "stages themselves can live in catalog tables via "
-                "cfg.checkpoint_table_prefix — see "
-                "deduplidog_spark.incremental._TableDeltaStore)"
-            )
-        from deduplidog_spark.streaming.incremental import (
-            bootstrap_append_state,
-            next_delta_batch_id,
-            process_append_batch,
+    if batch_loc is not None:
+        k = next_delta_batch_id(spark, cfg, ckpt)
+        res = process_append_batch(
+            read_corpus(spark, batch_loc), cfg, ckpt, k,
+            # same cadence as streaming_append_dedupe's default: the
+            # CLI chain must not grow unboundedly either (bounded to
+            # committed batches inside compact_state_delta)
+            compact_every=16,
         )
-
-        if batch_loc is not None:
-            k = next_delta_batch_id(spark, cfg, ckpt)
-            res = process_append_batch(
-                read_corpus(spark, batch_loc), cfg, ckpt, k,
-                # same cadence as streaming_append_dedupe's default: the
-                # CLI chain must not grow unboundedly either (bounded to
-                # committed batches inside compact_state_delta)
-                compact_every=16,
-            )
-            if res is None:
-                print("empty batch — nothing to do")
-                return
-            res.metrics.show(truncate=False)
-            print(
-                f"batch {k}: plan at {ckpt.rstrip('/')}/plans/batch_id={k}; "
-                "batch-sized state delta appended — re-run with the next "
-                "--append against the SAME root to chain"
-            )
+        if res is None:
+            print("empty batch — nothing to do")
             return
-        bootstrap_append_state(read_corpus(spark, corpus_loc), cfg, ckpt)
+        res.metrics.show(truncate=False)
         print(
-            f"delta chain bootstrapped at {ckpt} "
-            f"(fingerprint {cfg.fingerprint()}); chain ingest batches with "
-            "--append <batch> --state-layout delta against the same root"
+            f"batch {k}: plan at {ckpt.rstrip('/')}/plans/batch_id={k}; "
+            "batch-sized state delta appended — re-run with the next "
+            "--append against the SAME root to chain"
         )
         return
-
-    if batch_loc is not None:
-        # fail fast on a misconfigured roll-forward target BEFORE any
-        # work: with a table: checkpoint and no --state-out, the
-        # default "<ckpt>_next" would be a table: string, which the
-        # parquet state layout can't take — catching it only after the
-        # append ran would leave outputs written but state not rolled
-        nxt = state_out or (ckpt.rstrip("/") + "_next")
-        if nxt.startswith("table:"):
-            sys.exit(
-                "--state-out must be a path (parquet state layout); "
-                "a table: checkpoint target needs an explicit --state-out"
-            )
-        state = load_state(spark, cfg)
-        base = read_corpus(spark, corpus_loc)
-        res = incremental_dedupe(
-            read_corpus(spark, batch_loc),
-            cfg,
-            state,
-            base_contents=base.select(
-                F.concat_ws("/", "repo", "path").alias("fid"), "content"
-            ),
-        )
-        res.metrics.show(truncate=False)
-        if cfg.checkpoint_table_prefix:
-            fp = cfg.fingerprint()
-            res.plan.write.format(cfg.checkpoint_format).mode("overwrite").saveAsTable(
-                f"{cfg.checkpoint_table_prefix}_append_plan_{fp}"
-            )
-            res.labels.write.format(cfg.checkpoint_format).mode("overwrite").saveAsTable(
-                f"{cfg.checkpoint_table_prefix}_append_labels_{fp}"
-            )
-            print(f"append plan/labels in tables {cfg.checkpoint_table_prefix}_append_*_{fp}")
-        else:
-            out = f"{ckpt.rstrip('/')}/{cfg.fingerprint()}/append"
-            res.plan.write.mode("overwrite").parquet(f"{out}/plan")
-            res.labels.write.mode("overwrite").parquet(f"{out}/labels")
-            print(f"append plan + updated labels written to {out}")
-        # roll the state forward so appends CHAIN: without this, a
-        # second --append against the same target would dedupe against
-        # the ORIGINAL base only and miss batch-vs-batch duplicates
-        # (nxt was validated before any work ran)
-        write_state(spark, merged_state(res, state, cfg), cfg, nxt)
+    if not (ckpt.startswith("table:") or collapse):
+        bootstrap_append_state(read_corpus(spark, corpus_loc), cfg, ckpt)
         print(
-            f"state rolled forward to {nxt} — pass it as the checkpoint "
-            "target of the next --append run"
+            f"append chain bootstrapped at {ckpt} "
+            f"(fingerprint {cfg.fingerprint()}); chain ingest batches with "
+            "--append <batch> against the same root"
         )
         return
 

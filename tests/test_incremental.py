@@ -14,9 +14,11 @@ from pyspark.sql import functions as F
 
 from deduplidog_spark.config import DedupConfig
 from deduplidog_spark.incremental import (
+    append_state_delta,
     incremental_dedupe,
     load_state,
-    merged_state,
+    load_state_delta,
+    write_state_delta,
 )
 from deduplidog_spark.pipeline import dedupe
 
@@ -133,50 +135,6 @@ def test_affected_clusters_have_one_keeper_each(spark, incr_run):
     # untouched base cluster (d1/d2) is NOT re-elected
     comps = {r.component for r in res.clusters.select("component").collect()}
     assert "base/d1.py" not in comps
-
-
-def test_chained_appends_catch_batch_vs_batch_duplicates(spark):
-    """Day-2 semantics: after rolling state forward with write_state,
-    a second batch that duplicates a DAY-1 batch doc must cluster with
-    it — this is exactly what breaks if appends don't chain state."""
-    from deduplidog_spark.incremental import merged_state, write_state
-
-    tmp = tempfile.mkdtemp(prefix="incr_chain_")
-    cfg = _cfg(tmp)
-    base_raw = _df(spark, [("base", "z.py", _words("zulu", 40))])
-    dedupe(base_raw, cfg)
-    state1 = load_state(spark, cfg)
-    day1_text = _words("hotel", 40)
-    day1 = _df(spark, [("d1", "h.py", day1_text)])
-    res1 = incremental_dedupe(
-        day1, cfg, state1,
-        base_contents=base_raw.select(
-            F.concat_ws("/", "repo", "path").alias("fid"), "content"
-        ),
-    )
-    nxt_dir = tmp + "_next"
-    write_state(spark, merged_state(res1, state1, cfg), cfg, nxt_dir)
-    cfg2 = cfg.with_(checkpoint_dir=nxt_dir)
-    state2 = load_state(spark, cfg2)
-    day2 = _df(spark, [("d2", "copy_h.py", day1_text)])
-    res2 = incremental_dedupe(
-        day2, cfg2, state2,
-        base_contents=day1.select(
-            F.concat_ws("/", "repo", "path").alias("fid"), "content"
-        ),
-    )
-    lab = {r.fid: r.component for r in res2.labels.collect()}
-    assert lab["d2/copy_h.py"] == lab["d1/h.py"]
-
-
-def test_merged_state_roundtrip(spark, incr_run):
-    cfg, state, res, full, batch_raw = incr_run
-    nxt = merged_state(res, state, cfg, new_raw=batch_raw)
-    assert nxt.files.count() == state.files.count() + res.new_files.count()
-    assert nxt.bands.count() == state.bands.count() + res.new_files.count()
-    inc = {r.fid: r.component for r in nxt.labels.collect()}
-    ful = {r.fid: r.component for r in full.clusters.select("fid", "component").collect()}
-    assert inc == ful
 
 
 @pytest.mark.parametrize("seed", [7, 23, 99])
@@ -383,25 +341,20 @@ def test_band_reps_stage_persisted_and_loaded(spark, incr_run):
 
 
 def test_merged_state_band_reps_append_only(spark, incr_run):
-    """merged_state must roll band_reps forward WITHOUT a base-wide
-    aggregation: base reps plus the batch's fresh-sha reps, preserving
-    exactly one rep per distinct sha of the merged corpus."""
+    """The delta roll-forward must carry band_reps forward WITHOUT a
+    base-wide aggregation: base reps plus the batch's fresh-sha reps,
+    preserving exactly one rep per distinct sha of the merged corpus,
+    and load_state_delta must read the stage back."""
     cfg, state, res, full, batch_raw = incr_run
-    nxt = merged_state(res, state, cfg)
-    assert nxt.band_reps is not None
-    got = nxt.band_reps.select("sha").collect()
-    shas = [r.sha for r in got]
+    root = tempfile.mkdtemp(prefix="incr_reps_")
+    write_state_delta(spark, state, cfg, root)
+    append_state_delta(spark, res, cfg, root, 0)
+    nxt = load_state_delta(spark, cfg, root)
+    shas = [r.sha for r in nxt.band_reps.select("sha").collect()]
     assert len(shas) == len(set(shas)), "duplicate reps for one sha"
     want = {r.sha for r in nxt.bands.select("sha").distinct().collect()}
     assert set(shas) == want
-    # roundtrip: write_state persists the stage, load_state reads it back
-    from deduplidog_spark.incremental import write_state
-
-    nxt_dir = cfg.checkpoint_dir + "_repsrt"
-    write_state(spark, nxt, cfg, nxt_dir)
-    st2 = load_state(spark, cfg.with_(checkpoint_dir=nxt_dir))
-    assert st2.band_reps is not None
-    assert st2.band_reps.count() == len(shas)
+    assert None not in shas
 
 
 def test_dropped_bucket_reports_base_divergence(spark):
@@ -431,6 +384,29 @@ def test_dropped_bucket_reports_base_divergence(spark):
     assert set(rep) == {111, 222}
     assert rep[111].base_kept_divergence and rep[111].n_base == 2
     assert not rep[222].base_kept_divergence and rep[222].n_base == 5
+
+    # one bucket kernel: against an EMPTY base, the append path must
+    # give exactly the full run's pairs and dropped buckets
+    from deduplidog_spark.operators.candidates import lsh_candidate_pairs
+
+    rows_all = base.unionByName(batch).unionByName(
+        spark.createDataFrame(
+            [("e0", 1, 444), ("e1", 1, 444), ("b0", 1, 444)], schema
+        )
+    )
+    empty = spark.createDataFrame([], schema)
+    inc_pairs, inc_dropped = incremental_candidate_pairs(rows_all, empty, cfg)
+    full_pairs, full_dropped = lsh_candidate_pairs(rows_all, cfg)
+
+    def pair_set(df):
+        return {(r.id_a, r.id_b) for r in df.collect()}
+
+    def keys(df):
+        return {(r.band_id, r.band_hash) for r in df.collect()}
+
+    assert pair_set(inc_pairs) == pair_set(full_pairs)
+    assert len(pair_set(full_pairs)) == 4  # (0, 333) gives 1 pair, (1, 444) gives 3
+    assert keys(inc_dropped) == keys(full_dropped) == {(0, 111), (0, 222)}
 
 
 def test_append_never_aggregates_base_bands_with_reps_stage(spark, incr_run):
@@ -480,7 +456,8 @@ def test_quarantined_batch_rows_mint_no_band_reps(spark):
     base_raw = _df(spark, [("base", "a.py", _words("qa", 40)),
                            ("base", "b.py", _words("qb", 40))])
     dedupe(base_raw, cfg)
-    state = load_state(spark, cfg)
+    root = tempfile.mkdtemp(prefix="incr_null_root_")
+    write_state_delta(spark, load_state(spark, cfg), cfg, root)
     contents = base_raw.select(
         F.concat_ws("/", "repo", "path").alias("fid"), "content"
     )
@@ -490,8 +467,10 @@ def test_quarantined_batch_rows_mint_no_band_reps(spark):
              (f"b{k}", "bad.py", "c0", "py", None, T0)],
             SCHEMA,
         )
+        state = load_state_delta(spark, cfg, root, max_batch_id=k)
         res = incremental_dedupe(batch, cfg, state, base_contents=contents)
-        state = merged_state(res, state, cfg)
+        append_state_delta(spark, res, cfg, root, k)
+    state = load_state_delta(spark, cfg, root)
     reps_sha = [r.sha for r in state.band_reps.select("sha").collect()]
     assert None not in reps_sha, "NULL-sha rep leaked into band_reps"
     assert len(reps_sha) == len(set(reps_sha))
@@ -499,8 +478,8 @@ def test_quarantined_batch_rows_mint_no_band_reps(spark):
 
 def test_load_state_surfaces_corrupt_band_reps(spark, incr_run):
     """A corrupt/unreadable band_reps stage must raise, not silently
-    fall back to the per-batch base-wide aggregation; only a MISSING
-    stage (pre-round-3 snapshot) falls back."""
+    fall back to the per-batch base-wide aggregation — and so must a
+    MISSING one: every band-mode state carries the stage."""
     import os
     import shutil
 
@@ -517,9 +496,12 @@ def test_load_state_surfaces_corrupt_band_reps(spark, incr_run):
     # RuntimeException via Py4J — the point is it is NOT swallowed)
     with _pytest.raises(Exception, match="[Pp]arquet"):
         load_state(spark, cfg)
-    # missing: pre-round-3 snapshot layout → clean fallback to None
+    # missing: no fallback either
+    from pyspark.errors import AnalysisException
+
     shutil.rmtree(stage_dir)
-    assert load_state(spark, cfg).band_reps is None
+    with _pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_state(spark, cfg)
 
 
 # --- delta-chain compaction (round 5) --------------------------------------

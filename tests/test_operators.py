@@ -499,6 +499,54 @@ def test_numeric_delta_gate_prunes_in_verify_chain(spark):
     assert wide.count() == 1
 
 
+def test_substring_verify_runs_one_python_eval(spark):
+    """The LCS verify UDF is marked non-deterministic like the Jaccard
+    one, so the ``lcs_len`` threshold filter cannot make the optimizer
+    evaluate the Python UDF twice per pair."""
+    from pyspark.sql import functions as F
+
+    from deduplidog_spark import DedupConfig
+    from deduplidog_spark.ingest import ingest
+    from deduplidog_spark.operators.verify import verify_candidate_pairs
+
+    block = "shared block of text that is long enough " * 10
+    df = spark.createDataFrame(
+        [("r", "a.py", "c0", "py", "prefix A " + block, None),
+         ("r", "b.py", "c0", "py", "other B " + block, None)],
+        "repo string, path string, commit string, lang string, "
+        "content string, mtime timestamp",
+    )
+    cfg = DedupConfig(mode="substring")
+    files = ingest(df, cfg).withColumn("fid", F.concat_ws("/", "repo", "path"))
+    pairs = spark.createDataFrame([("r/a.py", "r/b.py")], "id_a string, id_b string")
+    out = verify_candidate_pairs(pairs, files, cfg)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert out.count() == 1
+
+
+def test_prewarm_safe_arrow_conversion_no_warning(spark):
+    """The prewarm UDF's hash values fit a ``long`` column, so with safe
+    Arrow conversion on, the prewarm still runs and warns nothing."""
+    import warnings
+
+    from deduplidog_spark import session
+
+    key = "spark.sql.execution.pandas.convertToArrowArraySafely"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    session._PREWARMED.discard(id(spark.sparkContext))
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            session._prewarm_python_workers(spark, 8)
+    finally:
+        spark.conf.set(key, prev)
+    assert not [w for w in caught if "prewarm" in str(w.message)], [
+        str(w.message) for w in caught
+    ]
+
+
 def test_media_exif_aux_ts_feeds_v6_proximity(spark):
     """VERDICT item 7: the codec seam emits EXIF datetimes from the
     payload as aux_ts (deterministic fake in-container; PIL tag read on

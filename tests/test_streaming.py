@@ -196,94 +196,15 @@ def test_streaming_windowed_metrics(spark):
     assert out[0].n_repos == 1
 
 
-def test_streaming_append_dedupe_chains_state(spark):
-    """Continuous append: two micro-batches through foreachBatch must
-    chain — batch 2 duplicates of batch-1 docs cluster, and the final
-    state's labels equal a full batch recompute over everything."""
-    from pyspark.sql import functions as F
-
-    from deduplidog_spark.config import DedupConfig
-    from deduplidog_spark.incremental import load_state
-    from deduplidog_spark.pipeline import dedupe
-    from deduplidog_spark.streaming.incremental import (
-        bootstrap_append_state,
-        read_file_stream,
-        streaming_append_dedupe,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_append_")
-    root = os.path.join(tmp, "state")
-    src = os.path.join(tmp, "in")
-    os.makedirs(src)
-    cfg = DedupConfig(
-        mode="minhash", num_perm=128, lsh_bands=64,
-        jaccard_threshold=0.25, sig_est_threshold=0.05,
-        size_ratio_prefilter=0.4,
-    )
-
-    def words(p, n):
-        return " ".join(
-            f"{p}{chr(97 + i % 26)}{chr(97 + (i // 26) % 26)}" for i in range(n)
-        )
-
-    def df(rows):
-        return spark.createDataFrame(
-            [(r, p, "c0", "py", c, None) for r, p, c in rows],
-            "repo string, path string, commit string, lang string, "
-            "content string, mtime timestamp",
-        )
-
-    base = df([("base", "a.py", words("alpha", 40)),
-               ("base", "a2.py", words("alpha", 40) + " tailaa tailbb")])
-    bootstrap_append_state(base, cfg, root, state_layout="snapshot")
-
-    b1 = [("d1", "h.py", words("hotel", 40))]
-    b2 = [("d2", "hcopy.py", words("hotel", 40)),          # dup of batch-1 doc
-          ("d2", "anear.py", words("alpha", 40) + " tailxx tailyy")]  # near base
-    df(b1).write.parquet(os.path.join(src, "b1"))
-
-    stream = read_file_stream(spark, src + "/*", FX.FILES_SCHEMA)
-    q = streaming_append_dedupe(
-        stream, cfg, root, os.path.join(tmp, "qckpt"),
-        state_layout="snapshot",
-    )
-    try:
-        q.processAllAvailable()
-        df(b2).write.parquet(os.path.join(src, "b2"))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    chain = sorted(d for d in os.listdir(root) if d.startswith("s"))
-    # bootstrap + 2 micro-batches wrote 3 snapshots, but the default
-    # retention (2) deletes snapshots older than the newest two once a
-    # batch fully commits — disk must NOT grow one full state copy per
-    # batch (ADVICE r2). Exact snapshot NAMES are not asserted: batch
-    # ids come from foreachBatch, which may fire an initial empty
-    # batch under load and shift every id by one — the contract is the
-    # retention bound + label correctness, not the numbering.
-    assert len(chain) == 2
-    assert chain[-1] > chain[0]  # a strictly newer snapshot survived
-    final = load_state(spark, cfg.with_(checkpoint_dir=os.path.join(root, chain[-1])))
-    lab = {r.fid: r.component for r in final.labels.collect()}
-    assert lab["d2/hcopy.py"] == lab["d1/h.py"]          # batch-vs-batch dup
-    assert lab["d2/anear.py"] == lab["base/a.py"]        # batch-vs-base near
-    full = dedupe(
-        base.unionByName(df(b1)).unionByName(df(b2)),
-        cfg.with_(checkpoint_dir=tempfile.mkdtemp(prefix="full_sa_")),
-    )
-    ful = {r.fid: r.component for r in full.clusters.select("fid", "component").collect()}
-    assert lab == ful
-
-
 def test_streaming_append_delta_layout_o_batch_writes(spark):
-    """Round-3 VERDICT weak #3: the snapshot layout rewrote base-sized
-    state per micro-batch. The delta layout (now the default) must
-    (a) chain exactly like the snapshot path — final labels equal a
-    full recompute over base ∪ all batches, including a batch-bridges-
-    base merge — and (b) write O(batch) bytes per roll-forward: each
+    """Round-3 VERDICT weak #3: the old whole-copy layout rewrote
+    base-sized state per micro-batch. The delta chain must (a) keep no
+    full state copies, (b) write O(batch) bytes per roll-forward: each
     batch's state partitions must stay far smaller than the bootstrap's
-    base partitions even though the accumulated corpus keeps growing."""
+    base partitions even though the accumulated corpus keeps growing,
+    and (c) chain — batch-vs-batch and batch-vs-base duplicates
+    cluster, and final labels equal a full recompute over base ∪ all
+    batches."""
     from pyspark.sql import functions as F  # noqa: F401
 
     from deduplidog_spark.config import DedupConfig
@@ -325,7 +246,7 @@ def test_streaming_append_delta_layout_o_batch_writes(spark):
         + [("base", f"f{i:03d}_copy.py", words(f"w{i:02d}", 40)) for i in range(25)]
         + [("base", "a.py", words("alpha", 40))]
     )
-    bootstrap_append_state(base, cfg, root)  # default layout = delta
+    bootstrap_append_state(base, cfg, root)
 
     b1 = [("d1", "h.py", words("hotel", 40))]
     b2 = [("d2", "hcopy.py", words("hotel", 40)),          # dup of batch-1 doc
@@ -564,36 +485,18 @@ def test_delta_chain_rejects_batch_id_rewind(spark):
 
 
 def test_append_chain_default_layout_unified():
-    """r4 VERDICT wrong #3: every entry point to the append chain must
-    share ONE state-layout default (DEFAULT_STATE_LAYOUT = delta) —
-    the CLI defaulted to snapshot while the stream defaulted to delta."""
+    """Compaction cadence parity: the CLI append must compact like the
+    stream does, or a CLI-driven chain regrows the read-side O(chain)
+    cost compaction exists to bound."""
     import inspect
     import pathlib
 
-    from deduplidog_spark.streaming.incremental import (
-        DEFAULT_STATE_LAYOUT,
-        bootstrap_append_state,
-        process_append_batch,
-        streaming_append_dedupe,
-    )
+    from deduplidog_spark.streaming.incremental import streaming_append_dedupe
 
-    assert DEFAULT_STATE_LAYOUT == "delta"
-    for fn in (bootstrap_append_state, streaming_append_dedupe,
-               process_append_batch):
-        assert (
-            inspect.signature(fn).parameters["state_layout"].default
-            == DEFAULT_STATE_LAYOUT
-        ), fn.__name__
     cli = (
         pathlib.Path(__file__).resolve().parent.parent
         / "scripts" / "run_dedupe.py"
     ).read_text()
-    assert "or DEFAULT_STATE_LAYOUT" in cli, (
-        "run_dedupe.py must derive its default from DEFAULT_STATE_LAYOUT"
-    )
-    # compaction cadence parity: the CLI append must compact like the
-    # stream does, or a CLI-driven chain regrows the read-side O(chain)
-    # cost compaction exists to bound
     assert "compact_every=16" in cli, (
         "run_dedupe.py --append must pass the stream's compaction cadence"
     )
@@ -912,22 +815,17 @@ def test_append_chain_through_catalog_table_store(spark):
         bootstrap_append_state(base, cfg2, root)
 
 
-def test_cli_append_state_out_falls_back_to_snapshot(spark, monkeypatch, capsys):
-    """r5 review #6: the pre-r5 documented chaining shape
-    ``--append X --state-out Y`` (no --state-layout flag) must keep
-    working under the delta default — it is the third classic shape
-    that cannot host a delta chain, so it falls back to the snapshot
-    flow with a note instead of sys.exiting. An EXPLICIT
-    ``--state-layout delta`` with --state-out still conflicts."""
+def test_cli_rejects_removed_and_unhostable_shapes(spark, monkeypatch):
+    """run_dedupe refuses, before any work: the removed --state-out
+    flag (an unknown option, not a stray positional argument), --append
+    against a table: target (no path root for contents/plans), and
+    --append against a root of the old whole-copy snapshot layout
+    (named in the error)."""
     import importlib.util
     import pathlib
     import sys
 
     import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from deduplidog_spark.config import DedupConfig
-    from deduplidog_spark.pipeline import dedupe
 
     spec = importlib.util.spec_from_file_location(
         "run_dedupe_cli",
@@ -937,55 +835,41 @@ def test_cli_append_state_out_falls_back_to_snapshot(spark, monkeypatch, capsys)
     cli = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(cli)
 
-    tmp = tempfile.mkdtemp(prefix="cli_fallback_")
+    tmp = tempfile.mkdtemp(prefix="cli_reject_")
     corpus_loc = os.path.join(tmp, "corpus")
     batch_loc = os.path.join(tmp, "batch")
-    ckpt = os.path.join(tmp, "ckpt")
-    nxt = os.path.join(tmp, "next")
+    root = os.path.join(tmp, "state")
 
-    def df(rows):
-        return spark.createDataFrame(
-            [(r, p, "c0", "py", c, None) for r, p, c in rows],
-            "repo string, path string, commit string, lang string, "
-            "content string, mtime timestamp",
-        )
-
-    base = df([("b", f"f{i}.py", f"unique words number {i} " * 10)
-               for i in range(4)])
-    base.write.parquet(corpus_loc)
-    df([("d0", "g.py", "unique words number 3 " * 10)]).write.parquet(
-        batch_loc
-    )
-    # the classic pre-r5 full run: stage checkpoints under <ckpt>/<fp>
-    # — the config mirrors exactly what run_dedupe.main builds for
-    # "minhash 0.7", so the fingerprinted state dir lines up
-    dedupe(
-        spark.read.parquet(corpus_loc),
-        DedupConfig(
-            mode="minhash", shingle_k=9, jaccard_threshold=0.7,
-            checkpoint_dir=ckpt,
-        ),
-    ).plan.count()
-
-    monkeypatch.setattr(
-        sys, "argv",
-        ["run_dedupe.py", corpus_loc, ckpt, "minhash", "0.7",
-         "--append", batch_loc, "--state-out", nxt],
-    )
-    cli.main()  # must NOT sys.exit
-    err = capsys.readouterr().err
-    assert "classic stage-checkpoint flow" in err
-    assert os.path.isdir(nxt), "snapshot state must roll forward to --state-out"
-
-    # explicit delta + --state-out is a real conflict and still fails
-    monkeypatch.setattr(
-        sys, "argv",
-        ["run_dedupe.py", corpus_loc, ckpt, "minhash", "0.7",
-         "--append", batch_loc, "--state-out", nxt,
-         "--state-layout", "delta"],
-    )
-    with _pytest.raises(SystemExit, match="snapshot-layout knob"):
+    def run(*args):
+        monkeypatch.setattr(sys, "argv", ["run_dedupe.py", *args])
         cli.main()
+
+    with _pytest.raises(SystemExit, match="unknown option --state-out"):
+        run(corpus_loc, root, "--append", batch_loc,
+            "--state-out", os.path.join(tmp, "next"))
+    with _pytest.raises(SystemExit, match="--append takes a plain path"):
+        run(corpus_loc, "table:run1", "--append", batch_loc)
+
+    os.makedirs(os.path.join(root, "s000000001"))
+    with _pytest.raises(ValueError, match="snapshot-layout state .*s000000001"):
+        run(corpus_loc, root, "--append", batch_loc)
+    # the library entry points refuse the same root
+    from deduplidog_spark.config import DedupConfig
+    from deduplidog_spark.streaming.incremental import (
+        bootstrap_append_state,
+        process_append_batch,
+    )
+
+    df = spark.createDataFrame(
+        [("b", "f.py", "c0", "py", "some words " * 10, None)],
+        "repo string, path string, commit string, lang string, "
+        "content string, mtime timestamp",
+    )
+    cfg = DedupConfig(mode="minhash")
+    with _pytest.raises(ValueError, match="snapshot-layout state .*s000000001"):
+        bootstrap_append_state(df, cfg, root)
+    with _pytest.raises(ValueError, match="snapshot-layout state .*s000000001"):
+        process_append_batch(df, cfg, root, 0)
 
 
 def test_compact_append_chain_bounded_by_contents_commit(spark):
@@ -1078,54 +962,3 @@ def test_compact_append_chain_bounded_by_contents_commit(spark):
         for r in full.clusters.select("fid", "component").collect()
     }
     assert lab == ful
-
-
-def test_snapshot_bootstrap_refuses_dormant_delta_roots(spark):
-    """r5 review (second pass): a SNAPSHOT-layout bootstrap writes no
-    delta partitions, so the contents-ownership guard must still fire
-    for it — over a dormant own-config delta chain (seed-only) and
-    over a catalog-table chain (which leaves no path/fingerprint
-    trace; recognized by contents without s000000000) — while a legit
-    snapshot re-bootstrap over its own root keeps working."""
-    import uuid
-
-    import pytest as _pytest
-
-    from deduplidog_spark.config import DedupConfig
-    from deduplidog_spark.streaming.incremental import bootstrap_append_state
-
-    tmp = tempfile.mkdtemp(prefix="snap_guard_")
-
-    def df(rows):
-        return spark.createDataFrame(
-            [(r, p, "c0", "py", c, None) for r, p, c in rows],
-            "repo string, path string, commit string, lang string, "
-            "content string, mtime timestamp",
-        )
-
-    base = df([("b", f"f{i}.py", f"unique words number {i} " * 10)
-               for i in range(4)])
-    cfg = DedupConfig(mode="minhash")
-
-    # dormant own-config DELTA chain (seed-only) → snapshot must refuse
-    root1 = os.path.join(tmp, "r1")
-    bootstrap_append_state(base, cfg, root1)
-    with _pytest.raises(ValueError, match="already holds state"):
-        bootstrap_append_state(base, cfg, root1, state_layout="snapshot")
-
-    # catalog-table chain at the root (no path trace) → snapshot with a
-    # PLAIN config must refuse via contents-without-s000000000
-    root2 = os.path.join(tmp, "r2")
-    cfg_tbl = DedupConfig(
-        mode="minhash",
-        checkpoint_table_prefix=f"sg{uuid.uuid4().hex[:8]}",
-        checkpoint_format="parquet",
-    )
-    bootstrap_append_state(base, cfg_tbl, root2)
-    with _pytest.raises(ValueError, match="already holds state"):
-        bootstrap_append_state(base, cfg, root2, state_layout="snapshot")
-
-    # legit snapshot re-bootstrap over its own root still works
-    root3 = os.path.join(tmp, "r3")
-    bootstrap_append_state(base, cfg, root3, state_layout="snapshot")
-    bootstrap_append_state(base, cfg, root3, state_layout="snapshot")
