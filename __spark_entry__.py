@@ -1582,7 +1582,7 @@ def q_incremental_pipeline(spark, sf_dir):
     cfg = DedupConfig(mode="minhash", jaccard_threshold=0.5, sig_est_threshold=0.35)
     base_raw = _docs_as_files(docs.filter(F.col("doc_id") % 2 == 0))
     batch_raw = _docs_as_files(docs.filter(F.col("doc_id") % 2 == 1))
-    state = state_from_result(dedupe(base_raw, cfg), base_raw, cfg)
+    state = state_from_result(dedupe(base_raw, cfg))
     res = incremental_dedupe(
         batch_raw,
         cfg,

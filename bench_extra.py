@@ -1,13 +1,10 @@
-"""Measurement-only harness (guide §1): per-stage timing of the
-headline dedup pipeline plus noop-sink isolation of individual queries.
+"""Measurement-only harness (guide §1): noop-sink isolation of
+individual queries and their formatted plans. Per-stage cost of the
+dedup pipeline comes from ``perfbench/layers.py`` (``perfbench/run.py
+--trace 1``), which runs the library stages themselves.
 
 This file is NOT part of the driver's frozen measurement; bench.py is.
 Numbers from here are cited in OPTIMIZATION_r06.md.
-
-Usage:
-    python bench_extra.py headline        # stage-by-stage headline profile
-    python bench_extra.py queries q1 q2   # noop-time named entry queries
-    python bench_extra.py explain q1      # print formatted plan for a query
 """
 
 from __future__ import annotations
@@ -20,7 +17,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-BENCH_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "200000"))
 
 
 def _mk_spark():
@@ -32,108 +28,6 @@ def _mk_spark():
         shuffle_partitions=CPUS,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-
-
-class T:
-    def __init__(self):
-        self.marks = []
-        self.t0 = time.time()
-        self.last = self.t0
-
-    def lap(self, name):
-        now = time.time()
-        self.marks.append((name, now - self.last))
-        self.last = now
-
-    def report(self):
-        total = self.last - self.t0
-        for name, dt in self.marks:
-            print(f"  {name:36s} {dt:7.2f}s  {100*dt/total:5.1f}%")
-        print(f"  {'TOTAL':36s} {total:7.2f}s")
-
-
-def profile_headline():
-    """Replicates pipeline.dedupe() barrier-for-barrier with timers.
-    Must be kept in sync with pipeline.py by hand (measurement only)."""
-    from pyspark.sql import functions as F
-
-    from deduplidog_spark.config import DedupConfig
-    from deduplidog_spark.ingest import ingest
-    from deduplidog_spark.operators import minhash as mh
-    from deduplidog_spark.operators.actions import action_plan, run_metrics
-    from deduplidog_spark.operators.candidates import lsh_candidate_pairs
-    from deduplidog_spark.operators.cluster import connected_components, elect_keepers
-    from deduplidog_spark.operators.exact import collapse_sha_reps, exact_dup_pairs
-    from deduplidog_spark.operators.verify import verify_candidate_pairs
-
-    spark = _mk_spark()
-    spark.sparkContext.setLogLevel("ERROR")
-    corpus_dir = os.path.join("/tmp", f"bench_corpus_{BENCH_ROWS}")
-    assert os.path.exists(corpus_dir), "run bench.py once to materialize corpus"
-    corpus = spark.read.parquet(corpus_dir)
-    # same warmup as bench.py
-    spark.range(10000).select(F.sha2(F.col("id").cast("string"), 256)).count()
-
-    cfg = DedupConfig(
-        mode="minhash", shingle_k=9, jaccard_threshold=0.6, sig_est_threshold=0.45
-    )
-    sc = spark.sparkContext
-    t = T()
-
-    from deduplidog_spark.operators.exact import (
-        exact_dup_pairs_from_groups,
-        sha_groups,
-    )
-
-    files_full = corpus
-    files_full = ingest(files_full, cfg).withColumn(
-        "fid", F.concat_ws("/", "repo", "path")
-    )
-    slim_cols = [c for c in files_full.columns if c != "content"]
-    contents = files_full.select("fid", "content")
-    banded = mh.banded_ingest_scan(corpus, cfg).withColumn(
-        "fid", F.concat_ws("/", "repo", "path")
-    )
-    sc.setJobDescription("stage: fused files+bands ckpt")
-    combined = banded.select(*slim_cols, "band_hashes").localCheckpoint()
-    files = combined.select(*slim_cols)
-    slim = combined.select("fid", "sha", "size", "n_lines", "band_hashes")
-    t.lap("fused ingest+signatures localCheckpoint")
-
-    sc.setJobDescription("stage: sha groups ckpt")
-    groups = sha_groups(files).localCheckpoint()
-    reps = slim.join(
-        groups.select(F.col("root").alias("fid")), "fid", "left_semi"
-    )
-    t.lap("sha-groups localCheckpoint")
-
-    band_rows = mh.explode_bands(reps)
-    pairs, dropped = lsh_candidate_pairs(
-        band_rows, cfg, materialize=lambda d: d.localCheckpoint()
-    )
-    t.lap("lsh buckets localCheckpoint (inside)")
-
-    sc.setJobDescription("stage: verify")
-    verified = verify_candidate_pairs(pairs, slim, cfg, contents=contents)
-    verified.select("id_a", "id_b").write.format("noop").mode("overwrite").save()
-    t.lap("verify noop (pairs+gates+jaccard)")
-
-    near = verified.select("id_a", "id_b")
-    exact = exact_dup_pairs_from_groups(files, groups)
-    edges = near.union(exact)
-
-    sc.setJobDescription("stage: cc")
-    labels = connected_components(edges, cfg.cc_max_iterations)
-    t.lap("connected components (all rounds)")
-
-    sc.setJobDescription("stage: keeper+plan")
-    clusters = elect_keepers(files, labels, cfg)
-    plan = action_plan(clusters, cfg)
-    n = plan.count()
-    t.lap("keeper election + plan count")
-    print(f"plan rows: {n}")
-    t.report()
-    spark.stop()
 
 
 def profile_queries(names):
@@ -172,13 +66,16 @@ def explain_query(name, out=None):
     spark.stop()
 
 
+USAGE = (
+    "usage: python bench_extra.py queries q1 [q2 ...]  # noop-time named entry queries\n"
+    "       python bench_extra.py explain q1 [out]     # formatted plan of a query"
+)
+
 if __name__ == "__main__":
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "headline"
-    if cmd == "headline":
-        profile_headline()
-    elif cmd == "queries":
+    cmd = sys.argv[1] if len(sys.argv) > 1 else None
+    if cmd == "queries":
         profile_queries(sys.argv[2:])
-    elif cmd == "explain":
+    elif cmd == "explain" and len(sys.argv) > 2:
         explain_query(sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else None)
     else:
-        raise SystemExit(f"unknown command {cmd}")
+        raise SystemExit(USAGE)

@@ -8,8 +8,9 @@ generalizes the reference's resume semantics (skip counter + "✓"
 markers, deduplidog/deduplidog.py:196-197,434-441,465-467) from
 "continue an interrupted scan" to "append a new batch to a finished
 run": the persisted stage tables of a prior `pipeline.dedupe` run
-(files / band table / cc labels, fingerprint-keyed under the
-checkpoint target) ARE the resumable state.
+(the scan table — files + band table — band reps and cc labels,
+fingerprint-keyed under the checkpoint target) ARE the resumable
+state.
 
 Cost model per batch (B = batch size, N = base size, B << N):
 - signatures are computed for the BATCH only (the Arrow-UDF stage the
@@ -37,21 +38,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduplidog_spark.config import DedupConfig
-from deduplidog_spark.ingest import ingest
 from deduplidog_spark.operators import minhash as mh
 from deduplidog_spark.operators import simhash as sh
 from deduplidog_spark.operators import substring as ss
 from deduplidog_spark.operators.actions import action_plan, run_metrics
 from deduplidog_spark.operators.candidates import _bucket_pairs
 from deduplidog_spark.operators.cluster import connected_components, elect_keepers
-from deduplidog_spark.operators.exact import collapse_sha_reps
+from deduplidog_spark.operators.exact import sha_groups, sha_representatives
 from deduplidog_spark.operators.verify import verify_candidate_pairs
-
-_BAND_STAGE = {
-    "minhash": "minhash_bands",
-    "simhash": "simhash_bands",
-    "substring": "winnow_bands",
-}
+from deduplidog_spark.pipeline import BAND_MODES, scan_tables, split_scan
 
 # ingest-time audit flags that may exist on one side of a base/batch
 # union only; nothing downstream of the union reads them. Any OTHER
@@ -113,7 +108,12 @@ def load_state(spark: SparkSession, cfg: DedupConfig) -> BaseState:
     target. The stage paths embed ``cfg.fingerprint()``, so the state
     loaded is guaranteed to have been produced under the SAME semantic
     config — a changed threshold or mode fails fast with a missing
-    path instead of silently mixing incompatible signatures."""
+    path instead of silently mixing incompatible signatures.
+
+    ``files`` and ``bands`` are projections of the one persisted
+    ``scan`` stage (``pipeline.split_scan``); a checkpoint target
+    written before the single-scan layout has no ``scan`` stage and
+    raises like any other missing stage."""
 
     def rd(stage: str) -> DataFrame:
         if cfg.checkpoint_table_prefix:
@@ -126,29 +126,11 @@ def load_state(spark: SparkSession, cfg: DedupConfig) -> BaseState:
             )
         raise ValueError("incremental dedup needs a checkpoint target in cfg")
 
-    bands = band_reps = None
-    if cfg.mode in _BAND_STAGE:
-        bands = rd(_BAND_STAGE[cfg.mode])
-        band_reps = rd("band_reps")
+    files, bands = split_scan(rd("scan"), cfg)
     return BaseState(
-        files=rd("files"), bands=bands, labels=rd("cc_labels"),
-        band_reps=band_reps,
+        files=files, bands=bands, labels=rd("cc_labels"),
+        band_reps=rd("band_reps") if bands is not None else None,
     )
-
-
-def _slim_bands(files_full: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Mode-specific slim band table for a batch — same columns as the
-    pipeline's checkpointed stage (pipeline.near_dup_edges)."""
-    if cfg.mode == "minhash":
-        sigs = mh.with_banded_signatures(files_full, cfg)
-        return sigs.select("fid", "sha", "size", "n_lines", "band_hashes")
-    if cfg.mode == "simhash":
-        sigs = sh.with_simhash_chunks(sh.with_simhash(files_full, cfg), cfg)
-        return sigs.select("fid", "sha", "size", "n_lines", "band_hashes", "simhash")
-    if cfg.mode == "substring":
-        fps = ss.with_fingerprints(files_full, cfg)
-        return fps.select("fid", "sha", "size", "n_lines", "band_hashes")
-    raise ValueError(f"_slim_bands: unsupported mode {cfg.mode!r}")
 
 
 def _explode(slim: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -246,32 +228,18 @@ def incremental_labels(
     return sub, updated
 
 
-def state_from_result(result, base_raw: DataFrame, cfg: DedupConfig) -> BaseState:
+def state_from_result(result) -> BaseState:
     """Build in-memory state from a completed ``pipeline.dedupe``
     result when no checkpoint target was configured (tests, notebook
     runs); production batches use ``load_state`` against the persisted
-    stages instead of recomputing base signatures here.
-
-    r6: the fused-scan pipeline hands back its MATERIALIZED band table
-    and rep table on the result (``DedupResult.bands``/``band_reps``),
-    so the common case reuses them directly — previously this rebuilt
-    the band table lazily from ``base_raw``, and every downstream
-    consumer of the state (the union verify table, the base rep
-    explode) re-paid the base signature UDF per reference."""
-    if cfg.mode in _BAND_STAGE and result.bands is not None:
-        return BaseState(
-            files=result.files,
-            bands=result.bands,
-            labels=result.clusters.select("fid", "component"),
-            band_reps=result.band_reps,
-        )
-    full = ingest(base_raw, cfg).withColumn("fid", F.concat_ws("/", "repo", "path"))
-    bands = _slim_bands(full, cfg) if cfg.mode in _BAND_STAGE else None
+    stages. The result carries the band table and rep table of its
+    materialized scan stage (``DedupResult.bands``/``band_reps``), so
+    no consumer of the state re-pays the base signature UDF."""
     return BaseState(
         files=result.files,
-        bands=bands,
+        bands=result.bands,
         labels=result.clusters.select("fid", "component"),
-        band_reps=collapse_sha_reps(bands) if bands is not None else None,
+        band_reps=result.band_reps,
     )
 
 
@@ -304,42 +272,24 @@ def incremental_dedupe(
             "versions.unchanged_across_commits' left-anti complement) "
             "and run with collapse_versions=False."
         )
-    new_full = ingest(new_raw, cfg).withColumn(
-        "fid", F.concat_ws("/", "repo", "path")
-    )
-    slim_cols = [c for c in new_full.columns if c != "content"]
-    comb = None
-    if cfg.mode == "minhash":
-        # fused batch scan (r6, mirrors pipeline.dedupe): ONE
-        # mapInPandas pass yields both the slim audit table and the
-        # band table as projections of a single materialization —
-        # previously new_files and new_slim were separate checkpoints,
-        # each pulling its own full ingest (+ signature) pass
-        comb = mh.banded_ingest_scan(new_raw, cfg).withColumn(
-            "fid", F.concat_ws("/", "repo", "path")
-        ).localCheckpoint(eager=False)
-        new_files = comb.select(*slim_cols)
-    else:
-        new_files = new_full.select(*slim_cols).localCheckpoint(eager=False)
+    # the batch's one scan (same helper as pipeline.dedupe): the slim
+    # audit table and, in a band mode, the band table are projections
+    # of a single lazy materialization — one ingest (+ signature) pass
+    new_full, scan = scan_tables(new_raw, cfg)
+    new_files, new_slim = split_scan(scan.localCheckpoint(eager=False), cfg)
 
     exact = incremental_exact_edges(new_files, state.files)
     dropped = None
-    new_slim = None
     reps = None
     if cfg.mode == "exact":
         edges = exact
-    elif cfg.mode in _BAND_STAGE:
+    elif cfg.mode in BAND_MODES:
         if cfg.exact_verify and base_contents is None:
             raise ValueError(
                 "exact_verify needs base_contents (fid, content) for "
                 "new-vs-base pairs; pass the base scan or set "
                 "exact_verify=False"
             )
-        new_slim = (
-            comb.select("fid", "sha", "size", "n_lines", "band_hashes")
-            if comb is not None
-            else _slim_bands(new_full, cfg).localCheckpoint(eager=False)
-        )
         # sha-collapse within the batch AND against the base: batch
         # copies of content the base already carries ride the exact
         # star edges; only genuinely new content enters LSH
@@ -353,9 +303,9 @@ def incremental_dedupe(
         fresh = new_slim.filter(F.col("sha").isNotNull()).join(
             F.broadcast(seen), "sha", "left_anti"
         )
-        reps = collapse_sha_reps(fresh)
+        reps = sha_representatives(fresh, sha_groups(fresh))
         # the BASE side must be sha-collapsed too, exactly like
-        # near_dup_edges does before banding: byte-identical base copies
+        # pipeline.dedupe does before banding: byte-identical base copies
         # share every band hash, so an uncollapsed boilerplate group
         # would both inflate bucket counts past max_bucket_size
         # (dropping buckets the full run keeps — breaking label
@@ -460,10 +410,6 @@ def _seed_marker_re():
 
         _SEED_MARKER_RE = re.compile(r"^_seed_g(\d+)_c(-?\d+)$")
     return _SEED_MARKER_RE
-
-
-_DELTA_STAGES = ("files", "minhash_bands", "simhash_bands", "winnow_bands",
-                 "band_reps", "cc_labels")
 
 
 class _PathDeltaStore:
@@ -719,8 +665,8 @@ def write_state_delta(
     the ``batch_id=-1`` partition of every stage."""
     store = _delta_store(spark, cfg, root)
     store.write(state.files, "files", batch_id)
-    if state.bands is not None and cfg.mode in _BAND_STAGE:
-        store.write(state.bands, _BAND_STAGE[cfg.mode], batch_id)
+    if state.bands is not None and cfg.mode in BAND_MODES:
+        store.write(state.bands, BAND_MODES[cfg.mode].stage, batch_id)
         store.write(state.band_reps, "band_reps", batch_id)
     store.write(state.labels, "cc_labels", batch_id)
 
@@ -734,13 +680,13 @@ def append_state_delta(
     delta. Nothing base-sized is read or written."""
     store = _delta_store(spark, cfg, root)
     store.write(result.new_files, "files", batch_id)
-    if cfg.mode in _BAND_STAGE:
+    if cfg.mode in BAND_MODES:
         if result.new_bands is None or result.new_band_reps is None:
             raise ValueError(
                 "append_state_delta needs new_bands/new_band_reps on the "
                 "result (produced by incremental_dedupe in a band mode)"
             )
-        store.write(result.new_bands, _BAND_STAGE[cfg.mode], batch_id)
+        store.write(result.new_bands, BAND_MODES[cfg.mode].stage, batch_id)
         store.write(result.new_band_reps, "band_reps", batch_id)
     if result.label_updates is None:
         raise ValueError("append_state_delta needs label_updates on the result")
@@ -778,8 +724,8 @@ def load_state_delta(
 
     files = rd("files", merge_schema=True).drop("batch_id")
     bands = band_reps = None
-    if cfg.mode in _BAND_STAGE:
-        bands = rd(_BAND_STAGE[cfg.mode]).drop("batch_id")
+    if cfg.mode in BAND_MODES:
+        bands = rd(BAND_MODES[cfg.mode].stage).drop("batch_id")
         band_reps = rd("band_reps").drop("batch_id")
     lab = rd("cc_labels")
     w = Window.partitionBy("fid").orderBy(F.col("batch_id").desc())
@@ -862,11 +808,9 @@ def compact_state_delta(
     store.add_marker(f"_seed_g{new_gen}_c{folded_to}")  # commit point
     # GC: everything the new seed supersedes — the old seed partition
     # and every folded batch — plus the old generation's marker
-    stages = [
-        s for s in _DELTA_STAGES
-        if s in ("files", "cc_labels", "band_reps")
-        or s == _BAND_STAGE.get(cfg.mode)
-    ]
+    stages = ["files", "band_reps", "cc_labels"]
+    if cfg.mode in BAND_MODES:
+        stages.append(BAND_MODES[cfg.mode].stage)
     for stage in stages:
         if not store.stage_exists(stage):
             continue

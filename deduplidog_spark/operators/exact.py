@@ -75,12 +75,11 @@ def exact_dup_pairs(files: DataFrame) -> DataFrame:
 
 
 def sha_groups(files: DataFrame) -> DataFrame:
-    """ONE aggregation serving both sha-collapse and exact-dup edges
-    (r6): (sha, root=min fid, n) over every row — including the NULL
-    sha group, whose winner row keeps ``collapse`` semantics identical
-    to ``collapse_sha_reps`` while the exact-edge join can never match
-    it (equality joins skip NULL keys). The pipeline previously ran
-    two independent full aggregations over the same (sha, fid) rows."""
+    """ONE aggregation serving both sha-collapse (``sha_representatives``)
+    and exact-dup edges (r6): (sha, root=min fid, n) over every row —
+    including the NULL sha group, whose root row is collapsed like any
+    other while the exact-edge join can never match it (equality joins
+    skip NULL keys)."""
     return files.groupBy("sha").agg(
         F.min(F.concat_ws("/", "repo", "path")).alias("root")
         if "fid" not in files.columns
@@ -102,12 +101,11 @@ def exact_dup_pairs_from_groups(files: DataFrame, groups: DataFrame) -> DataFram
     )
 
 
-def collapse_sha_reps(bands: DataFrame) -> DataFrame:
+def sha_representatives(bands: DataFrame, groups: DataFrame) -> DataFrame:
     """One representative row per distinct sha (min fid, deterministic —
-    SURVEY W5): the collapse that keeps byte-identical copies out of the
-    LSH stage. One kernel, shared by the batch pipeline's band_reps
-    stage, the incremental bootstrap/fallback, and diagnostics — rep
-    selection must agree everywhere or incremental appends would probe
-    different representatives than the full run persisted."""
-    winners = bands.groupBy("sha").agg(F.min("fid").alias("fid"))
-    return bands.join(winners, "fid", "left_semi")
+    SURVEY W5): the rows of ``bands`` whose fid is a ``sha_groups``
+    root. The collapse that keeps byte-identical copies out of the LSH
+    stage, shared by the full run and append batches — rep selection
+    must agree everywhere or incremental appends would probe different
+    representatives than the full run persisted."""
+    return bands.join(groups.select(F.col("root").alias("fid")), "fid", "left_semi")

@@ -2,17 +2,21 @@
 
 Dataflow (mode-dependent candidate stage, shared tail):
 
-    ingest → [exact sha groups] → representatives → signatures →
-    LSH band join → verify → edges (exact ∪ near) →
+    scan (ingest + signatures/bands, one pass) → sha groups →
+    representatives → LSH band join → verify → edges (exact ∪ near) →
     connected components → keeper election → action plan + metrics
 
 Design decisions that matter at 100 TB:
+- every run has ONE shape, durable or in-memory: the corpus is read,
+  hashed and signed in a single scan stage whose projections are the
+  slim audit table (`files`) and the slim band table; with a
+  checkpoint target that stage is persisted once (``scan``) and
+  resumes like every later stage (north_rule "resumable": band tables
+  + cluster state survive a restart);
 - byte-identical content is collapsed to one representative *before*
-  any signature work: the boilerplate skew group (one content in 5% of
-  rows) costs one sha aggregation, not 5%² of candidate pairs;
-- signatures are computed once, checkpointed when a checkpoint_dir is
-  set (north_rule "resumable": band tables + cluster state survive a
-  restart; re-running resumes from the parquet stage outputs);
+  any candidate work: the boilerplate skew group (one content in 5% of
+  rows) costs one sha aggregation, not 5%² of candidate pairs, and the
+  same aggregation yields the exact-dup star edges;
 - every stage is a DataFrame — `explain()` shows scan-pruned columns,
   one shuffle per groupBy/join, Arrow batches only at the two UDF
   stages (signatures, exact verify).
@@ -22,6 +26,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,10 +41,10 @@ from deduplidog_spark.operators.actions import action_plan, run_metrics
 from deduplidog_spark.operators.candidates import lsh_candidate_pairs
 from deduplidog_spark.operators.cluster import connected_components, elect_keepers
 from deduplidog_spark.operators.exact import (
-    collapse_sha_reps,
     exact_dup_pairs,
     exact_dup_pairs_from_groups,
     sha_groups,
+    sha_representatives,
 )
 from deduplidog_spark.operators.namedate import name_date_matches, pair_plan
 from deduplidog_spark.operators.verify import verify_candidate_pairs
@@ -53,12 +58,11 @@ class DedupResult:
     plan: DataFrame  # action-plan table
     metrics: DataFrame  # one-row counters
     dropped_buckets: DataFrame | None = None  # LSH skew-cap log
-    # the materialized slim band table + sha-collapsed reps from the
-    # fused single-scan path (r6): incremental.state_from_result reuses
-    # them so building append state off a completed in-session run
-    # never re-pays the signature UDF over the base corpus. None on the
-    # durable path (load_state reads the persisted stages instead) and
-    # for name/exact modes.
+    # the slim band table (a projection of the materialized scan
+    # stage) + its sha-collapsed reps: incremental.state_from_result
+    # reuses them so building append state off a completed in-session
+    # run never re-pays the signature UDF over the base corpus. Set on
+    # every band-mode run, durable or not; None in name/exact mode.
     bands: DataFrame | None = None
     band_reps: DataFrame | None = None
 
@@ -136,55 +140,77 @@ def _cc_materializer(cfg: DedupConfig):
     pins round state in executor storage, so a single executor loss
     late in a long chain would force the whole iteration over at
     cluster scale; a driver restart resumes from the completed round
-    tables (same fingerprint-keyed reuse semantics as ``files`` /
-    band stages). Without a target: None → localCheckpoint rounds."""
+    tables (same fingerprint-keyed reuse semantics as the ``scan``
+    stage). Without a target: None → localCheckpoint rounds."""
     if not (cfg.checkpoint_dir or cfg.checkpoint_table_prefix):
         return None
     return lambda df, tag: _ckpt(df, cfg, f"cc_{tag}")
 
 
-_SLIM_STAGE = {
-    "minhash": "minhash_bands",
-    "simhash": "simhash_bands",
-    "substring": "winnow_bands",
+class BandMode(NamedTuple):
+    stage: str  # delta-chain stage name of the slim band table
+    cols: tuple[str, ...]  # band columns the scan adds
+
+
+# the one mode table: the pipeline, the incremental path and the delta
+# chain all read it
+BAND_MODES = {
+    "minhash": BandMode("minhash_bands", ("band_hashes",)),
+    "simhash": BandMode("simhash_bands", ("band_hashes", "simhash")),
+    "substring": BandMode("winnow_bands", ("band_hashes",)),
 }
 
 
-def _banded(files_full: DataFrame, cfg: DedupConfig):
-    """Mode-specific banded projection: (df with band columns added,
-    [band column names])."""
+def scan_tables(raw: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
+    """The one scan of a run, shared by ``dedupe`` and
+    ``incremental.incremental_dedupe``: (files_full, scan).
+
+    ``files_full`` is the lazy ingest with fid and content, read only
+    where content is needed (verify, name matching). ``scan`` is its
+    content-free columns plus the mode's band columns (none in exact
+    and name mode) — the table a run materializes once; ``split_scan``
+    gives its `files` and band-table projections. In minhash mode the
+    scan is one mapInPandas pass: ingest stats + signatures + banding
+    in Python, path columns/filters as the shared JVM expressions on
+    top (see minhash.banded_ingest_scan)."""
+    files_full = _with_fid(ingest(raw, cfg))
+    slim_cols = [c for c in files_full.columns if c != "content"]
+    band_cols = BAND_MODES[cfg.mode].cols if cfg.mode in BAND_MODES else ()
     if cfg.mode == "minhash":
-        # fused signature+banding UDF: band values are bit-identical to
-        # the two-step with_band_hashes(with_signatures(...)) (pinned in
-        # tests) but only B longs per row cross the Python boundary
-        return mh.with_banded_signatures(files_full, cfg), ["band_hashes"]
-    if cfg.mode == "simhash":
-        return (
-            sh.with_simhash_chunks(sh.with_simhash(files_full, cfg), cfg),
-            ["band_hashes", "simhash"],
-        )
-    if cfg.mode == "substring":
-        return ss.with_fingerprints(files_full, cfg), ["band_hashes"]
-    raise ValueError(f"_banded: unsupported mode {cfg.mode!r}")
+        banded = _with_fid(mh.banded_ingest_scan(raw, cfg))
+    elif cfg.mode == "simhash":
+        banded = sh.with_simhash_chunks(sh.with_simhash(files_full, cfg), cfg)
+    elif cfg.mode == "substring":
+        banded = ss.with_fingerprints(files_full, cfg)
+    else:
+        banded = files_full
+    return files_full, banded.select(*slim_cols, *band_cols)
+
+
+def split_scan(scan: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame | None]:
+    """(files, bands): the slim audit table (band columns dropped) and,
+    in a band mode, the slim band table (fid, sha, size, n_lines, band
+    columns) — column projections of one scan table. bands is None in
+    exact and name mode."""
+    if cfg.mode not in BAND_MODES:
+        return scan, None
+    band_cols = BAND_MODES[cfg.mode].cols
+    return (
+        scan.drop(*band_cols),
+        scan.select("fid", "sha", "size", "n_lines", *band_cols),
+    )
 
 
 def near_dup_edges(
-    files: DataFrame,
-    cfg: DedupConfig,
-    slim: DataFrame | None = None,
-    reps: DataFrame | None = None,
+    files: DataFrame, cfg: DedupConfig, slim: DataFrame, reps: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate generation + verification for the selected near-dup
     mode. Returns (verified_pairs, dropped_buckets_report).
 
-    Only one representative per distinct sha enters the LSH stage; the
-    exact-dup star edges are unioned back in afterwards.
-
-    ``slim`` — optionally, the already-materialized slim band table
-    (fid, sha, size, n_lines, band cols); ``dedupe`` passes the
-    projection of its fused single-scan checkpoint so the corpus is
-    ingested+signed once, not once for the slim audit table and again
-    for the band table.
+    ``slim`` is the slim band table (``split_scan``) and ``reps`` its
+    one-row-per-distinct-sha representatives: only the reps enter the
+    LSH stage; the exact-dup star edges are unioned back in by the
+    caller. ``files`` supplies content for the exact verify.
     """
     # Shuffle-only-hashes design: signatures/bands are computed in the
     # scan stage (no shuffle carries content or even the full signature
@@ -204,33 +230,8 @@ def near_dup_edges(
         # materialization pull the chain once.
         return _ckpt(d, cfg, "lsh_buckets", reuse=False)
 
-    def _sha_reps(slim: DataFrame) -> DataFrame:
-        # one representative band row per distinct sha — persisted as
-        # its own stage so an incremental append batch probes base
-        # representatives directly instead of re-aggregating the whole
-        # base band table per batch (that re-collapse was a base-wide
-        # O(N) exchange every append; the reps are computed ONCE here).
-        # reuse=True: lsh_candidate_pairs consumes the exploded band
-        # rows TWICE (bucket-count pre-pass that builds the hot-bucket
-        # broadcast, then the pruned anti-join probe side) — left lazy,
-        # the collapse would re-execute per consumer.
-        return _ckpt(collapse_sha_reps(slim), cfg, "band_reps", reuse=True)
-
-    if cfg.mode not in _SLIM_STAGE:
+    if cfg.mode not in BAND_MODES:
         raise ValueError(f"near_dup_edges: unsupported mode {cfg.mode!r}")
-    if slim is None:
-        # band hashes (32 longs) replace the full signature in the
-        # materialized table — ~4× smaller; the exact-Jaccard stage is
-        # the precision gate, so the signature-agreement estimate adds
-        # nothing the bands + exact verify don't already give
-        banded, extra = _banded(files, cfg)
-        slim = _ckpt(
-            banded.select("fid", "sha", "size", "n_lines", *extra),
-            cfg,
-            _SLIM_STAGE[cfg.mode],
-        )
-    if reps is None:
-        reps = _sha_reps(slim)
     band_rows = (
         ss.explode_fingerprints(reps)
         if cfg.mode == "substring"
@@ -251,27 +252,19 @@ def dedupe(raw: DataFrame, cfg: DedupConfig) -> DedupResult:
     - 'name'     — name/size/date matcher (reference default)
     - 'minhash' / 'simhash' / 'substring' — near-dup LSH modes
     """
-    # Two views of the ingested table:
-    # - files_full: lazily re-derived from the scan; carries content,
-    #   consumed exactly once by the signature/verify path;
-    # - files: slim projection (no content) materialized once — it
-    #   feeds exact edges, keeper election, and metrics. Materializing
-    #   content here would double the pipeline's I/O volume: content is
-    #   ~95% of the bytes and memory/disk bandwidth is the shared
-    #   resource that does NOT scale with cores.
     if cfg.collapse_versions:
         # commit-axis pre-collapse: the signature pipeline only ever
         # sees the newest version per (repo, path) — on commit-snapshot
         # corpora this is the biggest reduction in the whole run. The
-        # collapsed snapshot is MATERIALIZED as a stage: files_full is
-        # consumed by several eager jobs (the slim `files` checkpoint,
-        # the signature path, the verify content re-read), and a lazy
-        # collapse would re-execute its content-bearing window exchange
-        # once per job. Writing the collapsed table instead costs one
-        # exchange + one write of the SURVIVORS (~input/versions-per-
-        # path — the collapse's own reduction pays for the write) and
-        # every downstream pass is then a plain scan, preserving the
-        # pipeline's content-never-crosses-a-shuffle posture. On input
+        # collapsed snapshot is MATERIALIZED as a stage: raw is
+        # consumed by several jobs (the scan stage, the verify content
+        # re-read), and a lazy collapse would re-execute its
+        # content-bearing window exchange once per job. Writing the
+        # collapsed table instead costs one exchange + one write of the
+        # SURVIVORS (~input/versions-per-path — the collapse's own
+        # reduction pays for the write) and every downstream pass is
+        # then a plain scan, preserving the pipeline's
+        # content-never-crosses-a-shuffle posture. On input
         # write-distributed by (repo, path) even that one exchange is
         # elided (see operators/versions.latest_versions). NOTE: state
         # written under collapse_versions=True is a different run
@@ -284,33 +277,19 @@ def dedupe(raw: DataFrame, cfg: DedupConfig) -> DedupResult:
             cfg,
             "collapsed",
         )
-    files_full = _with_fid(ingest(raw, cfg))
-    slim_cols = [c for c in files_full.columns if c != "content"]
-    durable = bool(cfg.checkpoint_dir or cfg.checkpoint_table_prefix)
-    slim = None
-    if cfg.mode in _SLIM_STAGE and not durable:
-        # FUSED single scan (r6): without a durable checkpoint target
-        # the slim audit table and the band table were each a separate
-        # localCheckpoint pulling its own full ingest pass (scan +
-        # sha256 + derived columns, plus the signature UDF on the band
-        # pass). One combined materialization computes everything in
-        # one pass over the corpus; `files` and the band-stage `slim`
-        # are column projections of the same in-memory RDD. Durable
-        # runs keep the two-stage layout — load_state/resume reads
-        # `files` and `<mode>_bands` as separate fingerprint-keyed
-        # stages, and there the extra pass buys restartability.
-        if cfg.mode == "minhash":
-            # single mapInPandas pass: ingest stats + signatures +
-            # banding in Python, path columns/filters as the shared
-            # JVM expressions on top (see minhash.banded_ingest_scan)
-            banded, extra = _with_fid(mh.banded_ingest_scan(raw, cfg)), ["band_hashes"]
-        else:
-            banded, extra = _banded(files_full, cfg)
-        combined = _ckpt(banded.select(*slim_cols, *extra), cfg, "files")
-        files = combined.select(*slim_cols)
-        slim = combined.select("fid", "sha", "size", "n_lines", *extra)
-    else:
-        files = _ckpt(files_full.select(*slim_cols), cfg, "files")
+    # Two views of the ingested table:
+    # - files_full: lazily re-derived from the raw scan; carries
+    #   content, consumed only by the verify content re-read (and the
+    #   name matcher);
+    # - scan: content-free ingest columns + band columns, materialized
+    #   ONCE — `files` (exact edges, keeper election, metrics) and the
+    #   slim band table are its column projections, so the corpus is
+    #   ingested and signed in one pass. Materializing content here
+    #   would double the pipeline's I/O volume: content is ~95% of the
+    #   bytes and memory/disk bandwidth is the shared resource that
+    #   does NOT scale with cores.
+    files_full, scan = scan_tables(raw, cfg)
+    files, slim = split_scan(_ckpt(scan, cfg, "scan"), cfg)
     reps = None
     dropped = None
 
@@ -354,29 +333,23 @@ def dedupe(raw: DataFrame, cfg: DedupConfig) -> DedupResult:
         metrics = run_metrics(plan, files)
         return DedupResult(files, edges, clusters, plan, metrics)
     else:
-        if slim is not None:
-            # fused path (r6): ONE sha aggregation serves both the rep
-            # collapse and the exact-dup star edges — they previously
-            # each ran a full groupBy over the same (sha, fid) rows.
-            # The group table broadcasts (AQE), so the rep semi-join
-            # and the edge join are map-side over the in-memory
-            # combined checkpoint.
-            groups = _ckpt(sha_groups(files), cfg, "sha_groups", reuse=True)
-            reps = slim.join(
-                groups.select(F.col("root").alias("fid")), "fid", "left_semi"
-            )
-            near, dropped = near_dup_edges(files_full, cfg, slim=slim, reps=reps)
-            exact = exact_dup_pairs_from_groups(files, groups)
-        else:
-            near, dropped = near_dup_edges(files_full, cfg, slim=slim, reps=reps)
-            exact = exact_dup_pairs(files)
+        # ONE sha aggregation serves both the rep collapse and the
+        # exact-dup star edges (r6). The group table broadcasts (AQE),
+        # so the rep semi-join and the edge join are map-side over the
+        # scan stage. The reps are their own stage: a durable run
+        # persists them for incremental.load_state (append batches
+        # probe base representatives without re-aggregating the base
+        # band table); in memory they stay lazy.
+        groups = _ckpt(sha_groups(files), cfg, "sha_groups", reuse=True)
+        reps = _ckpt(sha_representatives(slim, groups), cfg, "band_reps", reuse=False)
+        near, dropped = near_dup_edges(files_full, cfg, slim, reps)
         # plain union, no dedup shuffle: the two edge sets are disjoint
         # by construction (exact stars connect fids SHARING a sha; near
         # edges connect sha REPRESENTATIVES, one per distinct sha, so
         # both endpoints differ in sha) and each side is internally
         # duplicate-free (near: candidate pairs are dropDuplicates'd;
         # exact: one row per member fid)
-        edges = near.union(exact)
+        edges = near.union(exact_dup_pairs_from_groups(files, groups))
 
     # edges feed only connected_components (which materializes its own
     # undirected edge list), labels feed only the keeper window, the

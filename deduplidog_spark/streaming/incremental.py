@@ -318,12 +318,16 @@ def bootstrap_append_state(
             f"state_root {root} already holds state {sorted(stale)} — "
             "delete the old chain (or pick a fresh root) before re-bootstrapping"
         )
+    # a durable scratch run, so a crashed bootstrap resumes from its
+    # completed stages; it pays ONE scan (signatures included) over
+    # the base, persisted as the ``scan`` stage
     seed_dir = f"{root}/_bootstrap"
     cfg0 = cfg.with_(checkpoint_dir=seed_dir, checkpoint_table_prefix=None)
     res = dedupe(base_raw, cfg0)
     res.plan.count()  # force every stage write
     # re-key the bootstrap stages into the delta layout (lazy reads of
-    # the just-written stages — no recompute), then drop the scratch dir
+    # the just-written stages — load_state projects files and bands
+    # from the scan stage, no recompute), then drop the scratch dir
     write_state_delta(spark, load_state(spark, cfg0), cfg, root, batch_id=-1)
     _fs_delete(spark, seed_dir)
     # batch_id=-1 subdir: keeps the contents location a uniform

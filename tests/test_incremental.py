@@ -18,6 +18,7 @@ from deduplidog_spark.incremental import (
     incremental_dedupe,
     load_state,
     load_state_delta,
+    state_from_result,
     write_state_delta,
 )
 from deduplidog_spark.pipeline import dedupe
@@ -309,6 +310,44 @@ def test_incremental_other_modes_equal_full(spark, mode):
     ful = {r.fid: r.component for r in full.clusters.select("fid", "component").collect()}
     assert inc == ful
     assert inc, "non-trivial clustering expected"
+
+
+def _mode_cfg(tmp, mode):
+    kw = dict(mode=mode, checkpoint_dir=tmp)
+    if mode == "simhash":
+        kw.update(simhash_max_hamming=8, jaccard_threshold=0.25,
+                  sig_est_threshold=0.0, size_ratio_prefilter=0.4)
+    elif mode == "substring":
+        kw.update(fingerprint_k=16, fingerprint_window=8)
+    else:
+        return _cfg(tmp)
+    return DedupConfig(**kw)
+
+
+@pytest.mark.parametrize("mode", ["minhash", "simhash", "substring"])
+def test_durable_and_in_memory_dedupe_agree(spark, mode):
+    """Durable and in-memory runs take one pipeline shape: the same
+    plan, and the state load_state reads back from the persisted
+    stages equals the state state_from_result takes off the in-memory
+    result, row for row."""
+    raw = _df(spark, BASE_ROWS + BATCH_ROWS)
+    cfg = _mode_cfg(tempfile.mkdtemp(prefix=f"eq_{mode}_"), mode)
+    durable = dedupe(raw, cfg)
+    in_memory = dedupe(raw, cfg.with_(checkpoint_dir=None))
+
+    def rows(df, cols):
+        return sorted(repr(tuple(r)) for r in df.select(*cols).collect())
+
+    plan_cols = sorted(in_memory.plan.columns)
+    assert rows(durable.plan, plan_cols) == rows(in_memory.plan, plan_cols)
+    assert in_memory.plan.count() > 0, "non-trivial plan expected"
+    loaded = load_state(spark, cfg)
+    built = state_from_result(in_memory)
+    assert loaded.files.columns == built.files.columns
+    for part in ("files", "bands", "band_reps", "labels"):
+        a, b = getattr(loaded, part), getattr(built, part)
+        assert sorted(a.columns) == sorted(b.columns), part
+        assert rows(a, sorted(b.columns)) == rows(b, sorted(b.columns)), part
 
 
 def test_incremental_exact_mode(spark):

@@ -21,7 +21,12 @@ def test_lineage_recorded_per_stage(spark):
     assert os.path.exists(f"{run_dir}/_lineage")
     rep = lineage_report(spark, run_dir)
     rows = {r.stage: r for r in rep.collect()}
-    assert "files" in rows and "minhash_bands" in rows and "lsh_buckets" in rows
+    # one scan stage: files and bands are its projections
+    stages = ("scan", "sha_groups", "band_reps", "lsh_buckets", "edges", "cc_labels", "plan")
+    assert set(stages) <= set(rows)
+    assert "files" not in rows and "minhash_bands" not in rows
+    assert not os.path.exists(f"{run_dir}/files")
+    assert not os.path.exists(f"{run_dir}/minhash_bands")
     assert all(r.total_rows > 0 for r in rows.values())
     assert all(r.skew_ratio >= 1.0 for r in rows.values())
 
@@ -74,8 +79,10 @@ def test_catalog_table_checkpoint_and_lineage(spark):
         (r.fid, r.action_effective) for r in dedupe(df, cfg).plan.collect()
     )
     fp = cfg.fingerprint()
-    for stage in ("files", "minhash_bands", "lsh_buckets", "edges", "cc_labels", "plan"):
+    for stage in ("scan", "sha_groups", "band_reps", "lsh_buckets", "edges", "cc_labels", "plan"):
         assert spark.catalog.tableExists(f"ckpt_t1_{stage}_{fp}")
+    for stage in ("files", "minhash_bands"):
+        assert not spark.catalog.tableExists(f"ckpt_t1_{stage}_{fp}")
     # resume path: a second run reads the persisted stage tables and
     # reproduces the identical plan
     plan2 = sorted(
@@ -83,7 +90,7 @@ def test_catalog_table_checkpoint_and_lineage(spark):
     )
     assert plan1 == plan2
     rep = {r.stage: r for r in lineage_report_table(spark, "ckpt_t1").collect()}
-    assert "files" in rep and "lsh_buckets" in rep
+    assert "scan" in rep and "lsh_buckets" in rep
     assert all(r.total_rows > 0 for r in rep.values())
     # path and table checkpointing are mutually exclusive targets
     with pytest.raises(ValueError):
