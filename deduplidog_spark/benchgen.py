@@ -114,18 +114,3 @@ def near_truth_pairs(spark: SparkSession, n_rows: int, n_repos: int = 100) -> Da
     return ids.select(
         fid(F.col("id") - 1).alias("id_a"), fid(F.col("id")).alias("id_b")
     )
-
-
-def true_pair_count(n_rows: int) -> dict[str, int]:
-    """Ground-truth duplicate relations implied by the id arithmetic —
-    used for recall accounting in the bench."""
-    boiler = len(range(0, n_rows, 20))
-    exact_groups: dict[int, int] = {}
-    for i in range(1, n_rows, 20):
-        exact_groups[i // 100] = exact_groups.get(i // 100, 0) + 1
-    near = sum(1 for i in range(3, n_rows, 20) if i - 1 >= 0)
-    return {
-        "boiler_rows": boiler,
-        "exact_class_rows": sum(exact_groups.values()),
-        "near_pairs": near,
-    }

@@ -2,7 +2,8 @@
 
 Driver-local ``os`` calls only see the driver's disk; these work for
 every scheme the cluster mounts (hdfs://, s3a://, file:). Shared by the
-delta state layout (incremental.py) and the streaming append chain
+pipeline's stage checkpoints (pipeline.py), the delta state layout
+(incremental.py) and the streaming append chain
 (streaming/incremental.py).
 """
 
@@ -37,8 +38,3 @@ def fs_touch(spark, path: str) -> None:
     fs, p = _fs(spark, path)
     out = fs.create(p, True)
     out.close()
-
-
-def fs_exists(spark, path: str) -> bool:
-    fs, p = _fs(spark, path)
-    return bool(fs.exists(p))

@@ -51,13 +51,6 @@ def widen_small_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_files(spark, path: str) -> DataFrame:
-    """S1/S2: scan the corpus table (parquet here; Iceberg on a real
-    cluster — same DataFrame downstream). Column pruning + predicate
-    pushdown reach the scan because everything below is declarative."""
-    return spark.read.parquet(path)
-
-
 def _casefold_udf():
     """K5 exact mode: Python ``str.casefold`` (Unicode full case
     folding) as an Arrow-vectorized pandas UDF. ``F.lower`` is simple

@@ -26,19 +26,8 @@ def ws_tokens(text: Column) -> Column:
 
 
 def token_count(text: Column) -> Column:
-    """Whitespace token count (BPE-ish refinement in tokenize_bpe_ish)."""
+    """Whitespace token count (see ``ws_tokens``)."""
     return F.size(ws_tokens(text))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: words, numbers, and punctuation runs
-    counted separately (a cheap proxy for BPE token budgeting)."""
-    return F.size(
-        F.filter(
-            F.split(text, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda t: F.length(F.trim(t)) > 0,
-        )
-    )
 
 
 def stopword_hits(text: Column) -> Column:

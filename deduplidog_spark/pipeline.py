@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplidog_spark.config import DedupConfig
+from deduplidog_spark.fsutil import fs_list
 from deduplidog_spark.ingest import ingest
 from deduplidog_spark.metrics import record_lineage, record_lineage_table
 from deduplidog_spark.operators import minhash as mh
@@ -65,16 +66,6 @@ class DedupResult:
     # every band-mode run, durable or not; None in name/exact mode.
     bands: DataFrame | None = None
     band_reps: DataFrame | None = None
-
-
-def _fs_exists(spark, path: str) -> bool:
-    """Marker check through the Hadoop FS API so resume works for any
-    scheme the cluster mounts (hdfs://, s3a://, file:) — ``os.path``
-    only sees the driver's local disk."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
 
 
 def _ckpt(df: DataFrame, cfg: DedupConfig, stage: str, reuse: bool = True) -> DataFrame:
@@ -116,9 +107,11 @@ def _ckpt(df: DataFrame, cfg: DedupConfig, stage: str, reuse: bool = True) -> Da
     if cfg.checkpoint_dir:
         run_dir = cfg.checkpoint_dir.rstrip("/") + "/" + cfg.fingerprint()
         path = run_dir + "/" + stage
-        marker = path + "/_SUCCESS"
         spark = df.sparkSession
-        if not _fs_exists(spark, marker):
+        # marker check through the Hadoop FS API, so resume works for
+        # any scheme the cluster mounts (``os.path`` sees only the
+        # driver's local disk)
+        if "_SUCCESS" not in fs_list(spark, path):
             df.write.mode("overwrite").parquet(path)
             out = spark.read.parquet(path)
             record_lineage(out, run_dir, stage)  # north_rule

@@ -9,9 +9,9 @@ connector jars:
   parquet otherwise (same DataFrame downstream).
 - S1-at-FS ``read_binary_tree`` — ``binaryFile`` source for raw
   directory trees (the reference's rglob, deduplidog.py:282-283).
-- S4 ``read_takeout_sidecars`` — JSON sidecar join
-  (utils.py:196-205): timestamp metadata keyed by truncated filename.
-- S5/S6 ``append_changes`` — the changes/log sink (append-only).
+- S4 ``read_takeout_sidecars`` + ``join_sidecar_time_sets`` — JSON
+  sidecar join (utils.py:196-205): timestamp sets keyed by truncated
+  filename.
 """
 
 from __future__ import annotations
@@ -68,15 +68,6 @@ def read_takeout_sidecars(
     )
 
 
-def join_sidecar_times(files: DataFrame, sidecars: DataFrame, key_chars: int = 46) -> DataFrame:
-    """Attach sidecar timestamps to files by truncated-stem key — the
-    aux-timestamp column feeding the V6 time-proximity predicate."""
-    keyed = files.withColumn(
-        "sidecar_key", F.substring(F.element_at(F.split("path", "/"), -1), 1, key_chars)
-    )
-    return keyed.join(F.broadcast(sidecars), "sidecar_key", "left").drop("sidecar_key")
-
-
 def join_sidecar_time_sets(
     files: DataFrame, sidecars: DataFrame, key_chars: int = 46
 ) -> DataFrame:
@@ -114,16 +105,3 @@ def time_set_proximity(ts_col, aux_col, seconds: float):
         lambda acc, t: acc
         | (F.abs(own - t.cast("timestamp").cast("double")) <= F.lit(float(seconds))),
     )
-
-
-def append_changes(plan: DataFrame, location: str) -> None:
-    """S5/S6: append the action-plan/changes table (the audit log the
-    reference prints, deduplidog.py:777-802). Iceberg table name or
-    parquet path."""
-    if "/" not in location:
-        try:
-            plan.writeTo(location).append()
-            return
-        except Exception:
-            pass
-    plan.write.mode("append").parquet(location)

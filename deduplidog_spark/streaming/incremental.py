@@ -1,14 +1,15 @@
-"""Incremental (streaming) dedup — beyond the reference's batch scans.
+"""Continuous ingest as chained appends against durable state.
 
 The reference has no streaming concepts (SURVEY §2.12); its "resume" is
-a positional skip counter. For a corpus that grows continuously, the
-Spark-native shape is Structured Streaming: new file rows arrive as a
-stream, exact duplicates are flagged against the stream's own history
-via ``dropDuplicates`` state, and near-dup signatures are emitted to a
-signature sink that a periodic batch job LSH-joins (stream-stream LSH
-self-join would need unbounded state; the standard production split is
-streaming signature extraction + micro-batch candidate join via
-``foreachBatch``).
+a positional skip counter. Here a growing corpus is a Structured
+Streaming source (``read_file_stream``: each new parquet file is a
+micro-batch of corpus rows), and ``streaming_append_dedupe`` runs every
+micro-batch through ``foreachBatch`` as one ``process_append_batch``:
+an incremental dedupe of the batch against the delta chain that
+``bootstrap_append_state`` seeded, then a batch-keyed append of its
+state, plan and contents. Nothing is evicted, so batch k's labels equal
+a full recompute over base ∪ batches 0..k. Batch/CLI callers drive the
+same ``process_append_batch`` with ids from ``next_delta_batch_id``.
 """
 
 from __future__ import annotations
@@ -24,193 +25,12 @@ from deduplidog_spark.config import DedupConfig
 # with the delta state layout in deduplidog_spark/incremental.py
 from deduplidog_spark.fsutil import fs_delete as _fs_delete
 from deduplidog_spark.fsutil import fs_list as _fs_list
-from deduplidog_spark.operators import minhash as mh
 
 
 def read_file_stream(spark, path: str, schema) -> DataFrame:
     """S1 as a stream: each new parquet file under ``path`` is a
     micro-batch of corpus rows."""
     return spark.readStream.schema(schema).parquet(path)
-
-
-def streaming_exact_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Exact-dup suppression on the stream: keep the first row per
-    content sha; later identical rows arriving within the watermark
-    window are dropped by the state store.
-
-    ``dropDuplicatesWithinWatermark`` (not plain ``dropDuplicates``) is
-    load-bearing: with a dedup subset that excludes the event-time
-    column, ``dropDuplicates`` never purges its state even under a
-    watermark — at corpus scale (1e12 rows) that is unbounded state and
-    an executor OOM. WithinWatermark evicts each sha's state once the
-    watermark passes its first-seen event time + delay, bounding state
-    to the duplicate-arrival horizon, like the reference's tombstone
-    set bounds its dict (deduplidog.py:224). The trade: a duplicate
-    arriving AFTER the horizon re-emits — the periodic batch LSH/exact
-    join over the signature sink (run_incremental) catches those.
-    """
-    return (
-        stream.withColumn("sha", F.sha2(F.col("content"), 256))
-        .withWatermark("mtime", watermark)
-        .dropDuplicatesWithinWatermark(["sha"])
-    )
-
-
-def streaming_signatures(stream: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Arrow-UDF MinHash signatures on the stream — the stateless part
-    of the near-dup pipeline runs unchanged on streaming DataFrames."""
-    sigs = mh.with_band_hashes(
-        mh.with_signatures(
-            stream.withColumn("sha", F.sha2(F.col("content"), 256)).withColumn(
-                "fid", F.concat_ws("/", "repo", "path")
-            ),
-            cfg,
-        ),
-        cfg,
-    )
-    return sigs.select("fid", "sha", F.octet_length("content").alias("size"), "band_hashes")
-
-
-def streaming_band_rows(stream: DataFrame, cfg: DedupConfig, watermark: str = "1 hour") -> DataFrame:
-    """Exploded (band_id, band_hash, fid, mtime) rows on the stream —
-    the streaming half of LSH candidate generation."""
-    sigs = mh.with_band_hashes(
-        mh.with_signatures(
-            stream.withColumn("fid", F.concat_ws("/", "repo", "path")), cfg
-        ),
-        cfg,
-    ).withWatermark("mtime", watermark)
-    return sigs.select(
-        "fid",
-        "mtime",
-        F.posexplode("band_hashes").alias("band_id", "band_hash"),
-    )
-
-
-def streaming_candidate_pairs(
-    stream: DataFrame,
-    cfg: DedupConfig,
-    watermark: str = "1 hour",
-    horizon_ms: int = 3_600_000,
-):
-    """Custom stateful operator (applyInPandasWithState): incremental
-    LSH candidate pairs. Each (band_id, band_hash) bucket keeps the
-    fids seen so far as group state; a new arrival emits (old × new)
-    candidate pairs immediately — the streaming counterpart of
-    ``candidates.lsh_candidate_pairs``.
-
-    State is bounded on BOTH axes the batch path guards:
-    - time: EventTimeTimeout — a bucket idle past the watermark +
-      ``horizon_ms`` is evicted, so state size follows the arrival
-      horizon, not corpus age (pairs against evicted history come from
-      the periodic batch join over the signature sink, run_incremental);
-    - skew: buckets that exceed ``cfg.max_bucket_size`` stop emitting
-      and stop growing (saturation sentinel), exactly like the batch
-      bucket cap — a hot boilerplate bucket cannot go O(h²) in a
-      micro-batch.
-
-    Emitted pairs are per-band; band-duplicate pairs are expected (LSH
-    semantics) and deduplicated downstream like the batch path does.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    cap = cfg.max_bucket_size
-    band_rows = streaming_band_rows(stream, cfg, watermark)
-
-    def gen_pairs(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame({"id_a": [], "id_b": []})
-            return
-        (known,) = state.get if state.exists else ([],)
-        known = list(known)
-        saturated = len(known) > cap
-        out_a, out_b = [], []
-        max_event_ms = 0
-        for pdf in pdfs:
-            if len(pdf):
-                # timeout must anchor on event time: on the FIRST batch
-                # the watermark is still 0, and horizon-from-zero would
-                # evict everything as soon as real event times arrive
-                max_event_ms = max(
-                    max_event_ms, int(pdf["mtime"].max().timestamp() * 1000)
-                )
-            for fid in pdf["fid"]:
-                if saturated:
-                    continue
-                for old in known:
-                    if old != fid:
-                        a, b = (old, fid) if old < fid else (fid, old)
-                        out_a.append(a)
-                        out_b.append(b)
-                known.append(fid)
-                if len(known) > cap:
-                    saturated = True
-        state.update((known[: cap + 1],))
-        base = max(state.getCurrentWatermarkMs(), max_event_ms)
-        state.setTimeoutTimestamp(base + horizon_ms)
-        yield pd.DataFrame({"id_a": out_a, "id_b": out_b})
-
-    return band_rows.groupBy("band_id", "band_hash").applyInPandasWithState(
-        gen_pairs,
-        outputStructType="id_a string, id_b string",
-        stateStructType="fids array<string>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def streaming_ingest_metrics(
-    stream: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Windowed run metrics on the ingest stream — A3's counters
-    (`actions.run_metrics`) as a stream: per event-time window, file
-    count, byte volume and distinct-repo cardinality. Watermark +
-    window aggregation is the canonical late-data shape: a row later
-    than the watermark is dropped instead of reopening its closed
-    window, so aggregation state is bounded by the horizon — at 1e12
-    rows/day the state store holds hours, not history."""
-    return (
-        stream.withWatermark("mtime", watermark)
-        .groupBy(F.window("mtime", window))
-        .agg(
-            F.count("*").alias("n_files"),
-            F.sum(F.octet_length("content")).alias("n_bytes"),
-            F.approx_count_distinct("repo").alias("n_repos"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "n_files",
-            "n_bytes",
-            "n_repos",
-        )
-    )
-
-
-def run_incremental(
-    stream: DataFrame,
-    cfg: DedupConfig,
-    signature_sink: str,
-    checkpoint: str,
-    trigger_seconds: int = 30,
-):
-    """Wire the streaming half: signatures append to ``signature_sink``
-    (parquet/Iceberg); a periodic batch job runs the LSH join + CC over
-    the accumulated signature table (operators/candidates.py) — append-
-    only signatures make that join incremental: only (new × all) band
-    matches need processing per batch."""
-    sigs = streaming_signatures(stream, cfg)
-    return (
-        sigs.writeStream.format("parquet")
-        .option("path", signature_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
 
 
 # --- continuous append: per-micro-batch incremental dedupe ---------------

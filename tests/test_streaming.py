@@ -1,199 +1,13 @@
-"""Structured Streaming smoke: streaming exact dedup + signature
-extraction over a file stream (memory sink, processAllAvailable)."""
+"""Continuous append path: ``streaming_append_dedupe`` (foreachBatch
+over the delta chain) and the ``process_append_batch`` /
+``next_delta_batch_id`` / ``compact_append_chain`` entry points it
+shares with batch callers — bootstrap guards, replay, rewind and
+compaction safety."""
 
 import os
 import tempfile
 
-from deduplidog_spark import DedupConfig
 from deduplidog_spark import fixtures as FX
-from deduplidog_spark.streaming.incremental import (
-    read_file_stream,
-    streaming_exact_dedup,
-    streaming_signatures,
-)
-
-
-def test_streaming_exact_dedup_drops_later_copies(spark):
-    tmp = tempfile.mkdtemp()
-    src = os.path.join(tmp, "in")
-    FX.to_spark_df(spark, FX.corpus_b_rows()).write.parquet(src)
-
-    stream = read_file_stream(spark, src, FX.FILES_SCHEMA)
-    deduped = streaming_exact_dedup(stream)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT sha, count(*) AS n FROM dedup_out GROUP BY sha").collect()
-    assert out, "stream produced rows"
-    assert all(r.n == 1 for r in out), "one survivor per content sha"
-
-
-def _row(path, content, mtime):
-    return dict(
-        repo="s", path=path, commit="c0", lang="txt",
-        content=content, mtime=mtime, is_symlink=False,
-    )
-
-
-def test_streaming_state_evicted_beyond_watermark(spark):
-    """dropDuplicatesWithinWatermark semantics: duplicates inside the
-    watermark horizon are dropped; once the watermark passes a key's
-    first-seen time + delay the state is EVICTED, so a later duplicate
-    re-emits — the observable proof that state is bounded (the round-1
-    dropDuplicates version kept state forever)."""
-    from datetime import datetime
-
-    tmp = tempfile.mkdtemp()
-    src = os.path.join(tmp, "in")
-    out = os.path.join(tmp, "out")
-    ckpt = os.path.join(tmp, "ckpt")
-
-    def run_cycle(rows):
-        FX.to_spark_df(spark, rows).write.mode("append").parquet(src)
-        stream = read_file_stream(spark, src, FX.FILES_SCHEMA)
-        q = (
-            streaming_exact_dedup(stream, watermark="1 hour")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    t = lambda h, m: datetime(2026, 1, 1, h, m)  # noqa: E731
-    # cycle 1: first A emits, same-batch duplicate dropped
-    run_cycle([_row("a1.txt", "dupX", t(10, 0)), _row("a2.txt", "dupX", t(10, 5))])
-    # cycle 2: in-horizon duplicate dropped (state alive), B advances
-    # the watermark to 12:00, evicting A's state (10:00 + 1h < 12:00)
-    run_cycle([_row("a3.txt", "dupX", t(10, 30)), _row("b.txt", "uniq", t(13, 0))])
-    # cycle 3: post-eviction duplicate re-emits
-    run_cycle([_row("a4.txt", "dupX", t(12, 30))])
-
-    got = {
-        r.content: r.n
-        for r in spark.read.parquet(out).groupBy("content").count()
-        .withColumnRenamed("count", "n").collect()
-    }
-    assert got == {"dupX": 2, "uniq": 1}, got
-
-
-def test_streaming_candidate_pairs_stateful(spark):
-    """applyInPandasWithState LSH buckets: a new arrival pairs with the
-    bucket's remembered members across micro-batches; once the
-    watermark passes the bucket's horizon the state is evicted and a
-    much-later lookalike emits no pairs (bounded state — the batch
-    join over the signature sink owns cross-horizon pairs)."""
-    from datetime import datetime
-
-    from deduplidog_spark.streaming.incremental import streaming_candidate_pairs
-
-    tmp = tempfile.mkdtemp()
-    src, out, ckpt = (os.path.join(tmp, d) for d in ("in", "out", "ck"))
-    text = "def shared_function(): return compute(alpha, beta, gamma) # common"
-    t = lambda h: datetime(2026, 1, 1, h, 0)  # noqa: E731
-
-    def cycle(rows):
-        FX.to_spark_df(spark, rows).write.mode("append").parquet(src)
-        stream = read_file_stream(spark, src, FX.FILES_SCHEMA)
-        q = (
-            streaming_candidate_pairs(
-                stream, DedupConfig(mode="minhash"), watermark="1 hour",
-                horizon_ms=3_600_000,
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def row(repo, path, hours, content=text):
-        return dict(repo=repo, path=path, commit="c0", lang="py",
-                    content=content, mtime=t(hours), is_symlink=False)
-
-    cycle([row("r1", "a.py", 10)])   # first member: no pairs
-    cycle([row("r2", "b.py", 10)])   # pairs with remembered a.py
-    # two watermark-pusher batches with unrelated content: the first
-    # advances the watermark past the a/b bucket's horizon (10:00+1h),
-    # the second is the no-new-data batch in which that bucket's
-    # timeout actually fires and its state is removed
-    cycle([row("rx", "far1.py", 20, "totally unrelated content one xxxxxx")])
-    cycle([row("ry", "far2.py", 21, "entirely different content two yyyy")])
-    # post-eviction lookalike: lands in the same bucket key but the
-    # remembered members are gone → no pairs against a/b
-    cycle([row("r3", "c.py", 21)])
-    got = {
-        (r.id_a, r.id_b)
-        for r in spark.read.parquet(out).dropDuplicates(["id_a", "id_b"]).collect()
-    }
-    assert ("r1/a.py", "r2/b.py") in got
-    assert not any("c.py" in a or "c.py" in b for a, b in got), got
-
-
-def test_streaming_signatures_schema(spark):
-    tmp = tempfile.mkdtemp()
-    src = os.path.join(tmp, "in")
-    FX.to_spark_df(spark, FX.corpus_b_rows()).write.parquet(src)
-    stream = read_file_stream(spark, src, FX.FILES_SCHEMA)
-    sigs = streaming_signatures(stream, DedupConfig(mode="minhash"))
-    q = (
-        sigs.writeStream.format("memory")
-        .queryName("sig_out")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt2"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM sig_out").collect()
-    assert len(rows) == len(FX.corpus_b_rows())
-    assert all(len(r.band_hashes) == 32 for r in rows)
-
-
-def test_streaming_windowed_metrics(spark):
-    """Watermark + window aggregation (A3 counters as a stream): rows
-    land in their event-time window with correct counts and byte
-    volumes."""
-    from datetime import datetime
-
-    from deduplidog_spark.streaming.incremental import streaming_ingest_metrics
-
-    tmp = tempfile.mkdtemp()
-    src = os.path.join(tmp, "in")
-    rows = [
-        _row("w1_a.txt", "aaaa", datetime(2026, 1, 1, 10, 1)),
-        _row("w1_b.txt", "bbbbbb", datetime(2026, 1, 1, 10, 7)),
-        _row("w2_a.txt", "cc", datetime(2026, 1, 1, 10, 14)),
-    ]
-    import deduplidog_spark.fixtures as FX2
-
-    FX2.to_spark_df(spark, rows).write.parquet(src)
-    stream = read_file_stream(spark, src, FX.FILES_SCHEMA)
-    agg = streaming_ingest_metrics(stream, window="10 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_metrics")
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = {r.window_start.minute: r for r in spark.sql("SELECT * FROM win_metrics").collect()}
-    assert set(out) == {0, 10}
-    assert out[0].n_files == 2 and out[0].n_bytes == 10
-    assert out[10].n_files == 1 and out[10].n_bytes == 2
-    assert out[0].n_repos == 1
 
 
 def test_streaming_append_delta_layout_o_batch_writes(spark):
