@@ -114,6 +114,9 @@ class DedupConfig:
     # key on sha/fid (uniform by construction) and LSH skew is handled
     # by sha-collapse + max_bucket_size + AQE; `candidates.salt_column`
     # is the helper for user aggregations over genuinely hot keys.
+    # round cap of the full-run hash-min CC (cluster.connected_components,
+    # which raises when it is exhausted); append batches resolve their
+    # contracted graph by union-find, which has no round cap
     cc_max_iterations: int = 20
 
     def __post_init__(self) -> None:

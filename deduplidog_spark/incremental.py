@@ -21,13 +21,23 @@ Cost model per batch (B = batch size, N = base size, B << N):
   ``band_reps`` stage (written once by the full run, rolled forward
   append-only by ``append_state_delta``) — no per-batch base-wide
   re-aggregation;
-- exact-dup probing broadcasts the batch's distinct shas the same way;
-- connected components run on the TOUCHED subgraph only: new edges
-  plus star edges of base components adjacent to them (components can
-  merge when a batch doc bridges two of them — handled, tested);
+- ONE base sha probe (``base_sha_probe``: the batch's distinct shas
+  broadcast against the base files) feeds both the exact star edges
+  and the sha collapse's anti-join — no base sha set is aggregated or
+  broadcast;
+- connected components run on the batch's edges CONTRACTED to base
+  components (``incremental_labels``): at most B edges whatever the
+  size of the components they touch, resolved by union-find in one
+  task (components can merge when a batch doc bridges two of them —
+  handled, tested); members of touched components relabel through
+  the broadcast node → root map, and keepers are elected among the
+  affected fids only;
 - untouched base labels pass through via an anti-join.
-So per-batch work is O(B) signature compute + O(N) map-side scans with
-no base shuffle — not O(N) shuffles like a full recompute.
+So per-batch work is O(B) signature compute + O(N) map-side scans.
+Two base-wide shuffles are left: the label view's latest-batch-wins
+collapse, evaluated once per batch to find the touched components'
+members, and verify's content semi-join against the pair ids — not
+O(N) shuffles per stage like a full recompute.
 """
 
 from __future__ import annotations
@@ -43,7 +53,7 @@ from deduplidog_spark.operators import simhash as sh
 from deduplidog_spark.operators import substring as ss
 from deduplidog_spark.operators.actions import action_plan, run_metrics
 from deduplidog_spark.operators.candidates import _bucket_pairs
-from deduplidog_spark.operators.cluster import connected_components, elect_keepers
+from deduplidog_spark.operators.cluster import elect_keepers, union_find_components
 from deduplidog_spark.operators.exact import sha_groups, sha_representatives
 from deduplidog_spark.operators.verify import verify_candidate_pairs
 from deduplidog_spark.pipeline import BAND_MODES, scan_tables, split_scan
@@ -171,18 +181,43 @@ def incremental_candidate_pairs(
     return _bucket_pairs(members, cfg, lambda d: d)
 
 
-def incremental_exact_edges(
-    new_files: DataFrame, base_files: DataFrame
-) -> DataFrame:
-    """Exact-dup star edges for sha groups the batch touches: the
-    batch's distinct shas broadcast-semi-join the base (map-side), then
-    each member links to the group-min fid. Base-only groups are
-    untouched by construction."""
+def base_sha_probe(new_files: DataFrame, base_files: DataFrame) -> DataFrame:
+    """(sha, fid) of the base files sharing a sha with the batch — THE
+    one base sha probe of an append: the batch's distinct shas
+    broadcast-semi-join the base (map-side, no base shuffle). It feeds
+    both the exact star edges and the sha collapse's ``seen`` anti-join,
+    so no batch ever aggregates or broadcasts the base sha set."""
     shas = new_files.filter(F.col("sha").isNotNull()).select("sha").distinct()
-    base_members = base_files.filter(F.col("sha").isNotNull()).join(
+    return base_files.filter(F.col("sha").isNotNull()).join(
         F.broadcast(shas), "sha", "left_semi"
     ).select("sha", "fid")
-    members = base_members.union(
+
+
+def fresh_reps(new_slim: DataFrame, base_hits: DataFrame) -> DataFrame:
+    """One representative band row per sha the batch introduces: the
+    sha collapse within the batch AND against the base. Batch rows whose
+    sha the base already carries (``base_sha_probe``'s hits, broadcast
+    into an anti-join — never the base sha set) ride the exact star
+    edges instead; only genuinely new content enters LSH.
+
+    NULL-sha (quarantined) rows never match a left_anti key, so without
+    the filter EVERY batch would mint a fresh NULL-sha representative
+    and the band_reps log would accumulate one dead rep per append —
+    violating the one-rep-per-distinct-sha invariant (their band hashes
+    are NULL, so they contribute no band rows anyway)."""
+    fresh = new_slim.filter(F.col("sha").isNotNull()).join(
+        F.broadcast(base_hits.select("sha")), "sha", "left_anti"
+    )
+    return sha_representatives(fresh, sha_groups(fresh))
+
+
+def incremental_exact_edges(
+    new_files: DataFrame, base_hits: DataFrame
+) -> DataFrame:
+    """Exact-dup star edges for sha groups the batch touches: the base
+    members are ``base_sha_probe``'s hits, and each member links to the
+    group-min fid. Base-only groups are untouched by construction."""
+    members = base_hits.select("sha", "fid").union(
         new_files.filter(F.col("sha").isNotNull()).select("sha", "fid")
     )
     centers = members.groupBy("sha").agg(F.min("fid").alias("center"))
@@ -194,38 +229,63 @@ def incremental_exact_edges(
 
 
 def incremental_labels(
-    new_edges: DataFrame, base_labels: DataFrame, max_iterations: int = 20
+    new_edges: DataFrame, base_labels: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """(affected_labels, full_updated_labels).
 
-    Components are recomputed only for the subgraph the batch touches:
-    new edges ∪ star edges (member → component) of base components
-    adjacent to a new edge. Component ids stay min-member-fid — an old
-    component's id is its min fid and participates as a node, so two
-    old components merged by a batch bridge converge to the global min
-    exactly as a full recompute would (equivalence is tested)."""
-    touched = (
-        new_edges.select(F.col("id_a").alias("fid"))
-        .union(new_edges.select(F.col("id_b").alias("fid")))
-        .distinct()
+    Components are computed over the batch's graph CONTRACTED to base
+    components: each edge endpoint maps to its current base component,
+    or to itself when it has no label (a batch fid or a base
+    singleton), and contracted self-loops drop. The contracted graph
+    has at most one edge per batch edge however large the touched
+    components are, so ``union_find_components`` resolves it in one
+    task. Component ids stay min-member-fid: a base component's id is
+    its min fid and is the node standing for it, so components merged
+    by a batch bridge take the min over their parts exactly as a full
+    recompute would (equivalence is tested). Members of the touched
+    components relabel through the small broadcast node → root map;
+    the affected labels are those members plus the unlabelled
+    endpoints. The touched fids' components are probed with a
+    batch-keyed semi-join, so the label view is read base-wide once,
+    for the members."""
+    # the touched fids' base components: the edge endpoints (duplicates
+    # are harmless on a semi-join build side) broadcast against the
+    # label view, a probe pushed below its latest-batch-wins collapse
+    ends = new_edges.select(F.explode(F.array("id_a", "id_b")).alias("fid"))
+    owned = base_labels.join(F.broadcast(ends), "fid", "left_semi").localCheckpoint(
+        eager=False
     )
-    touched_comps = (
-        base_labels.join(touched, "fid", "left_semi").select("component").distinct()
+
+    def contract(end: str) -> DataFrame:
+        return F.broadcast(owned.select(
+            F.col("fid").alias(end), F.col("component").alias(f"{end}_node")
+        ))
+
+    contracted = (
+        new_edges.join(contract("id_a"), "id_a", "left")
+        .join(contract("id_b"), "id_b", "left")
+        .select(
+            F.coalesce("id_a_node", "id_a").alias("id_a"),
+            F.coalesce("id_b_node", "id_b").alias("id_b"),
+        )
     )
-    members = base_labels.join(F.broadcast(touched_comps), "component", "left_semi")
-    star = members.select(
-        F.col("component").alias("id_a"), F.col("fid").alias("id_b")
+    roots = F.broadcast(
+        union_find_components(contracted).select(
+            F.col("fid").alias("node"), F.col("component").alias("root")
+        )
     )
-    sub = connected_components(
-        # skip the edge dedup shuffle: duplicates are possible (an
-        # exact star edge (center, member) equals a subgraph star edge
-        # when a touched component's id is that sha group's center) but
-        # do not change the labels -- min-label propagation ignores
-        # edge multiplicity; they only ride along in per-round shuffles
-        new_edges.union(star), max_iterations, assume_unique_edges=True,
-    )
-    updated = base_labels.join(sub, "fid", "left_anti").unionByName(sub)
-    return sub, updated
+    members = base_labels.join(
+        roots, F.col("component") == F.col("node")
+    ).select("fid", F.col("root").alias("component"))
+    # a node that is no base component stands for an unlabelled fid
+    unlabelled = roots.join(
+        F.broadcast(owned.select(F.col("component").alias("node"))), "node", "left_anti"
+    ).select(F.col("node").alias("fid"), F.col("root").alias("component"))
+    # one materialization shared by keeper election, the label_updates
+    # write and the updated table
+    affected = members.unionByName(unlabelled).localCheckpoint(eager=False)
+    updated = base_labels.join(affected, "fid", "left_anti").unionByName(affected)
+    return affected, updated
 
 
 def state_from_result(result) -> BaseState:
@@ -278,7 +338,10 @@ def incremental_dedupe(
     new_full, scan = scan_tables(new_raw, cfg)
     new_files, new_slim = split_scan(scan.localCheckpoint(eager=False), cfg)
 
-    exact = incremental_exact_edges(new_files, state.files)
+    # the one base sha probe, materialized once for its two consumers:
+    # the exact star edges and, in a band mode, fresh_reps
+    base_hits = base_sha_probe(new_files, state.files).localCheckpoint(eager=False)
+    exact = incremental_exact_edges(new_files, base_hits)
     dropped = None
     reps = None
     if cfg.mode == "exact":
@@ -290,20 +353,9 @@ def incremental_dedupe(
                 "new-vs-base pairs; pass the base scan or set "
                 "exact_verify=False"
             )
-        # sha-collapse within the batch AND against the base: batch
-        # copies of content the base already carries ride the exact
-        # star edges; only genuinely new content enters LSH
-        seen = state.files.filter(F.col("sha").isNotNull()).select("sha").distinct()
-        # NULL-sha (quarantined) rows never match a left_anti key, so
-        # without this filter EVERY batch would mint a fresh NULL-sha
-        # representative and the band_reps log would accumulate one
-        # dead rep per append — violating the one-rep-per-distinct-sha
-        # invariant (their band_hashes are NULL, so they contribute no
-        # band rows anyway)
-        fresh = new_slim.filter(F.col("sha").isNotNull()).join(
-            F.broadcast(seen), "sha", "left_anti"
-        )
-        reps = sha_representatives(fresh, sha_groups(fresh))
+        # one materialization shared by the LSH explode below and the
+        # band_reps write of append_state_delta
+        reps = fresh_reps(new_slim, base_hits).localCheckpoint(eager=False)
         # the BASE side must be sha-collapsed too, exactly like
         # pipeline.dedupe does before banding: byte-identical base copies
         # share every band hash, so an uncollapsed boilerplate group
@@ -335,13 +387,18 @@ def incremental_dedupe(
     else:
         raise ValueError(f"incremental_dedupe: unsupported mode {cfg.mode!r}")
 
-    # eager=False: the first consumer (incremental_labels' touched-node
-    # distinct) full-scans the edge list, so the lazy checkpoint caches
-    # identically without its own materialization job
+    # eager=False: the first consumer (the broadcast of the edge
+    # endpoints in incremental_labels) full-scans the edge list, so the
+    # lazy checkpoint caches identically without its own job
     edges = edges.localCheckpoint(eager=False)
-    affected, updated = incremental_labels(edges, state.labels, cfg.cc_max_iterations)
+    affected, updated = incremental_labels(edges, state.labels)
     files_union = _union_audit_tolerant(state.files, new_files)
-    clusters = elect_keepers(files_union, affected, cfg)
+    # keepers are elected among the affected fids only: a batch-keyed
+    # semi-join, not a join of the whole base ∪ batch file table
+    clusters = elect_keepers(
+        files_union.join(F.broadcast(affected.select("fid")), "fid", "left_semi"),
+        affected, cfg,
+    ).localCheckpoint(eager=False)
     plan = action_plan(clusters, cfg)
     # metrics must see every file the plan can reference — affected
     # components span base members too (a batch bridge re-elects
@@ -706,8 +763,6 @@ def load_state_delta(
     their GC never ran. Labels collapse latest-batch-wins over a slim
     (fid, component, batch_id) table — read-side work bounded by the
     seed + rows since the last compaction, not chain age."""
-    from pyspark.sql import Window
-
     store = _delta_store(spark, cfg, root)
     gen, folded = _current_seed(store)
     seed_id = _seed_partition(gen)
@@ -727,12 +782,12 @@ def load_state_delta(
     if cfg.mode in BAND_MODES:
         bands = rd(BAND_MODES[cfg.mode].stage).drop("batch_id")
         band_reps = rd("band_reps").drop("batch_id")
-    lab = rd("cc_labels")
-    w = Window.partitionBy("fid").orderBy(F.col("batch_id").desc())
-    labels = (
-        lab.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "batch_id")
+    # latest batch wins (each partition holds one row per fid) — as an
+    # aggregate, not a window, so a semi-join on fid (incremental_labels'
+    # touched-fid probe) is pushed below it and collapses the touched
+    # fids' rows only
+    labels = rd("cc_labels").groupBy("fid").agg(
+        F.max_by("component", "batch_id").alias("component")
     )
     return BaseState(
         files=files, bands=bands, labels=labels, band_reps=band_reps

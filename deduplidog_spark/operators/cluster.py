@@ -16,10 +16,20 @@ O(diameter); dedup graphs are near-star-shaped (exact groups emit
 star edges, LSH cliques are shallow), so 3-5 rounds typical.
 ``localCheckpoint`` truncates lineage each round — without it the plan
 doubles per iteration and the driver OOMs at scale.
+
+Which routine applies where: ``connected_components`` is the full-run
+CC (``pipeline.dedupe``), sized for corpus graphs — every round is a
+distributed join, so no single task ever holds the graph.
+``union_find_components`` is the append-batch CC
+(``incremental.incremental_labels``): a batch's graph contracted to its
+base components has at most the batch's edge count, so one task
+resolves it in one job instead of a round loop of jobs.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -202,6 +212,56 @@ def connected_components(
                 )
         labels = new_labels.select("fid", "component")
     return labels
+
+
+def _union_find(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Components of one edge table, vectorized: node codes in sorted
+    string order (code-point order, which is Spark's binary order of
+    UTF-8 strings), so the min code of a component is its min fid.
+    Every round hooks each root onto the least root across its edges
+    (parents only ever point to smaller codes, so no cycles) and then
+    pointer-jumps to full compression; a round that leaves every edge
+    inside one tree is the last."""
+    codes, nodes = pd.factorize(
+        pd.concat([pdf["id_a"], pdf["id_b"]], ignore_index=True), sort=True
+    )
+    nodes = np.asarray(nodes, dtype=object)
+    a, b = codes[: len(pdf)], codes[len(pdf):]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            break
+        ra, rb = ra[split], rb[split]
+        lo = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, lo)
+        np.minimum.at(parent, rb, lo)
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    return pd.DataFrame({"fid": nodes, "component": nodes[parent]})
+
+
+def union_find_components(edges: DataFrame) -> DataFrame:
+    """Edges (id_a, id_b) → labels (fid, component) for every node that
+    appears in an edge, component = min member fid: the same labels as
+    ``connected_components``, computed in ONE task (a single-group
+    ``applyInPandas``) with one job and no round loop.
+
+    For graphs that fit one task — an append batch's edges contracted
+    to their base components (``incremental.incremental_labels``), at
+    most the batch's edge count. Like there, self-loops are dropped
+    and duplicate edges are harmless. Corpus-sized graphs take
+    ``connected_components``."""
+    return (
+        edges.filter(F.col("id_a") != F.col("id_b"))
+        .select("id_a", "id_b")
+        .groupBy(F.lit(0).alias("_one"))
+        .applyInPandas(_union_find, "fid string, component string")
+    )
 
 
 def elect_keepers(files: DataFrame, labels: DataFrame, cfg=None, order=None) -> DataFrame:

@@ -80,22 +80,66 @@ def roundrobin_widens(plan: str) -> tuple[int, list[str], list[str]]:
         - set(exchanges_carrying(plan, "content"))
     )
     tree = plan.split("\n\n", 1)[0].splitlines()
-    depth = [re.search(r"[A-Za-z]", line).start() for line in tree]
     n_scans = sum(1 for line in tree if re.search(r"\bScan \w+", line))
     misplaced = []
     for header in widens:
-        node_id = re.match(r"\((\d+)\)", header).group(1)
-        at = next(i for i, line in enumerate(tree) if line.endswith(f"({node_id})"))
-        below = []
-        for i in range(at + 1, len(tree)):
-            if depth[i] <= depth[at]:
-                break
-            below.append(tree[i])
+        below = subtree(plan, re.match(r"\((\d+)\)", header).group(1))
         if any("Exchange" in b for b in below) or not any(
             re.search(r"\bScan \w+", b) for b in below
         ):
             misplaced.append(header)
     return n_scans, widens, misplaced
+
+
+def subtree(plan: str, node_id: str, prune: str | None = None) -> list[str]:
+    """Tree lines strictly below node ``node_id`` of a formatted plan;
+    with ``prune``, the subtrees of nodes named ``prune`` are left out
+    (the nodes themselves are kept)."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    depth = [re.search(r"[A-Za-z]", line).start() for line in tree]
+    at = next(i for i, line in enumerate(tree) if line.endswith(f"({node_id})"))
+    below, cut = [], None
+    for i in range(at + 1, len(tree)):
+        if depth[i] <= depth[at]:
+            break
+        if cut is not None and depth[i] > cut:
+            continue
+        cut = None
+        below.append(tree[i])
+        if prune and re.search(rf"\b{prune} \(\d+\)$", tree[i]):
+            cut = depth[i]
+    return below
+
+
+def hash_exchanges_over_scan(plan: str, key: str, location: str) -> list[str]:
+    """Headers of Exchange nodes hash-partitioned on ``key`` that
+    shuffle rows of a scan of a path containing ``location``: the scan
+    is in the exchange's subtree outside every BroadcastExchange (a
+    broadcast build side below it, e.g. batch-keyed hits of that scan,
+    is not what the exchange partitions)."""
+    blocks = {
+        m.group(1): b
+        for b in re.split(r"\n(?=\(\d+\) )", plan)
+        if (m := re.match(r"\((\d+)\) ", b))
+    }
+    scans = {
+        i for i, b in blocks.items()
+        if b.startswith(f"({i}) Scan") and location in b
+    }
+    hits = []
+    for i, b in blocks.items():
+        header = b.split("\n", 1)[0]
+        if not re.match(r"\(\d+\) Exchange\b", header):
+            continue
+        if not re.search(rf"hashpartitioning\({key}#", b):
+            continue
+        below = {
+            m.group(1) for line in subtree(plan, i, prune="BroadcastExchange")
+            if (m := re.search(r"\((\d+)\)$", line))
+        }
+        if below & scans:
+            hits.append(header.strip())
+    return hits
 
 
 def main() -> None:
@@ -252,6 +296,8 @@ def main() -> None:
     # ---- 5. incremental append: base probed map-side, no base shuffle -----
     from deduplidog_spark.incremental import (
         _explode,
+        base_sha_probe,
+        fresh_reps,
         incremental_candidate_pairs,
         incremental_exact_edges,
     )
@@ -271,7 +317,8 @@ def main() -> None:
     isemis = len(re.findall(r"BroadcastHashJoin LeftSemi", iplan))
     eplan = formatted_plan(
         incremental_exact_edges(
-            batch_files.select("fid", "sha"), base_files.select("fid", "sha")
+            batch_files.select("fid", "sha"),
+            base_sha_probe(batch_files.select("fid", "sha"), base_files.select("fid", "sha")),
         )
     )
     esemis = len(re.findall(r"BroadcastHashJoin LeftSemi", eplan))
@@ -294,6 +341,42 @@ def main() -> None:
         "broadcast against base). Every hash shuffle in the append "
         "path keys on bucket hashes / fids of the TOUCHED sliver, "
         "never the base corpus.\n"
+    )
+
+    # ---- 5a. batch sha collapse: no sha shuffle of the base files ---------
+    # incremental_dedupe's new_band_reps is the materialization of
+    # fresh_reps over the one base sha probe; its lineage must never
+    # hash-partition the base files on sha (a base-wide distinct(sha)
+    # broadcast as the `seen` set was this path's old shape). The base
+    # files are read back from parquet, as an append reads its state,
+    # so the audit can tell the base scan from the batch scan.
+    import shutil
+    import tempfile
+
+    state_dir = tempfile.mkdtemp(prefix="plan_audit_state_")
+    base_files.write.parquet(f"{state_dir}/base_files")
+    persisted = spark.read.parquet(f"{state_dir}/base_files")
+    rplan = formatted_plan(
+        fresh_reps(batch_bands, base_sha_probe(batch_files, persisted))
+    )
+    shutil.rmtree(state_dir)
+    rbad = hash_exchanges_over_scan(rplan, "sha", "base_files")
+    rsemis = len(re.findall(r"BroadcastHashJoin LeftSemi", rplan))
+    ok_reps = not rbad and rsemis >= 1 and "base_files" in rplan
+    if not ok_reps:
+        failures.append(
+            f"batch sha collapse: sha exchanges over the base files={rbad}, "
+            f"sha semi-joins={rsemis}"
+        )
+    report.append(
+        ("## ✅" if ok_reps else "## ❌")
+        + " batch sha collapse never shuffles the base files on sha\n\n"
+        + "new_band_reps lineage (fresh_reps over base_sha_probe): "
+        f"{len(rbad)} Exchange hashpartitioning(sha) over the base files "
+        f"scan (must be 0), {rsemis} BroadcastHashJoin LeftSemi (the "
+        "batch's distinct shas broadcast against the base files). The "
+        "`seen` anti-join broadcasts the probe's hits — a batch-sized "
+        "set — never the base sha set.\n"
     )
 
     # ---- 5b. round-robin widens: at most one per scan, next to it ---------

@@ -4,7 +4,11 @@ from datetime import timedelta
 
 from deduplidog_spark import DedupConfig
 from deduplidog_spark import fixtures as FX
-from deduplidog_spark.operators.cluster import connected_components, elect_keepers
+from deduplidog_spark.operators.cluster import (
+    connected_components,
+    elect_keepers,
+    union_find_components,
+)
 
 
 def _edges(spark, pairs):
@@ -52,6 +56,46 @@ def test_cc_raises_instead_of_returning_unconverged_labels(spark):
     e = _edges(spark, [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(e, max_iterations=2).collect()
+
+
+def _random_graph(seed):
+    """Seeded edges mixing every shape the two CC routines must agree
+    on: chains in fid order and in shuffled order, stars, duplicate
+    and reversed edges, self-loops, isolated pairs, and non-ASCII fids
+    whose min
+    depends on the string order ("é" > "z" by code point; an astral
+    character > U+FFFF in Spark's UTF-8 byte order, though it sorts
+    below it in UTF-16)."""
+    import random
+
+    rng = random.Random(seed)
+    # a long chain in fid order, and a shorter one in shuffled order
+    # (hash-min needs about half its length in rounds)
+    chain = [f"c{seed}_{i:03d}" for i in range(60)]
+    edges = [(chain[i + 1], chain[i]) for i in range(len(chain) - 1)]
+    order = [f"d{seed}_{i:03d}" for i in range(10)]
+    rng.shuffle(order)
+    edges += [(order[i], order[i + 1]) for i in range(len(order) - 1)]
+    hub = f"s{seed}_hub"
+    edges += [(f"s{seed}_{i:03d}", hub) for i in range(rng.randint(20, 50))]
+    edges += [(f"p{seed}_{i}a", f"p{seed}_{i}b") for i in range(10)]
+    edges += [("é", "z"), ("z", "éa"), ("\U0001d11e", "\uffff"), ("\uffff", "\U0001f600")]
+    loops = [(x, x) for x in rng.sample(chain, 5)] + [("lonely", "lonely")]
+    dups = [(b, a) for a, b in rng.sample(edges, 15)] + rng.sample(edges, 15)
+    edges += loops + dups
+    rng.shuffle(edges)
+    return edges
+
+
+def test_union_find_equals_connected_components(spark):
+    """The append-batch CC equals the full-run CC, node set and
+    min-fid component ids included, on seeded random graphs."""
+    e = _edges(spark, _random_graph(3) + _random_graph(11))
+    uf = {r.fid: r.component for r in union_find_components(e).collect()}
+    cc = {r.fid: r.component for r in connected_components(e).collect()}
+    assert uf == cc
+    assert uf["é"] == "z" and uf["\U0001d11e"] == "\uffff"
+    assert "lonely" not in uf
 
 
 def _keeper_fixture(spark):

@@ -259,6 +259,47 @@ def test_skewed_identical_base_group_still_pairs_with_batch(spark):
     assert lab["batch/near.py"] == lab["base/b000.py"] == lab["base/b249.py"]
 
 
+def test_batch_edge_touching_large_base_component_is_contracted(spark, monkeypatch):
+    """A batch bridge into a 300-member base exact-copy component: the
+    union-find input holds the batch's edges contracted to base
+    components (never the touched component's members), and the
+    labels still equal a full recompute."""
+    import deduplidog_spark.incremental as inc
+    from deduplidog_spark.operators.cluster import union_find_components
+
+    uf_inputs = []
+
+    def spy(edges):
+        uf_inputs.append(edges)
+        return union_find_components(edges)
+
+    monkeypatch.setattr(inc, "union_find_components", spy)
+    cfg = _cfg(None)  # in-memory runs: this test is about the labels
+    base_rows = [("base", f"a{i:03d}.py", A) for i in range(300)]
+    base_rows += [BASE_ROWS[2], BASE_ROWS[3], BASE_ROWS[4]]  # b1, b2, c1
+    base_raw = _df(spark, base_rows)
+    batch_raw = _df(spark, [BATCH_ROWS[4]])  # bridge: half A, half B
+    res = incremental_dedupe(
+        batch_raw, cfg, state_from_result(dedupe(base_raw, cfg)),
+        base_contents=base_raw.select(
+            F.concat_ws("/", "repo", "path").alias("fid"), "content"
+        ),
+    )
+    full = dedupe(base_raw.unionByName(batch_raw), cfg)
+    inc_labels = {r.fid: r.component for r in res.labels.collect()}
+    ful = {r.fid: r.component for r in full.clusters.select("fid", "component").collect()}
+    assert inc_labels == ful
+    assert len({inc_labels[f"base/a{i:03d}.py"] for i in range(300)}) == 1
+    assert inc_labels["base/a299.py"] == inc_labels["batch/bridge.py"] == inc_labels["base/b2.py"]
+    assert res.label_updates.count() == 300 + 3  # A copies, b1, b2, bridge
+
+    (uf_in,) = uf_inputs
+    contracted = [(r.id_a, r.id_b) for r in uf_in.collect()]
+    assert 1 <= len(contracted) <= res.edges.count()
+    nodes = {n for e in contracted for n in e}
+    assert nodes <= {"base/a000.py", "base/b1.py", "batch/bridge.py"}
+
+
 def test_incremental_from_catalog_table_state(spark):
     """load_state's catalog-table branch (the Iceberg seam, parquet
     provider under test): a base run checkpointed as catalog tables
