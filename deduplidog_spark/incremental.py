@@ -22,16 +22,19 @@ Cost model per batch (B = batch size, N = base size, B << N):
   append-only by ``append_state_delta``) — no per-batch base-wide
   re-aggregation;
 - ONE base sha probe (``base_sha_probe``: the batch's distinct shas
-  broadcast against the base files) feeds both the exact star edges
-  and the sha collapse's anti-join — no base sha set is aggregated or
-  broadcast;
-- connected components run on the batch's edges CONTRACTED to base
-  components (``incremental_labels``): at most B edges whatever the
-  size of the components they touch, resolved by union-find in one
-  task (components can merge when a batch doc bridges two of them —
-  handled, tested); members of touched components relabel through
-  the broadcast node → root map, and keepers are elected among the
-  affected fids only;
+  broadcast against the base files, collapsed to one min base fid per
+  sha) feeds both the exact star edges and the sha collapse's
+  anti-join — no base sha set, and no boilerplate sha's base copies,
+  is aggregated or broadcast;
+- every new edge has a batch endpoint (exact stars link batch members
+  and ONE base fid per sha; near pairs skip base-base), so the edge
+  list is batch-sized whatever the size of the components it touches;
+- connected components run on those edges CONTRACTED to base
+  components (``incremental_labels``): one edge per new edge, resolved
+  by union-find in one task (components can merge when a batch doc
+  bridges two of them — handled, tested); members of touched
+  components relabel through the broadcast node → root map, and
+  keepers are elected among the affected fids only;
 - untouched base labels pass through via an anti-join.
 So per-batch work is O(B) signature compute + O(N) map-side scans.
 Two base-wide shuffles are left: the label view's latest-batch-wins
@@ -182,23 +185,26 @@ def incremental_candidate_pairs(
 
 
 def base_sha_probe(new_files: DataFrame, base_files: DataFrame) -> DataFrame:
-    """(sha, fid) of the base files sharing a sha with the batch — THE
-    one base sha probe of an append: the batch's distinct shas
-    broadcast-semi-join the base (map-side, no base shuffle). It feeds
-    both the exact star edges and the sha collapse's ``seen`` anti-join,
-    so no batch ever aggregates or broadcasts the base sha set."""
+    """(sha, fid = its min base fid), one row per batch sha the base
+    carries — THE one base sha probe of an append: the batch's distinct
+    shas broadcast-semi-join the base (map-side, no base shuffle), and
+    the hits collapse to their min fid (map-side combinable), so the
+    result has at most one row per distinct batch sha however many base
+    copies a sha has. It feeds both the exact star edges and the sha
+    collapse's ``seen`` anti-join, so no batch ever aggregates or
+    broadcasts the base sha set or a boilerplate sha's base copies."""
     shas = new_files.filter(F.col("sha").isNotNull()).select("sha").distinct()
     return base_files.filter(F.col("sha").isNotNull()).join(
         F.broadcast(shas), "sha", "left_semi"
-    ).select("sha", "fid")
+    ).groupBy("sha").agg(F.min("fid").alias("fid"))
 
 
 def fresh_reps(new_slim: DataFrame, base_hits: DataFrame) -> DataFrame:
     """One representative band row per sha the batch introduces: the
     sha collapse within the batch AND against the base. Batch rows whose
-    sha the base already carries (``base_sha_probe``'s hits, broadcast
-    into an anti-join — never the base sha set) ride the exact star
-    edges instead; only genuinely new content enters LSH.
+    sha the base already carries (``base_sha_probe``'s one row per such
+    sha, broadcast into an anti-join — never the base sha set) ride the
+    exact star edges instead; only genuinely new content enters LSH.
 
     NULL-sha (quarantined) rows never match a left_anti key, so without
     the filter EVERY batch would mint a fresh NULL-sha representative
@@ -214,9 +220,13 @@ def fresh_reps(new_slim: DataFrame, base_hits: DataFrame) -> DataFrame:
 def incremental_exact_edges(
     new_files: DataFrame, base_hits: DataFrame
 ) -> DataFrame:
-    """Exact-dup star edges for sha groups the batch touches: the base
-    members are ``base_sha_probe``'s hits, and each member links to the
-    group-min fid. Base-only groups are untouched by construction."""
+    """Exact-dup star edges for sha groups the batch touches: each batch
+    member and the group's min base fid (``base_sha_probe``) link to
+    the group-min fid. The other base copies need no edge — every base
+    copy of a sha already shares that base fid's component — so there
+    are at most as many edges as non-NULL-sha batch rows, each with a
+    batch endpoint, however many base copies a sha has. Base-only
+    groups are untouched by construction."""
     members = base_hits.select("sha", "fid").union(
         new_files.filter(F.col("sha").isNotNull()).select("sha", "fid")
     )
@@ -393,12 +403,13 @@ def incremental_dedupe(
     edges = edges.localCheckpoint(eager=False)
     affected, updated = incremental_labels(edges, state.labels)
     files_union = _union_audit_tolerant(state.files, new_files)
-    # keepers are elected among the affected fids only: a batch-keyed
-    # semi-join, not a join of the whole base ∪ batch file table
-    clusters = elect_keepers(
-        files_union.join(F.broadcast(affected.select("fid")), "fid", "left_semi"),
-        affected, cfg,
-    ).localCheckpoint(eager=False)
+    # keepers are elected among the affected fids only (elect_keepers
+    # inner-joins on fid). No broadcast hint: affected spans every
+    # member of a touched component — a boilerplate component can hold
+    # millions — so the join strategy is left to the planner and AQE
+    clusters = elect_keepers(files_union, affected, cfg).localCheckpoint(
+        eager=False
+    )
     plan = action_plan(clusters, cfg)
     # metrics must see every file the plan can reference — affected
     # components span base members too (a batch bridge re-elects

@@ -111,21 +111,46 @@ def subtree(plan: str, node_id: str, prune: str | None = None) -> list[str]:
     return below
 
 
-def hash_exchanges_over_scan(plan: str, key: str, location: str) -> list[str]:
-    """Headers of Exchange nodes hash-partitioned on ``key`` that
-    shuffle rows of a scan of a path containing ``location``: the scan
-    is in the exchange's subtree outside every BroadcastExchange (a
-    broadcast build side below it, e.g. batch-keyed hits of that scan,
-    is not what the exchange partitions)."""
-    blocks = {
+def _blocks(plan: str) -> dict[str, str]:
+    return {
         m.group(1): b
         for b in re.split(r"\n(?=\(\d+\) )", plan)
         if (m := re.match(r"\((\d+)\) ", b))
     }
-    scans = {
+
+
+def _scans(blocks: dict[str, str], location: str) -> set[str]:
+    return {
         i for i, b in blocks.items()
         if b.startswith(f"({i}) Scan") and location in b
     }
+
+
+def semi_probed_scans(plan: str, location: str) -> tuple[set[str], set[str]]:
+    """(ids of the scans of a path containing ``location``, ids of
+    those that are the probe side of a broadcast semi-join)."""
+    blocks = _blocks(plan)
+    scans = _scans(blocks, location)
+    probed = set()
+    for i, b in blocks.items():
+        if re.match(r"\(\d+\) BroadcastHashJoin\b", b) and "Join type: LeftSemi" in b:
+            probed |= {
+                m.group(1) for line in subtree(plan, i, prune="BroadcastExchange")
+                if (m := re.search(r"\((\d+)\)$", line))
+            } & scans
+    return scans, probed
+
+
+def hash_exchanges_over_scan(plan: str, key: str, location: str) -> list[str]:
+    """Headers of Exchange nodes hash-partitioned on ``key`` that
+    shuffle the un-narrowed rows of a scan of a path containing
+    ``location``: the scan is in the exchange's subtree outside every
+    BroadcastExchange (a broadcast build side below it is not what the
+    exchange partitions) and every broadcast semi-join (its probe side
+    reaches the exchange narrowed to the build side's keys, e.g. the
+    batch's shas — an exchange of those hits is batch-keyed)."""
+    blocks = _blocks(plan)
+    scans = _scans(blocks, location)
     hits = []
     for i, b in blocks.items():
         header = b.split("\n", 1)[0]
@@ -134,7 +159,9 @@ def hash_exchanges_over_scan(plan: str, key: str, location: str) -> list[str]:
         if not re.search(rf"hashpartitioning\({key}#", b):
             continue
         below = {
-            m.group(1) for line in subtree(plan, i, prune="BroadcastExchange")
+            m.group(1) for line in subtree(
+                plan, i, prune="(?:BroadcastExchange|BroadcastHashJoin LeftSemi BuildRight)"
+            )
             if (m := re.search(r"\((\d+)\)$", line))
         }
         if below & scans:
@@ -361,22 +388,26 @@ def main() -> None:
     )
     shutil.rmtree(state_dir)
     rbad = hash_exchanges_over_scan(rplan, "sha", "base_files")
-    rsemis = len(re.findall(r"BroadcastHashJoin LeftSemi", rplan))
-    ok_reps = not rbad and rsemis >= 1 and "base_files" in rplan
+    rscans, rprobed = semi_probed_scans(rplan, "base_files")
+    ok_reps = not rbad and bool(rscans) and rprobed == rscans
     if not ok_reps:
         failures.append(
             f"batch sha collapse: sha exchanges over the base files={rbad}, "
-            f"sha semi-joins={rsemis}"
+            f"base files scans={sorted(rscans)}, of them probed by a "
+            f"broadcast semi-join={sorted(rprobed)}"
         )
     report.append(
         ("## ✅" if ok_reps else "## ❌")
         + " batch sha collapse never shuffles the base files on sha\n\n"
         + "new_band_reps lineage (fresh_reps over base_sha_probe): "
         f"{len(rbad)} Exchange hashpartitioning(sha) over the base files "
-        f"scan (must be 0), {rsemis} BroadcastHashJoin LeftSemi (the "
-        "batch's distinct shas broadcast against the base files). The "
-        "`seen` anti-join broadcasts the probe's hits — a batch-sized "
-        "set — never the base sha set.\n"
+        f"scan's un-narrowed rows (must be 0); {len(rprobed)} of "
+        f"{len(rscans)} base files scans are the probe side of a "
+        "BroadcastHashJoin LeftSemi (the batch's distinct shas; must be "
+        "all). Only the probe's hits are shuffled on sha, collapsed "
+        "map-side to one row per batch sha, so the `seen` anti-join "
+        "broadcasts at most one row per distinct batch sha — never the "
+        "base sha set or a boilerplate sha's base copies.\n"
     )
 
     # ---- 5b. round-robin widens: at most one per scan, next to it ---------

@@ -260,10 +260,13 @@ def test_skewed_identical_base_group_still_pairs_with_batch(spark):
 
 
 def test_batch_edge_touching_large_base_component_is_contracted(spark, monkeypatch):
-    """A batch bridge into a 300-member base exact-copy component: the
-    union-find input holds the batch's edges contracted to base
-    components (never the touched component's members), and the
-    labels still equal a full recompute."""
+    """A batch bridge into a 300-member base exact-copy component, plus
+    a batch copy of that content whose fid sorts before every base
+    copy (so it becomes the sha group's star center): the edge list
+    stays batch-sized (no star edge per base copy), the union-find
+    input holds those edges contracted to base components (never the
+    touched component's members), and the labels still equal a full
+    recompute."""
     import deduplidog_spark.incremental as inc
     from deduplidog_spark.operators.cluster import union_find_components
 
@@ -278,7 +281,9 @@ def test_batch_edge_touching_large_base_component_is_contracted(spark, monkeypat
     base_rows = [("base", f"a{i:03d}.py", A) for i in range(300)]
     base_rows += [BASE_ROWS[2], BASE_ROWS[3], BASE_ROWS[4]]  # b1, b2, c1
     base_raw = _df(spark, base_rows)
-    batch_raw = _df(spark, [BATCH_ROWS[4]])  # bridge: half A, half B
+    # bridge: half A, half B; "a/copy.py" < "base/..." in binary order
+    batch_rows = [BATCH_ROWS[4], ("a", "copy.py", A)]
+    batch_raw = _df(spark, batch_rows)
     res = incremental_dedupe(
         batch_raw, cfg, state_from_result(dedupe(base_raw, cfg)),
         base_contents=base_raw.select(
@@ -291,13 +296,21 @@ def test_batch_edge_touching_large_base_component_is_contracted(spark, monkeypat
     assert inc_labels == ful
     assert len({inc_labels[f"base/a{i:03d}.py"] for i in range(300)}) == 1
     assert inc_labels["base/a299.py"] == inc_labels["batch/bridge.py"] == inc_labels["base/b2.py"]
-    assert res.label_updates.count() == 300 + 3  # A copies, b1, b2, bridge
+    assert inc_labels["a/copy.py"] == "a/copy.py"
+    # A copies, b1, b2, bridge, copy
+    assert res.label_updates.count() == 300 + 2 + 2
 
+    # one exact edge for the copy (not one per base copy) plus the
+    # bridge's near edges: at most two edges per batch row
+    batch_fids = {f"{r}/{p}" for r, p, _ in batch_rows}
+    edges = [(r.id_a, r.id_b) for r in res.edges.collect()]
+    assert len(edges) <= 2 * len(batch_rows)
+    assert all(a in batch_fids or b in batch_fids for a, b in edges)
     (uf_in,) = uf_inputs
     contracted = [(r.id_a, r.id_b) for r in uf_in.collect()]
-    assert 1 <= len(contracted) <= res.edges.count()
+    assert 1 <= len(contracted) <= len(edges)
     nodes = {n for e in contracted for n in e}
-    assert nodes <= {"base/a000.py", "base/b1.py", "batch/bridge.py"}
+    assert nodes <= {"base/a000.py", "base/b1.py"} | batch_fids
 
 
 def test_incremental_from_catalog_table_state(spark):
