@@ -80,16 +80,13 @@ class DedupConfig:
     mode: str = "name"  # name | exact | minhash | simhash | substring
     shingle_k: int = 5  # char-shingle width
     num_perm: int = 128  # MinHash permutations (OPH bins)
-    minhash_impl: str = "oph"  # oph (one-pass, default) | kperm (classic)
     lsh_bands: int = 32  # bands (rows = num_perm // bands)
     jaccard_threshold: float = 0.7  # V8 verify τ
     sig_est_threshold: float = 0.5  # cheap signature-estimate pre-filter
     exact_verify: bool = True  # recompute true Jaccard on candidate pairs
-    simhash_bits: int = 64
     simhash_max_hamming: int = 3  # V4 analog (accepted_img_hash_diff)
     fingerprint_window: int = 16  # winnowing window (substring mode)
     fingerprint_k: int = 32  # substring fingerprint gram length
-    substring_min_len: int | None = None  # verified LCS ≥ this (default w+k-1)
     max_bucket_size: int = 200  # LSH bucket cap (skew guard; drops logged)
     size_ratio_prefilter: float = 0.5  # V5 analog: |len ratio| cheap gate
     # V5 proper (accepted_frame_delta, deduplidog.py:144-145,727-731):
@@ -136,11 +133,6 @@ class DedupConfig:
                 "cannot ignore name, size and date together without a "
                 "content predicate — everything would match everything"
             )
-        # checksum implies comparable content (reference: checksum needs
-        # size equality to short-circuit, deduplidog.py:403-406) — we relax
-        # this (sha256 is cheap columnar) but keep the skip_bigger guard:
-        if self.skip_bigger and self.ignore_size is False and self.mode == "name":
-            pass  # fine: sizes present
         if self.num_perm % self.lsh_bands != 0:
             raise ValueError("num_perm must be divisible by lsh_bands")
         if self.checkpoint_dir and self.checkpoint_table_prefix:
@@ -168,11 +160,10 @@ class DedupConfig:
 
     @property
     def effective_substring_min_len(self) -> int:
-        """Winnowing guarantee boundary: any shared substring of
-        length ≥ window + k - 1 produces a shared fingerprint, so
-        that's the smallest length the mode can promise to find."""
-        if self.substring_min_len is not None:
-            return self.substring_min_len
+        """Verified LCS floor of substring mode — the winnowing
+        guarantee boundary: any shared substring of length ≥ window +
+        k - 1 produces a shared fingerprint, so that's the smallest
+        length the mode can promise to find."""
         return self.fingerprint_window + self.fingerprint_k - 1
 
     def with_(self, **kw) -> "DedupConfig":

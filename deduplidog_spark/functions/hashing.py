@@ -6,8 +6,9 @@ kernels below are the vectorized replacement for the reference's
 per-file PIL/zlib calls, helpers.py:43-53, utils.py:21-32).
 
 Scheme: 64-bit polynomial rolling hash over UTF-8 bytes for char
-k-shingles (mod 2^64 via uint64 wraparound), optionally folded to
-31 bits for the MinHash permutation domain.
+k-shingles (mod 2^64 via uint64 wraparound); MinHash signatures are
+one-permutation hashing over those hashes (``oph_signatures``), and the
+exact-Jaccard sets fold them to 31 bits.
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ from __future__ import annotations
 import numpy as np
 
 _B = np.uint64(1099511628211)  # FNV-64 prime as the polynomial base
-_MERSENNE31 = np.uint64(2147483647)  # 2^31 - 1
 
 
 # modular inverse of the odd base mod 2^64: B * _B_INV ≡ 1, so window
@@ -79,35 +79,11 @@ def shingle_hashes_u64(text: str, k: int) -> np.ndarray:
 
 
 def shingle_set_u32(text: str, k: int) -> np.ndarray:
-    """Distinct shingle hashes folded into [0, 2^31): the MinHash
-    universe (31-bit so a*x+b fits uint64 without overflow)."""
+    """Distinct shingle hashes folded into [0, 2^31): the set the exact
+    Jaccard verify (``jaccard_of_sets``) intersects."""
     h = shingle_hashes_u64(text, k)
     folded = (h ^ (h >> np.uint64(31))) & np.uint64(0x7FFFFFFF)
     return np.unique(folded)
-
-
-def minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """Universal-hash permutation params a (odd, nonzero) and b,
-    both < 2^31-1, deterministic in ``seed``."""
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, int(_MERSENNE31), size=num_perm).astype(np.uint64)
-    b = rng.randint(0, int(_MERSENNE31), size=num_perm).astype(np.uint64)
-    return a, b
-
-
-def minhash_signature(
-    shingles_u32: np.ndarray, a: np.ndarray, b: np.ndarray, chunk: int = 8192
-) -> np.ndarray:
-    """min over shingles of (a*x + b) mod (2^31-1), per permutation.
-    Chunked over the shingle axis to bound the (P × m) intermediate."""
-    p = len(a)
-    sig = np.full(p, int(_MERSENNE31), dtype=np.uint64)
-    for lo in range(0, len(shingles_u32), chunk):
-        s = shingles_u32[lo : lo + chunk]
-        # (P, m) block: a[:,None]*s[None,:] < 2^31 * 2^31 = 2^62 — no overflow
-        block = (a[:, None] * s[None, :] + b[:, None]) % _MERSENNE31
-        np.minimum(sig, block.min(axis=1), out=sig)
-    return sig.astype(np.int64)
 
 
 def oph_signature(shingle_hashes_u64: np.ndarray, num_perm: int) -> np.ndarray:
@@ -143,6 +119,26 @@ def oph_signature(shingle_hashes_u64: np.ndarray, num_perm: int) -> np.ndarray:
             if not empty.any():
                 break
     return sig.astype(np.int64)
+
+
+def oph_signatures(
+    texts, k: int, num_perm: int, max_size: int | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """The MinHash kernel of every signing path: texts → (an (N,
+    num_perm) int64 signature matrix, an N-long ok mask). A NULL text,
+    or one longer than ``max_size`` characters (F6 hash-cost gate), is
+    not signed: its row stays zero and ``ok`` is False, so callers emit
+    NULL and the row never enters an LSH bucket. No ``np.unique``
+    before signing: OPH's per-bin min is multiplicity-insensitive."""
+    n = len(texts)
+    sigs = np.zeros((n, num_perm), dtype=np.int64)
+    ok = np.zeros(n, dtype=bool)
+    for i, text in enumerate(texts):
+        if text is None or (max_size is not None and len(text) > max_size):
+            continue
+        sigs[i] = oph_signature(shingle_hashes_u64(text, k), num_perm)
+        ok[i] = True
+    return sigs, ok
 
 
 _XXH_P1 = np.uint64(0x9E3779B185EBCA87)

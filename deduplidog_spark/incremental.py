@@ -51,15 +51,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduplidog_spark.config import DedupConfig
-from deduplidog_spark.operators import minhash as mh
 from deduplidog_spark.operators import simhash as sh
-from deduplidog_spark.operators import substring as ss
 from deduplidog_spark.operators.actions import action_plan, run_metrics
 from deduplidog_spark.operators.candidates import _bucket_pairs
 from deduplidog_spark.operators.cluster import elect_keepers, union_find_components
 from deduplidog_spark.operators.exact import sha_groups, sha_representatives
 from deduplidog_spark.operators.verify import verify_candidate_pairs
-from deduplidog_spark.pipeline import BAND_MODES, scan_tables, split_scan
+from deduplidog_spark.pipeline import BAND_MODES, band_rows, scan_tables, split_scan
 
 # ingest-time audit flags that may exist on one side of a base/batch
 # union only; nothing downstream of the union reads them. Any OTHER
@@ -143,14 +141,6 @@ def load_state(spark: SparkSession, cfg: DedupConfig) -> BaseState:
     return BaseState(
         files=files, bands=bands, labels=rd("cc_labels"),
         band_reps=rd("band_reps") if bands is not None else None,
-    )
-
-
-def _explode(slim: DataFrame, cfg: DedupConfig) -> DataFrame:
-    return (
-        ss.explode_fingerprints(slim)
-        if cfg.mode == "substring"
-        else mh.explode_bands(slim)
     )
 
 
@@ -376,7 +366,7 @@ def incremental_dedupe(
         # full run, rolled forward by append_state_delta) so no batch
         # ever pays a base-wide aggregation shuffle.
         pairs, dropped = incremental_candidate_pairs(
-            _explode(reps, cfg), _explode(state.band_reps, cfg), cfg
+            band_rows(reps, cfg), band_rows(state.band_reps, cfg), cfg
         )
         union_slim = state.bands.unionByName(new_slim)
         if cfg.mode == "simhash":

@@ -10,10 +10,12 @@ a window elects one keeper per component.
 
 Hash-min propagation (the alternating-star idea of Kiveris et al.,
 "Connected Components in MapReduce and Beyond" — see PAPERS.md) in pure
-DataFrame ops: each round every node takes the min label among itself
-and its neighbors; iterate until a round changes nothing. Rounds are
-O(diameter); dedup graphs are near-star-shaped (exact groups emit
-star edges, LSH cliques are shallow), so 3-5 rounds typical.
+DataFrame ops: each round every node takes the min label among itself,
+its neighbors and its label's label; iterate until a round changes
+nothing. Exact groups emit star edges and LSH cliques are shallow, so
+those converge in a few rounds; a long near-dup chain whose fids are
+not in chain order needs rounds of the order of half its length (see
+``connected_components``).
 ``localCheckpoint`` truncates lineage each round — without it the plan
 doubles per iteration and the driver OOMs at scale.
 
@@ -37,8 +39,6 @@ from pyspark.sql import functions as F
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    checkpoint_every: int = 1,
-    check_every: int = 1,
     materialize=None,
     assume_unique_edges: bool = False,
 ) -> DataFrame:
@@ -50,20 +50,23 @@ def connected_components(
     no skew) — plus one label self-join feeding the SAME aggregation
     (see below). Early-exits when an iteration changes no label.
 
-    Convergence is O(log diameter), not O(diameter): each round's
-    aggregation takes the min over the node's own label, its
-    neighbors' labels, AND its label's label (pointer-doubling
-    shortcut rows from a labels⋈labels self-join on component = fid —
-    label values are always node ids inside the component, so the
-    shortcut stays within it and only decreases toward the min).
-    Plain neighbor propagation moves the min ONE hop per round — a
-    chain of gradually-evolving near-dup versions longer than
-    ``max_iterations`` would previously exhaust the cap; with the
-    shortcut the default cap of 20 covers chains ~2^17 long. The
-    shortcut join's probe side is skewed by construction (one hot key
-    per large component) — AQE skew-join splitting (on in
-    session.get_spark) spreads it, and the hot key collapses to the
-    fixed point within a few rounds anyway.
+    Convergence: each round's aggregation takes the min over the
+    node's own label, its neighbors' labels, AND its label's label (a
+    pointer-doubling shortcut row from a labels⋈labels self-join on
+    component = fid — label values are always node ids inside the
+    component, so the shortcut stays within it and only decreases
+    toward the min). The shortcut halves a chain only when its fids
+    are in chain order: a pure-Python replay of this round rule needs
+    12 rounds on a fid-ordered 1,000-node path and 17 on a 20,000-node
+    one. With the fids shuffled along the path it saves far less — 10
+    seeds each needed 7-12 rounds at 20 nodes, 14-27 at 40 and 23-55
+    at 80 — so a near-dup chain of ~40 versions whose paths do not
+    sort in edit order can exhaust the default cap of 20. Star- and
+    clique-shaped components (exact groups, LSH buckets) converge in a
+    few rounds. The shortcut join's probe side is skewed by
+    construction (one hot key per large component) — AQE skew-join
+    splitting (on in session.get_spark) spreads it, and the hot key
+    collapses to the fixed point within a few rounds anyway.
 
     Exhausting ``max_iterations`` without converging raises
     RuntimeError (the last round's probe is free): returning the
@@ -76,14 +79,11 @@ def connected_components(
     so the convergence probe is a filter-count over the just-
     checkpointed table — no extra join job per round (the round-1
     version re-joined old vs new labels: one more shuffle per round).
-    ``check_every=1`` (r6 default, was 2) probes after every round: the
-    probe is a filter-count over the round table — and (r6) it IS the
-    round's materialization job, since the round tables are lazy local
+    Every round is materialized and probed: the probe is a
+    filter-count over the round table — and (r6) it IS the round's
+    materialization job, since the round tables are lazy local
     checkpoints and the full-scan count computes and caches them —
-    while a redundant round is two joins + an aggregation. With
-    pointer doubling most dedup graphs converge in 2-3 rounds, so
-    skipping probes was costing a full extra round on the odd-round
-    cases for no measurable saving.
+    while a redundant round is two joins + an aggregation.
 
     ``materialize(df, tag)`` is the per-round lineage-truncation hook:
     default ``localCheckpoint`` (fast, but pinned to executor storage —
@@ -184,32 +184,30 @@ def connected_components(
                     F.max(F.when(F.col("is_self"), F.col("nbr_component"))).alias("prev"),
                 )
             )
-        if checkpoint_every and (i % checkpoint_every == 0):
-            new_labels = materialize(new_labels, f"r{i}")
-        last_round = i == max_iterations - 1
-        if ((i + 1) % max(check_every, 1) == 0) or last_round:
-            # FULL count, deliberately not limit(1): scanning every
-            # partition makes this probe the job that computes and
-            # caches the (lazy-checkpointed) round table — a limit
-            # probe would leave unscanned partitions uncached and the
-            # next round would recompute them from lineage. The count
-            # of changed labels costs the same one job the old
-            # materialize+limit pair spread over two.
-            changed = (
-                new_labels.filter(F.col("component") != F.col("prev"))
-                .count()
+        new_labels = materialize(new_labels, f"r{i}")
+        # FULL count, deliberately not limit(1): scanning every
+        # partition makes this probe the job that computes and caches
+        # the (lazy-checkpointed) round table — a limit probe would
+        # leave unscanned partitions uncached and the next round would
+        # recompute them from lineage. The count of changed labels
+        # costs the same one job the old materialize+limit pair spread
+        # over two.
+        changed = (
+            new_labels.filter(F.col("component") != F.col("prev"))
+            .count()
+        )
+        if changed == 0:
+            labels = new_labels.select("fid", "component")
+            break
+        if i == max_iterations - 1:
+            raise RuntimeError(
+                f"connected_components did not converge within "
+                f"max_iterations={max_iterations} — the label table "
+                "is still changing, so returning it would silently "
+                "split true components; raise max_iterations (a chain "
+                "whose fids are not in chain order needs rounds of the "
+                "order of half its length)"
             )
-            if changed == 0:
-                labels = new_labels.select("fid", "component")
-                break
-            if last_round:
-                raise RuntimeError(
-                    f"connected_components did not converge within "
-                    f"max_iterations={max_iterations} — the label table "
-                    "is still changing, so returning it would silently "
-                    "split true components; raise max_iterations (rounds "
-                    "needed ≈ log2 of the largest cluster diameter)"
-                )
         labels = new_labels.select("fid", "component")
     return labels
 

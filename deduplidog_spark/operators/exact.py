@@ -54,26 +54,6 @@ def exact_dup_groups(
     )
 
 
-def exact_dup_pairs(files: DataFrame) -> DataFrame:
-    """Edge list (id_a, id_b) of exact duplicates — feeds connected
-    components. Star-shaped per group (each member → group min), not the
-    full clique: O(n) edges per group instead of O(n²), which is what
-    keeps the 5%-boilerplate skew group (FIXTURES.md §3) from exploding.
-    """
-    # NULL sha (quarantined / undecodable content) must not group: a
-    # groupBy puts all NULL keys in one group, which would declare every
-    # quarantined row an exact duplicate of every other
-    w = files.filter(F.col("sha").isNotNull()).select(
-        F.col("sha"), F.concat_ws("/", "repo", "path").alias("fid")
-    )
-    mins = w.groupBy("sha").agg(F.min("fid").alias("root"), F.count("*").alias("n"))
-    return (
-        w.join(mins.filter(F.col("n") > 1), "sha")
-        .filter(F.col("fid") != F.col("root"))
-        .select(F.col("root").alias("id_a"), F.col("fid").alias("id_b"))
-    )
-
-
 def sha_groups(files: DataFrame) -> DataFrame:
     """ONE aggregation serving both sha-collapse (``sha_representatives``)
     and exact-dup edges (r6): (sha, root=min fid, n) over every row —
@@ -89,8 +69,15 @@ def sha_groups(files: DataFrame) -> DataFrame:
 
 
 def exact_dup_pairs_from_groups(files: DataFrame, groups: DataFrame) -> DataFrame:
-    """``exact_dup_pairs`` against a precomputed ``sha_groups`` table —
-    identical edges (star per sha group), one shared aggregation."""
+    """Edge list (id_a, id_b) of exact duplicates against a
+    ``sha_groups`` table — feeds connected components. Star-shaped per
+    group (each member → group root), not the full clique: O(n) edges
+    per group instead of O(n²), which is what keeps the 5%-boilerplate
+    skew group (FIXTURES.md §3) from exploding."""
+    # NULL sha (quarantined / undecodable content) must not group: a
+    # NULL-keyed star would declare every quarantined row an exact
+    # duplicate of every other, so the rows are filtered here and the
+    # equality join never matches the groups' NULL row either
     w = files.filter(F.col("sha").isNotNull()).select(
         F.col("sha"), F.concat_ws("/", "repo", "path").alias("fid")
     )

@@ -115,7 +115,7 @@ def fork_pairs(
     # without this filter, every repo holding one unreadable file
     # "shares" the NULL sha, and a corpus-wide NULL group would expand
     # O(repos²) pair structs from a single owner row. Same convention
-    # as exact.exact_dup_pairs.
+    # as exact.exact_dup_pairs_from_groups.
     rs = (
         files.filter(F.col("sha").isNotNull()).select("repo", "sha").distinct()
     )

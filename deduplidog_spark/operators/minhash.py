@@ -1,16 +1,23 @@
 """MinHash signatures + LSH banding (SURVEY §2.4 J5, §2.11.1-2).
 
 Replaces the reference's O(n·m) ignore_name cross join
-(deduplidog.py:109-110,492) with the standard MinHash-LSH pipeline:
+(deduplidog.py:109-110,492) with the standard MinHash-LSH pipeline.
+There is ONE signing kernel, ``functions.hashing.oph_signatures``:
+char-k-shingle hashes → a ``num_perm``-bin one-permutation-hashing
+signature, with the NULL / F6 ``hash_max_size`` gate. Two paths call
+it:
 
-1. ``minhash_sig`` — Arrow-batched pandas UDF: char-k-shingle set →
-   128-perm MinHash signature (numpy kernels in functions/hashing.py).
-2. JVM-side banding — the signature array is sliced into B bands of r
-   values and each band hashed with ``xxhash64``; pure built-in
-   expressions (slice/transform/concat_ws/xxhash64) so banding stays
-   inside whole-stage codegen, no second UDF.
-3. ``posexplode`` bands → (band_id, band_hash) rows for the LSH
-   equi-join (operators/candidates.py).
+1. ``banded_ingest_scan`` — the pipeline's scan stage: one
+   ``mapInPandas`` pass computes the ingest stats, signs, and bands in
+   numpy (``band_hashes_from_sigs``), so only B band hashes per row
+   reach the JVM.
+2. ``with_signatures`` → ``with_band_hashes`` — the ``sig`` column
+   (Arrow-batched pandas UDF) for callers that read it (the
+   signature-agreement gate, the driver queries), banded JVM-side with
+   ``xxhash64`` — bit-identical to the numpy banding (tested).
+
+``explode_bands`` then yields (band_id, band_hash) rows for the LSH
+equi-join (operators/candidates.py).
 
 Two docs with shingle-Jaccard j collide in ≥1 band with probability
 1-(1-j^r)^B; defaults (B=32, r=4) put the S-curve threshold near
@@ -19,7 +26,6 @@ Two docs with shingle-Jaccard j collide in ≥1 band with probability
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,27 +40,11 @@ def make_minhash_udf(cfg: DedupConfig):
     k = cfg.shingle_k
     max_size = cfg.hash_max_size
     num_perm = cfg.num_perm
-    use_oph = cfg.minhash_impl == "oph"
-    # classic-mode params precomputed once on the driver, shipped in
-    # the closure (2·num_perm uint64 ≈ 2 KB), not regenerated per batch
-    a, b = H.minhash_params(num_perm, cfg.seed)
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def minhash_sig(content: pd.Series) -> pd.Series:
-        out = []
-        for text in content:
-            if text is None or (max_size is not None and len(text) > max_size):
-                out.append(None)  # F6 hash-cost gate → never similar
-                continue
-            if use_oph:
-                # no np.unique: OPH's per-bin min is multiplicity-
-                # insensitive, so the sort it paid bought nothing
-                h = H.shingle_hashes_u64(text, k)
-                out.append(H.oph_signature(h, num_perm))
-            else:
-                sh = H.shingle_set_u32(text, k)
-                out.append(H.minhash_signature(sh, a, b))
-        return pd.Series(out)
+        sigs, ok = H.oph_signatures(content.tolist(), k, num_perm, max_size)
+        return pd.Series([sigs[i] if ok[i] else None for i in range(len(ok))])
 
     return minhash_sig
 
@@ -70,63 +60,6 @@ def with_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def make_minhash_band_udf(cfg: DedupConfig):
-    """Signature + banding fused into ONE Arrow UDF (r6): returns the
-    B band hashes directly instead of the num_perm-wide signature. The
-    banding kernel (functions.hashing.band_hashes_from_sigs) is
-    bit-identical to the JVM ``xxhash64`` folding in
-    ``with_band_hashes`` (regression-pinned in tests), so consumers see
-    exactly the same band values — but only B longs per row cross the
-    Python→JVM boundary (B=32 vs num_perm=128 default: 4× less Arrow
-    transfer), the JVM evaluates no 128-element banding expression,
-    and the full signature array never exists JVM-side at all. Rows
-    gated by F6 / NULL content yield NULL (no band rows), matching the
-    ``with_band_hashes`` NULL guard."""
-    k = cfg.shingle_k
-    max_size = cfg.hash_max_size
-    num_perm = cfg.num_perm
-    n_bands = cfg.lsh_bands
-    n_rows = cfg.lsh_rows
-    use_oph = cfg.minhash_impl == "oph"
-    a, b = H.minhash_params(num_perm, cfg.seed)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_bands(content: pd.Series) -> pd.Series:
-        n = len(content)
-        sigs = np.zeros((n, num_perm), dtype=np.int64)
-        ok = np.zeros(n, dtype=bool)
-        for i, text in enumerate(content):
-            if text is None or (max_size is not None and len(text) > max_size):
-                continue  # F6 hash-cost gate → never similar
-            if use_oph:
-                # no np.unique: OPH's per-bin min is multiplicity-
-                # insensitive, so the sort it paid bought nothing
-                h = H.shingle_hashes_u64(text, k)
-                sigs[i] = H.oph_signature(h, num_perm)
-            else:
-                sh = H.shingle_set_u32(text, k)
-                sigs[i] = H.minhash_signature(sh, a, b)
-            ok[i] = True
-        bands = H.band_hashes_from_sigs(sigs, n_bands, n_rows)
-        return pd.Series(
-            [bands[i] if ok[i] else None for i in range(n)]
-        )
-
-    return minhash_bands
-
-
-def with_banded_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Adds ``band_hashes`` in one fused UDF pass — the hot-path
-    equivalent of ``with_band_hashes(with_signatures(...))`` for
-    consumers that never read ``sig`` (the dedup pipeline; the
-    signature-agreement gate is not part of its verify chain)."""
-    from deduplidog_spark.ingest import widen_small_scan
-
-    return widen_small_scan(files).withColumn(
-        "band_hashes", make_minhash_band_udf(cfg)(F.col("content"))
-    )
-
-
 def banded_ingest_scan(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Ingest + signatures + banding in ONE ``mapInPandas`` pass over
     the raw contract table — the minhash pipeline's scan stage (r6).
@@ -136,12 +69,13 @@ def banded_ingest_scan(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
     (size = UTF-8 octet length, n_lines = newline count + 1, sha =
     sha256 hex, the quarantine flag) are computed in the same Python
     batch that shingles and bands the content, so content never
-    re-enters the JVM: the scalar-UDF form (``with_banded_signatures``)
-    evaluates content-bearing rows through ``ArrowEvalPython``, whose
-    passthrough queue buffers every input row — content included —
-    until its Python result returns, and the JVM then still pays
-    sha256 + the line split. One pass, measured 5.4s → 1.8s for the
-    200k-row bench scan stage, bit-identical rows (regression-pinned).
+    re-enters the JVM: a scalar signing UDF evaluates content-bearing
+    rows through ``ArrowEvalPython``, whose passthrough queue buffers
+    every input row — content included — until its Python result
+    returns, and the JVM then still pays sha256 + the line split. One
+    pass, measured 5.4s → 1.8s for the 200k-row bench scan stage, rows
+    identical to ``with_band_hashes(with_signatures(ingest(raw)))``
+    (regression-pinned).
 
     The path-derived columns (filename/ext/stem/norm keys) and the
     row filters are the SAME Catalyst expressions as ``ingest`` —
@@ -172,8 +106,6 @@ def banded_ingest_scan(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
     num_perm = cfg.num_perm
     n_bands = cfg.lsh_bands
     n_rows = cfg.lsh_rows
-    use_oph = cfg.minhash_impl == "oph"
-    a, b = H.minhash_params(num_perm, cfg.seed)
 
     def gen(batches):
         import hashlib
@@ -185,8 +117,6 @@ def banded_ingest_scan(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
             n_lines = [None] * n
             sha = [None] * n
             quar = [False] * n
-            sigs = np.zeros((n, num_perm), dtype=np.int64)
-            ok = np.zeros(n, dtype=bool)
             for i, text in enumerate(contents):
                 if text is None:
                     quar[i] = True  # P2 quarantine: NULL stats, no bands
@@ -195,16 +125,7 @@ def banded_ingest_scan(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
                 size[i] = len(bts)
                 n_lines[i] = text.count("\n") + 1
                 sha[i] = hashlib.sha256(bts).hexdigest()
-                if max_size is not None and len(text) > max_size:
-                    continue  # F6 hash-cost gate → no bands
-                if use_oph:
-                    # no np.unique: OPH min is multiplicity-insensitive
-                    h = H.shingle_hashes_u64(text, k)
-                    sigs[i] = H.oph_signature(h, num_perm)
-                else:
-                    sh = H.shingle_set_u32(text, k)
-                    sigs[i] = H.minhash_signature(sh, a, b)
-                ok[i] = True
+            sigs, ok = H.oph_signatures(contents, k, num_perm, max_size)
             bands = H.band_hashes_from_sigs(sigs, n_bands, n_rows)
             out = pd.DataFrame({nm: pdf[nm] for nm in names})
             out["size"] = pd.array(size, dtype="Int64")

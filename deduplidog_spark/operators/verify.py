@@ -261,50 +261,43 @@ def verify_candidate_pairs(
     if cfg.exact_verify:
         # content is attached in ONE pass over the corpus (r6): a
         # semi-join keeps only rows that appear in a surviving pair,
-        # and both sides of the pair join read that (pair-bounded)
-        # table — the per-side shape scanned the full content column
-        # twice, once under id_a and once under id_b (guide §8:
-        # decide with small rows, then move heavy bytes once). The
-        # gated pair set is lazily checkpointed so its two consumers
-        # (the id set and the outer join) share one evaluation.
+        # and both sides of the pair join read that (pair-bounded,
+        # lazily checkpointed) table — the per-side shape scanned the
+        # full content column twice, once under id_a and once under
+        # id_b (guide §8: decide with small rows, then move heavy bytes
+        # once). The gated pair set is lazily checkpointed so its two
+        # consumers (the id set and the outer join) share one
+        # evaluation.
         out = out.localCheckpoint(eager=False)
         ids = out.select(
             F.explode(F.array("id_a", "id_b")).alias("fid")
         ).distinct()
-        cset = contents.join(ids, "fid", "left_semi")
+        cset = contents.join(ids, "fid", "left_semi").localCheckpoint(eager=False)
+        ca = cset.select(F.col("fid").alias("id_a"), F.col("content").alias("content_a"))
+        cb = cset.select(F.col("fid").alias("id_b"), F.col("content").alias("content_b"))
+        out = out.join(ca, "id_a").join(cb, "id_b")
+        # both verifiers are marked NON-DETERMINISTIC so the threshold
+        # filter cannot be pushed below them — without the mark the
+        # optimizer duplicates the UDF around the pushed filter and
+        # every pair pays the Python stage twice (guide §4.4)
         if substring_mode:
             # verify the actual shared-block length, not global overlap
-            cset = cset.localCheckpoint(eager=False)
-            ca = cset.select(F.col("fid").alias("id_a"), F.col("content").alias("content_a"))
-            cb = cset.select(F.col("fid").alias("id_b"), F.col("content").alias("content_b"))
-            # non-deterministic for the same reason as the Jaccard UDF
-            # below: the lcs_len filter must not duplicate the UDF
             lcs = make_lcs_udf().asNondeterministic()
             out = (
-                out.join(ca, "id_a").join(cb, "id_b")
-                .withColumn("lcs_len", lcs(F.col("content_a"), F.col("content_b")))
+                out.withColumn("lcs_len", lcs(F.col("content_a"), F.col("content_b")))
                 .filter(F.col("lcs_len") >= cfg.effective_substring_min_len)
                 .withColumn("jaccard", F.lit(None).cast("double"))
             )
         else:
-            # pair-bounded content, attached once per side from the
-            # single-scan ``cset``; exact Jaccard via the memoized
-            # shingle-set UDF, marked NON-DETERMINISTIC so the
-            # threshold filter cannot be pushed below it — without the
-            # mark the optimizer duplicates the UDF around the pushed
-            # filter and every pair pays the Python stage twice
-            # (guide §4.4). A sets-as-arrays variant (per-doc shingle
-            # arrays + per-pair intersect) was measured and rejected:
-            # a shingle set is ~4 bytes per CHARACTER of text, so
-            # shipping sets quadruples the pair-stage Arrow traffic
-            # relative to shipping the content itself.
-            cset = cset.localCheckpoint(eager=False)
-            ca = cset.select(F.col("fid").alias("id_a"), F.col("content").alias("content_a"))
-            cb = cset.select(F.col("fid").alias("id_b"), F.col("content").alias("content_b"))
+            # exact Jaccard via the memoized shingle-set UDF. A
+            # sets-as-arrays variant (per-doc shingle arrays + per-pair
+            # intersect) was measured and rejected: a shingle set is ~4
+            # bytes per CHARACTER of text, so shipping sets quadruples
+            # the pair-stage Arrow traffic relative to shipping the
+            # content itself.
             jac = make_jaccard_udf(cfg).asNondeterministic()
             out = (
-                out.join(ca, "id_a").join(cb, "id_b")
-                .withColumn("jaccard", jac(F.col("content_a"), F.col("content_b")))
+                out.withColumn("jaccard", jac(F.col("content_a"), F.col("content_b")))
                 .filter(F.col("jaccard") >= cfg.jaccard_threshold)
                 .drop("content_a", "content_b")
             )

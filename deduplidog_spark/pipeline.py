@@ -42,7 +42,6 @@ from deduplidog_spark.operators.actions import action_plan, run_metrics
 from deduplidog_spark.operators.candidates import lsh_candidate_pairs
 from deduplidog_spark.operators.cluster import connected_components, elect_keepers
 from deduplidog_spark.operators.exact import (
-    exact_dup_pairs,
     exact_dup_pairs_from_groups,
     sha_groups,
     sha_representatives,
@@ -194,6 +193,14 @@ def split_scan(scan: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame 
     )
 
 
+def band_rows(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(fid, band_id, band_hash) rows of a band table — the LSH input
+    of the full run and of an append batch (both sides)."""
+    if cfg.mode == "substring":
+        return ss.explode_fingerprints(bands)
+    return mh.explode_bands(bands)
+
+
 def near_dup_edges(
     files: DataFrame, cfg: DedupConfig, slim: DataFrame, reps: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
@@ -225,12 +232,7 @@ def near_dup_edges(
 
     if cfg.mode not in BAND_MODES:
         raise ValueError(f"near_dup_edges: unsupported mode {cfg.mode!r}")
-    band_rows = (
-        ss.explode_fingerprints(reps)
-        if cfg.mode == "substring"
-        else mh.explode_bands(reps)
-    )
-    pairs, dropped = lsh_candidate_pairs(band_rows, cfg, materialize=_mat)
+    pairs, dropped = lsh_candidate_pairs(band_rows(reps, cfg), cfg, materialize=_mat)
     if cfg.mode == "simhash":
         # verify by Hamming distance (V4 analog), then optional exact Jaccard
         pairs = sh.hamming_filter(pairs, slim, cfg)
@@ -287,7 +289,9 @@ def dedupe(raw: DataFrame, cfg: DedupConfig) -> DedupResult:
     dropped = None
 
     if cfg.mode == "exact":
-        edges = exact_dup_pairs(files)
+        # the groups stay lazy (no stage): the edges are their only
+        # consumer, and exact mode has no rep collapse
+        edges = exact_dup_pairs_from_groups(files, sha_groups(files))
     elif cfg.mode == "name":
         matches = name_date_matches(files_full, cfg)
         if cfg.invert_selection:

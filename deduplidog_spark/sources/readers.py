@@ -21,12 +21,19 @@ from pyspark.sql import functions as F
 
 
 def read_corpus(spark: SparkSession, location: str) -> DataFrame:
-    """Iceberg table name (catalog.db.table) or parquet path."""
+    """Iceberg table name (catalog.db.table) or parquet path. A name
+    without ``/`` is read as a table first; when that fails it is
+    read as a parquet path, and if that fails too the parquet error is
+    raised from the table error, so a missing catalog or table is not
+    reported as a missing path only."""
     if "/" not in location:
         try:
             return spark.read.table(location)
-        except Exception:
-            pass  # no Iceberg catalog in this environment — parquet path expected
+        except Exception as table_err:
+            try:
+                return spark.read.parquet(location)
+            except Exception as parquet_err:
+                raise parquet_err from table_err
     return spark.read.parquet(location)
 
 

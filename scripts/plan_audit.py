@@ -198,7 +198,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from deduplidog_spark.operators.exact import sha_groups, sha_representatives
-    from deduplidog_spark.pipeline import near_dup_edges, scan_tables, split_scan
+    from deduplidog_spark.pipeline import band_rows, near_dup_edges, scan_tables, split_scan
 
     cfg_full = DedupConfig(mode="minhash", jaccard_threshold=0.5,
                            sig_est_threshold=0.35)
@@ -322,7 +322,6 @@ def main() -> None:
 
     # ---- 5. incremental append: base probed map-side, no base shuffle -----
     from deduplidog_spark.incremental import (
-        _explode,
         base_sha_probe,
         fresh_reps,
         incremental_candidate_pairs,
@@ -337,7 +336,7 @@ def main() -> None:
         E._docs_as_files(raw_docs.filter(F.col("doc_id") % 2 == 1)), cfg_full
     )[1], cfg_full)
     ipairs, _idrop = incremental_candidate_pairs(
-        _explode(batch_bands, cfg_full), _explode(base_bands, cfg_full), cfg_full,
+        band_rows(batch_bands, cfg_full), band_rows(base_bands, cfg_full), cfg_full,
     )
     iplan = formatted_plan(ipairs)
     ibad = exchanges_carrying(iplan, "content")

@@ -25,26 +25,25 @@ def test_jaccard_identity_and_disjoint():
     assert H.jaccard_of_texts("aaaaaaaa", "zzzzzzzz", 5) == 0.0
 
 
-def test_minhash_estimates_jaccard():
-    rng = np.random.RandomState(7)
-    words = ["tok%d" % i for i in range(500)]
-    base = " ".join(rng.choice(words, 300))
-    # variant sharing most content
-    var = base[: int(len(base) * 0.8)] + " " + " ".join(rng.choice(words, 60))
-    true_j = H.jaccard_of_texts(base, var, 5)
-    a, b = H.minhash_params(128, 42)
-    sa = H.minhash_signature(H.shingle_set_u32(base, 5), a, b)
-    sb = H.minhash_signature(H.shingle_set_u32(var, 5), a, b)
-    est = float(np.mean(sa == sb))
-    assert abs(est - true_j) < 0.12  # 128 perms → σ ≈ sqrt(j(1-j)/128) ≈ 0.04
-
-
-def test_minhash_chunking_invariant():
-    a, b = H.minhash_params(64, 1)
-    s = H.shingle_set_u32("the quick brown fox jumps over the lazy dog" * 50, 5)
-    full = H.minhash_signature(s, a, b, chunk=1 << 20)
-    small = H.minhash_signature(s, a, b, chunk=7)
-    assert np.array_equal(full, small)
+def test_oph_estimates_jaccard():
+    """The one MinHash kernel (OPH, ``oph_signatures``): the fraction
+    of agreeing bins estimates shingle Jaccard, and NULL or over-size
+    texts are not signed."""
+    for seed in (1, 2, 3, 7, 11):
+        rng = np.random.RandomState(seed)
+        words = ["tok%d" % i for i in range(500)]
+        base = " ".join(rng.choice(words, 300))
+        # variant sharing most content
+        var = base[: int(len(base) * 0.8)] + " " + " ".join(rng.choice(words, 60))
+        true_j = H.jaccard_of_texts(base, var, 5)
+        sigs, ok = H.oph_signatures([base, var], 5, 128)
+        assert ok.all()
+        est = float(np.mean(sigs[0] == sigs[1]))
+        assert abs(est - true_j) < 0.12  # 128 bins → σ ≈ sqrt(j(1-j)/128) ≈ 0.04
+    sigs, ok = H.oph_signatures([None, "x" * 50, "y" * 10], 5, 64, max_size=20)
+    assert ok.tolist() == [False, False, True]
+    assert not sigs[:2].any()
+    assert np.array_equal(sigs[2], H.oph_signature(H.shingle_hashes_u64("y" * 10, 5), 64))
 
 
 def test_simhash_near_texts_low_hamming():
@@ -224,11 +223,11 @@ def test_vectorized_levenshtein_shared_affixes(core, edit, data):
 
 
 def test_numpy_band_hashes_match_jvm_xxhash64(spark):
-    """The fused signature+banding UDF (minhash.with_banded_signatures)
-    must produce bit-identical band values to the two-step JVM path
-    (with_band_hashes over with_signatures) — the banding replica
-    (hashing.band_hashes_from_sigs) replays catalyst XXH64.hashLong
-    folding with seed 42, including negative signature values."""
+    """The numpy banding kernel (hashing.band_hashes_from_sigs, used by
+    the fused scan) must be bit-identical to the JVM ``xxhash64``
+    banding: it replays catalyst XXH64.hashLong folding with seed 42,
+    including negative signature values. The JVM path leaves a
+    NULL-content row without bands."""
     from pyspark.sql import functions as F
 
     from deduplidog_spark.config import DedupConfig
@@ -256,8 +255,7 @@ def test_numpy_band_hashes_match_jvm_xxhash64(spark):
     )
     assert np.array_equal(jvm, H.band_hashes_from_sigs(sig, bands, r))
 
-    # end-to-end: fused UDF == two-step path on real text, incl. the
-    # NULL-content gate row
+    # the JVM path on real text: the NULL-content row gets no bands
     rows = [("a", "def foo(): return 1 " * 8), ("b", None), ("c", "x" * 40)]
     files = spark.createDataFrame(rows, "fid string, content string")
     cfg = DedupConfig(mode="minhash", shingle_k=5)
@@ -267,11 +265,5 @@ def test_numpy_band_hashes_match_jvm_xxhash64(spark):
         .select("fid", "band_hashes")
         .collect()
     }
-    fused = {
-        r["fid"]: r["band_hashes"]
-        for r in mh.with_banded_signatures(files, cfg)
-        .select("fid", "band_hashes")
-        .collect()
-    }
-    assert fused == two_step
-    assert fused["b"] is None
+    assert two_step["b"] is None
+    assert two_step["a"] is not None and two_step["c"] is not None

@@ -453,6 +453,23 @@ def test_sidecar_time_sets_exists_predicate(spark):
     assert rows["a/IMG_003.jpg"] is None  # left join keeps sidecar-less rows
 
 
+def test_read_corpus_chains_the_table_error(spark):
+    """A bare name that is neither a table nor a parquet path raises
+    the parquet error with the table lookup's error as its cause, so
+    the catalog failure is not hidden behind "path does not exist"."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from deduplidog_spark.sources.readers import read_corpus
+
+    with pytest.raises(AnalysisException) as err:
+        read_corpus(spark, "no_such_tbl")
+    cause = err.value.__cause__
+    assert isinstance(cause, AnalysisException)
+    assert "TABLE_OR_VIEW_NOT_FOUND" in str(cause)
+    assert "no_such_tbl" in str(cause)
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as e
 

@@ -229,9 +229,10 @@ def test_corpus_c_recall_vs_brute_force(spark):
 
 def test_banded_ingest_scan_matches_jvm_path(spark):
     """The fused mapInPandas scan (ingest stats + signatures + banding
-    in Python) must be row-identical to the JVM ingest + banding UDF
-    path on every column, including the quarantine (NULL content) and
-    F6 hash-cost-gate rows."""
+    in Python) must be row-identical to the reference chain — JVM
+    ingest, the signature UDF and JVM banding — on every column,
+    including the quarantine (NULL content) and F6 hash-cost-gate
+    rows."""
     from pyspark.sql import functions as F
 
     from deduplidog_spark.ingest import ingest
@@ -252,7 +253,9 @@ def test_banded_ingest_scan_matches_jvm_path(spark):
         "content string, mtime timestamp, is_symlink boolean",
     )
     cfg = DedupConfig(mode="minhash", shingle_k=5, hash_max_size=200)
-    jvm = mh.with_banded_signatures(ingest(raw, cfg), cfg).drop("content", "sig")
+    jvm = mh.with_band_hashes(mh.with_signatures(ingest(raw, cfg), cfg), cfg).drop(
+        "content", "sig"
+    )
     fast = mh.banded_ingest_scan(raw, cfg)
     cols = sorted(jvm.columns)
     assert sorted(fast.columns) == cols
