@@ -94,7 +94,6 @@ class DedupConfig:
     # gates pairs before the expensive content verify; None = off
     line_delta_max: int | None = None
     hash_max_size: int | None = None  # F6: no signature above N bytes
-    seed: int = 42
 
     # --- scale / checkpointing (north_rule)
     checkpoint_dir: str | None = None

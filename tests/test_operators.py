@@ -457,7 +457,6 @@ def test_read_corpus_chains_the_table_error(spark):
     """A bare name that is neither a table nor a parquet path raises
     the parquet error with the table lookup's error as its cause, so
     the catalog failure is not hidden behind "path does not exist"."""
-    import pytest
     from pyspark.errors import AnalysisException
 
     from deduplidog_spark.sources.readers import read_corpus
