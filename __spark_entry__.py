@@ -584,7 +584,8 @@ def q_winnow_fingerprints(spark, sf_dir):
 
 
 def q_connected_components(spark, sf_dir):
-    """§2.9 clustering (hash-min label propagation, cluster.py:27-85),
+    """§2.9 clustering (cluster.connected_components: union-find, or
+    hash-min rounds with a union-find finish on graphs past one task),
     DuckDB-oracled: the edge set is SQL-expressible — exact-dup star
     edges (sha equality) ∪ near edges (3-gram Jaccard ≥ 0.5 between
     nearby doc ids) — so the oracle closes it with WITH RECURSIVE and
@@ -1596,7 +1597,7 @@ def q_incremental_pipeline(spark, sf_dir):
 
 def q_dedup_embedding(spark, sf_dir):
     """Embedding-cosine dedup END-TO-END (completing the mode family's
-    plan-level oracles): exact cosine ≥ τ pairs → hash-min connected
+    plan-level oracles): exact cosine ≥ τ pairs → connected
     components → min-id keeper, value-checked against a recursive-CTE
     closure over the same pair set. Ids are zero-padded before CC so
     string min-label order equals numeric order."""

@@ -110,9 +110,11 @@ class DedupConfig:
     # key on sha/fid (uniform by construction) and LSH skew is handled
     # by sha-collapse + max_bucket_size + AQE; `candidates.salt_column`
     # is the helper for user aggregations over genuinely hot keys.
-    # round cap of the full-run hash-min CC (cluster.connected_components,
-    # which raises when it is exhausted); append batches resolve their
-    # contracted graph by union-find, which has no round cap
+    # round cap of the full-run CC's hash-min phase
+    # (cluster.connected_components): a graph that fits one union-find
+    # task takes no rounds, a larger one runs rounds until its residual
+    # fits, and it raises when none fits within this many; append
+    # batches resolve their contracted graph by union-find alone
     cc_max_iterations: int = 20
 
     def __post_init__(self) -> None:

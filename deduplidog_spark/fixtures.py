@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import random
 import string
+import zlib
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import types as T
@@ -233,7 +234,7 @@ def corpus_c_rows(
             elif roll < boilerplate_frac + 0.05:
                 # exact copy class: same content planted across repos
                 g = f"exact_{rng.randrange(10)}"
-                content = _text(token_stream(hash(g) % (2**31), doc_tokens))
+                content = _text(token_stream(zlib.crc32(g.encode()) % (2**31), doc_tokens))
                 exact_groups.setdefault(g, []).append(fid)
             elif roll < boilerplate_frac + 0.05 + 0.08:
                 # near-dup: base + variant pair inside this row + a twin row

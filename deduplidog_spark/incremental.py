@@ -269,10 +269,12 @@ def incremental_labels(
             F.coalesce("id_b_node", "id_b").alias("id_b"),
         )
     )
+    # materialized once: both the members and the unlabelled probe read
+    # it, and each would otherwise run its own union-find task
     roots = F.broadcast(
-        union_find_components(contracted).select(
-            F.col("fid").alias("node"), F.col("component").alias("root")
-        )
+        union_find_components(contracted)
+        .toDF("node", "root")
+        .localCheckpoint(eager=False)
     )
     members = base_labels.join(
         roots, F.col("component") == F.col("node")

@@ -5,27 +5,21 @@ first processed file consumes its match, tombstones it (passed_away,
 deduplidog.py:224,494), and later files skip it — net effect, each
 similarity component collapses to one surviving original plus N
 affected duplicates. We make that explicit and order-independent:
-verified pairs are edges; hash-min label propagation finds components;
-a window elects one keeper per component.
+verified pairs are edges; connected components group them; a window
+elects one keeper per component. Component id = min member fid on
+every path.
 
-Hash-min propagation (the alternating-star idea of Kiveris et al.,
-"Connected Components in MapReduce and Beyond" — see PAPERS.md) in pure
-DataFrame ops: each round every node takes the min label among itself,
-its neighbors and its label's label; iterate until a round changes
-nothing. Exact groups emit star edges and LSH cliques are shallow, so
-those converge in a few rounds; a long near-dup chain whose fids are
-not in chain order needs rounds of the order of half its length (see
-``connected_components``).
-``localCheckpoint`` truncates lineage each round — without it the plan
-doubles per iteration and the driver OOMs at scale.
-
-Which routine applies where: ``connected_components`` is the full-run
-CC (``pipeline.dedupe``), sized for corpus graphs — every round is a
-distributed join, so no single task ever holds the graph.
-``union_find_components`` is the append-batch CC
-(``incremental.incremental_labels``): a batch's graph contracted to its
-base components has at most the batch's edge count, so one task
-resolves it in one job instead of a round loop of jobs.
+Which routine applies where: ``union_find_components`` resolves a graph
+that fits one task (``UNION_FIND_MAX_EDGES``) in one job. The full-run
+CC, ``connected_components`` (``pipeline.dedupe``, multimodal, the
+query suite), hands it the whole edge table when that fits, and
+otherwise runs distributed hash-min rounds (the label-propagation
+setting of Kiveris et al., "Connected Components in MapReduce and
+Beyond" — see PAPERS.md) until the graph contracted to the current
+labels fits, then finishes with it. The append-batch CC
+(``incremental.incremental_labels``) contracts a batch's graph to its
+base components, which leaves at most the batch's edge count, and
+resolves that with it directly.
 """
 
 from __future__ import annotations
@@ -35,6 +29,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# The most edges one union-find task takes. ``_union_find`` on one core
+# measured 0.2 s at 87.5k edges, 4.9 s at 875k and 32 s at 3.5M on
+# shuffled-fid paths: the limit keeps the single task near 5 s, past
+# which its cost grows faster than the edge count (6.5x for 4x the
+# edges) on one core while hash-min rounds spread over the cluster.
+UNION_FIND_MAX_EDGES = 875_000
+
 
 def connected_components(
     edges: DataFrame,
@@ -43,64 +44,55 @@ def connected_components(
     assume_unique_edges: bool = False,
 ) -> DataFrame:
     """Edges (id_a, id_b) → labels (fid, component) for every node that
-    appears in an edge. Component id = min member fid (deterministic).
+    appears in an edge. Component id = min member fid (deterministic),
+    the same labels as ``union_find_components``.
 
-    Shuffle profile per round: one groupBy(fid) over the undirected
-    edge list joined with current labels — keys are file ids (unique,
-    no skew) — plus one label self-join feeding the SAME aggregation
-    (see below). Early-exits when an iteration changes no label.
+    The undirected edge table (each edge in both directions) is
+    materialized and counted: the count job computes and caches it.
+    When it holds at most ``UNION_FIND_MAX_EDGES`` edges, one
+    ``union_find_components`` task resolves it: two jobs, no rounds.
 
-    Convergence: each round's aggregation takes the min over the
-    node's own label, its neighbors' labels, AND its label's label (a
-    pointer-doubling shortcut row from a labels⋈labels self-join on
-    component = fid — label values are always node ids inside the
-    component, so the shortcut stays within it and only decreases
-    toward the min). The shortcut halves a chain only when its fids
-    are in chain order: a pure-Python replay of this round rule needs
-    12 rounds on a fid-ordered 1,000-node path and 17 on a 20,000-node
-    one. With the fids shuffled along the path it saves far less — 10
-    seeds each needed 7-12 rounds at 20 nodes, 14-27 at 40 and 23-55
-    at 80 — so a near-dup chain of ~40 versions whose paths do not
-    sort in edit order can exhaust the default cap of 20. Star- and
-    clique-shaped components (exact groups, LSH buckets) converge in a
-    few rounds. The shortcut join's probe side is skewed by
-    construction (one hot key per large component) — AQE skew-join
-    splitting (on in session.get_spark) spreads it, and the hot key
-    collapses to the fixed point within a few rounds anyway.
+    A larger graph takes hash-min rounds: each node takes the min label
+    among itself, its neighbors and its label's label (a pointer-
+    doubling shortcut from a labels⋈labels self-join on component =
+    fid — label values are always node ids inside the component, so
+    the shortcut stays within it and only decreases toward the min).
+    Shuffle profile per round: one groupBy(fid) over the edge list
+    joined with current labels, plus the shortcut join feeding the
+    same aggregation. Its probe side is skewed by construction (one hot
+    key per large component); AQE skew-join splitting (on in
+    session.get_spark) spreads it.
 
-    Exhausting ``max_iterations`` without converging raises
-    RuntimeError (the last round's probe is free): returning the
-    unconverged table would hand the caller silently WRONG cluster
-    assignments — one true component split into many — which keeper
-    election and the action plan would then act on.
+    After each round the edges whose endpoints' labels still differ,
+    contracted to (label, label) pairs, form the residual graph; its
+    count is the round's one probe job (two joins of the edge table
+    with the round's labels and a distinct), which also computes and
+    caches the lazily materialized round table. An empty residual
+    means the labels are final. Once the residual fits one task,
+    ``union_find_components`` resolves it and every label relabels
+    through that node → root map. Rounds alone would need rounds of
+    the order of half a chain's length when its fids are not in chain
+    order (a pure-Python replay: 23-55 at 80 nodes, 196-630 at 1,000);
+    the residual of such a 1,000-node chain holds about 170 edges after
+    4 rounds.
 
-    Driver-barrier budget (the latency floor at scale): each round's
-    label table carries its OWN previous label as an aggregated column,
-    so the convergence probe is a filter-count over the just-
-    checkpointed table — no extra join job per round (the round-1
-    version re-joined old vs new labels: one more shuffle per round).
-    Every round is materialized and probed: the probe is a
-    filter-count over the round table — and (r6) it IS the round's
-    materialization job, since the round tables are lazy local
-    checkpoints and the full-scan count computes and caches them —
-    while a redundant round is two joins + an aggregation.
+    ``max_iterations`` bounds the round phase only: when no residual
+    fits within that many rounds this raises RuntimeError, because
+    returning the unconverged table would hand the caller silently
+    WRONG cluster assignments — one true component split into many —
+    which keeper election and the action plan would then act on.
 
-    ``materialize(df, tag)`` is the per-round lineage-truncation hook:
-    default ``localCheckpoint`` (fast, but pinned to executor storage —
-    an executor loss kills the chain). The pipeline passes a durable
-    parquet/table hook when a checkpoint target is configured
-    (``pipeline._cc_materializer``), so long CC chains at cluster scale
-    survive executor loss AND resume across driver restarts (tested:
-    a rerun reproduces labels from the round tables alone without
-    re-evaluating the edge plan).
+    ``materialize(df, tag)`` is the lineage-truncation hook, called
+    with the tags ``edges``, ``r<i>`` and ``contracted<i>`` per
+    round, and ``uf`` for labels a union-find produced. Default
+    ``localCheckpoint(eager=False)``: the count or probe job that
+    first scans a table computes and caches it, so materializing adds
+    no job. The pipeline passes a durable parquet/table hook when a
+    checkpoint target is configured (``pipeline._cc_materializer``),
+    so a rerun reproduces labels from the stage tables alone without
+    re-evaluating the edge plan (tested).
     """
     if materialize is None:
-        # eager=False everywhere (r6): the convergence probe is a FULL
-        # filter-count (not limit(1) — see below), so the probe job
-        # itself materializes the round table it probes: one job per
-        # round instead of a checkpoint job plus a probe job, and the
-        # driver pays one plan compilation per round instead of two.
-        # The edge list is consumed by round 0's full-scan aggregation.
         materialize = (  # noqa: E731
             lambda df, tag: df.localCheckpoint(eager=False)
         )
@@ -117,99 +109,74 @@ def connected_components(
     ).select("e.src", "e.dst")
     und = und.filter(F.col("src") != F.col("dst"))
     if not assume_unique_edges:
-        # labels are invariant to edge multiplicity (min over a
-        # repeated neighbor is the min), so the dedup exists purely to
-        # keep the per-round shuffle volume proportional to the
-        # DISTINCT edge set — worth one up-front exchange for unknown
-        # callers. Every library pipeline emits canonical (id_a <
-        # id_b) duplicate-free edges by construction and passes
-        # ``assume_unique_edges=True``, skipping this full edge
-        # shuffle per CC run (r6).
+        # labels are invariant to edge multiplicity, so the dedup exists
+        # to keep the edge count and the per-round shuffle volume
+        # proportional to the DISTINCT edge set — one up-front exchange
+        # for unknown callers. Every library pipeline emits canonical
+        # (id_a < id_b) duplicate-free edges and skips it.
         und = und.distinct()
     und = materialize(und, "edges")
+    if und.count() <= 2 * UNION_FIND_MAX_EDGES:
+        one_way = und.filter(F.col("src") < F.col("dst"))
+        return materialize(
+            union_find_components(one_way.toDF("id_a", "id_b")), "uf"
+        )
 
-    labels = None
     for i in range(max_iterations):
         if i == 0:
-            # FUSED round 0: initial labels are the identity map
-            # (component == fid), so min(self ∪ neighbor labels) =
-            # least(src, min(dst)) and the shortcut term label(label(x))
-            # is the identity too — the whole round is ONE map-side-
-            # combinable aggregation over the edge list, replacing the
-            # old round-0 shape (a distinct job to seed labels + the
-            # nbr join + the identity shortcut join + the groupBy:
-            # three shuffles and two joins that computed exactly this)
-            new_labels = und.groupBy("src").agg(
-                F.min("dst").alias("_mn")
-            ).select(
+            # initial labels are the identity map, so the round is one
+            # map-side-combinable aggregation: least(src, min(dst))
+            new_labels = und.groupBy("src").agg(F.min("dst").alias("_mn")).select(
                 F.col("src").alias("fid"),
                 F.least(F.col("src"), F.col("_mn")).alias("component"),
-                F.col("src").alias("prev"),
             )
         else:
-            # neighbor labels: for each edge (src,dst), dst's current
-            # label; the node's own label rides along flagged is_self so
-            # the same aggregation yields (new component, previous)
             nbr = und.join(
-                labels.withColumnRenamed("fid", "dst").withColumnRenamed(
-                    "component", "nbr_component"
-                ),
-                "dst",
-            ).select(
-                F.col("src").alias("fid"),
-                "nbr_component",
-                F.lit(False).alias("is_self"),
-            )
-            own = labels.select(
-                "fid",
-                F.col("component").alias("nbr_component"),
-                F.lit(True).alias("is_self"),
-            )
-            # pointer-doubling shortcut: for node x labeled c, c's own
-            # label rides into x's min — one labels⋈labels join into the
-            # same aggregation, collapsing chains exponentially
+                labels.toDF("dst", "candidate"), "dst"
+            ).select(F.col("src").alias("fid"), "candidate")
+            own = labels.toDF("fid", "candidate")
+            # pointer-doubling shortcut: x's label's label rides into
+            # x's min, collapsing chains whose fids are in chain order
             shortcut = labels.join(
-                labels.select(
-                    F.col("fid").alias("component"),
-                    F.col("component").alias("nbr_component"),
-                ),
-                "component",
-            ).select("fid", "nbr_component", F.lit(False).alias("is_self"))
+                labels.toDF("component", "candidate"), "component"
+            ).select("fid", "candidate")
             new_labels = (
                 nbr.union(own)
                 .union(shortcut)
                 .groupBy("fid")
-                .agg(
-                    F.min("nbr_component").alias("component"),
-                    F.max(F.when(F.col("is_self"), F.col("nbr_component"))).alias("prev"),
-                )
+                .agg(F.min("candidate").alias("component"))
             )
-        new_labels = materialize(new_labels, f"r{i}")
-        # FULL count, deliberately not limit(1): scanning every
-        # partition makes this probe the job that computes and caches
-        # the (lazy-checkpointed) round table — a limit probe would
-        # leave unscanned partitions uncached and the next round would
-        # recompute them from lineage. The count of changed labels
-        # costs the same one job the old materialize+limit pair spread
-        # over two.
-        changed = (
-            new_labels.filter(F.col("component") != F.col("prev"))
-            .count()
+        # (fid, component) only: a round table written by an earlier
+        # version of this loop under the same checkpoint carries more
+        labels = materialize(new_labels, f"r{i}").select("fid", "component")
+        # the edges still open, contracted to their endpoints' labels
+        residual = materialize(
+            und.join(labels.toDF("src", "id_a"), "src")
+            .join(labels.toDF("dst", "id_b"), "dst")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct(),
+            f"contracted{i}",
         )
-        if changed == 0:
-            labels = new_labels.select("fid", "component")
-            break
-        if i == max_iterations - 1:
-            raise RuntimeError(
-                f"connected_components did not converge within "
-                f"max_iterations={max_iterations} — the label table "
-                "is still changing, so returning it would silently "
-                "split true components; raise max_iterations (a chain "
-                "whose fids are not in chain order needs rounds of the "
-                "order of half its length)"
+        open_edges = residual.count()
+        if open_edges == 0:
+            return labels
+        if open_edges <= UNION_FIND_MAX_EDGES:
+            roots = union_find_components(residual).toDF("component", "root")
+            return materialize(
+                labels.join(roots, "component", "left").select(
+                    "fid", F.coalesce("root", "component").alias("component")
+                ),
+                "uf",
             )
-        labels = new_labels.select("fid", "component")
-    return labels
+    raise RuntimeError(
+        "connected_components did not converge: after "
+        f"max_iterations={max_iterations} hash-min rounds the residual "
+        "graph still has more than UNION_FIND_MAX_EDGES="
+        f"{UNION_FIND_MAX_EDGES} edges, so no union-find task can finish "
+        "it, and returning the labels would silently split true "
+        "components; raise max_iterations"
+    )
 
 
 def _union_find(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -249,11 +216,11 @@ def union_find_components(edges: DataFrame) -> DataFrame:
     ``connected_components``, computed in ONE task (a single-group
     ``applyInPandas``) with one job and no round loop.
 
-    For graphs that fit one task — an append batch's edges contracted
-    to their base components (``incremental.incremental_labels``), at
-    most the batch's edge count. Like there, self-loops are dropped
-    and duplicate edges are harmless. Corpus-sized graphs take
-    ``connected_components``."""
+    For graphs of at most ``UNION_FIND_MAX_EDGES`` edges: an append
+    batch's edges contracted to their base components
+    (``incremental.incremental_labels``), and the full run's edge table
+    or its residual after hash-min rounds (``connected_components``).
+    Self-loops are dropped and duplicate edges are harmless."""
     return (
         edges.filter(F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b")

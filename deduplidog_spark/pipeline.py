@@ -124,16 +124,18 @@ def _with_fid(df: DataFrame) -> DataFrame:
 
 
 def _cc_materializer(cfg: DedupConfig):
-    """Per-round materialization hook for connected_components.
+    """Materialization hook for connected_components.
 
-    With a checkpoint target configured, each CC round's label table
-    goes through the same durable parquet/table path as every other
-    stage (``cc_edges``, ``cc_r0``, ``cc_r1``, …) — localCheckpoint
-    pins round state in executor storage, so a single executor loss
-    late in a long chain would force the whole iteration over at
-    cluster scale; a driver restart resumes from the completed round
-    tables (same fingerprint-keyed reuse semantics as the ``scan``
-    stage). Without a target: None → localCheckpoint rounds."""
+    With a checkpoint target configured, the CC edge table, its
+    union-find labels and, on graphs past one union-find task, each
+    round's label and residual tables go through the same durable
+    parquet/table path as every other stage (``cc_edges``, ``cc_uf``,
+    ``cc_r0``, ``cc_contracted0``, …) — localCheckpoint pins that
+    state in executor storage, so a single executor loss late in a
+    long chain would force the whole iteration over at cluster scale;
+    a driver restart resumes from the completed tables (same
+    fingerprint-keyed reuse semantics as the ``scan`` stage). Without
+    a target: None → localCheckpoint."""
     if not (cfg.checkpoint_dir or cfg.checkpoint_table_prefix):
         return None
     return lambda df, tag: _ckpt(df, cfg, f"cc_{tag}")

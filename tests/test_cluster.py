@@ -1,9 +1,13 @@
 """Connected-components + keeper election unit tests."""
 
+import random
 from datetime import timedelta
+
+import pytest
 
 from deduplidog_spark import DedupConfig
 from deduplidog_spark import fixtures as FX
+from deduplidog_spark.operators import cluster
 from deduplidog_spark.operators.cluster import (
     connected_components,
     elect_keepers,
@@ -15,47 +19,107 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "id_a string, id_b string")
 
 
-def test_cc_chain_and_islands(spark):
+def _both_paths(monkeypatch, forced_limit, finish=True, inner=None):
+    """Yields a recording ``materialize`` hook (wrapping ``inner``, a
+    local checkpoint by default) once per full-run CC path, for one
+    ``connected_components`` call each, and checks the path that call
+    took. Under the default limit every graph of these tests fits one
+    union-find task: the hook sees ``edges`` and ``uf`` only. Under
+    ``forced_limit``, below the test graph's edge count, it takes
+    hash-min rounds and, when ``finish``, a union-find finish of its
+    residual, else converges in the rounds."""
+    default = cluster.UNION_FIND_MAX_EDGES
+    inner = inner or (lambda df, tag: df.localCheckpoint(eager=False))
+    for limit in (default, forced_limit):
+        monkeypatch.setattr(cluster, "UNION_FIND_MAX_EDGES", limit)
+        tags = []
+
+        def materialize(df, tag, tags=tags):
+            tags.append(tag)
+            return inner(df, tag)
+
+        yield materialize
+        if limit == default:
+            assert tags == ["edges", "uf"]
+        else:
+            assert tags[:2] == ["edges", "r0"], tags
+            assert (tags[-1] == "uf") == finish, tags
+
+
+def _labels(df):
+    return {r.fid: r.component for r in df.collect()}
+
+
+def test_cc_chain_and_islands(spark, monkeypatch):
     # a-b-c-d chain + isolated pair e-f; g never appears
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("e", "f")])
-    labels = {r.fid: r.component for r in connected_components(e).collect()}
-    assert labels == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e", "f": "e"}
+    for mat in _both_paths(monkeypatch, forced_limit=2):
+        labels = _labels(connected_components(e, materialize=mat))
+        assert labels == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e", "f": "e"}
 
 
-def test_cc_converges_on_cycle(spark):
+def test_cc_converges_on_cycle(spark, monkeypatch):
+    # on the round path a triangle converges in round 0: nothing to finish
     e = _edges(spark, [("x", "y"), ("y", "z"), ("z", "x")])
-    labels = {r.fid: r.component for r in connected_components(e).collect()}
-    assert set(labels.values()) == {"x"}
+    for mat in _both_paths(monkeypatch, forced_limit=1, finish=False):
+        assert set(_labels(connected_components(e, materialize=mat)).values()) == {"x"}
 
 
-def test_cc_long_path_needs_iterations(spark):
+def test_cc_long_path_needs_iterations(spark, monkeypatch):
     n = 12
     e = _edges(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)])
-    labels = {r.fid: r.component for r in connected_components(e, max_iterations=30).collect()}
-    assert set(labels.values()) == {"n00"}
-    assert len(labels) == n + 1
+    for mat in _both_paths(monkeypatch, forced_limit=n // 2):
+        labels = _labels(connected_components(e, max_iterations=30, materialize=mat))
+        assert set(labels.values()) == {"n00"}
+        assert len(labels) == n + 1
 
 
-def test_cc_chain_longer_than_cap_converges_via_shortcut(spark):
+def test_cc_chain_longer_than_cap_converges_via_shortcut(spark, monkeypatch):
     """Pointer-doubling regression pin: a 60-node chain (gradually
     evolving near-dup versions) converges WITHIN the default cap of
     20 — plain neighbor propagation moves the min one hop per round
     and would need 59. Before the shortcut this returned silently
     WRONG labels (one true component split into dozens)."""
     e = _edges(spark, [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)])
-    labels = {r.fid: r.component for r in connected_components(e).collect()}
-    assert set(labels.values()) == {"n000"}
-    assert len(labels) == 60
+    for mat in _both_paths(monkeypatch, forced_limit=29):
+        labels = _labels(connected_components(e, materialize=mat))
+        assert set(labels.values()) == {"n000"}
+        assert len(labels) == 60
 
 
-def test_cc_raises_instead_of_returning_unconverged_labels(spark):
+def test_cc_raises_instead_of_returning_unconverged_labels(spark, monkeypatch):
     """Exhausting max_iterations must raise, never hand keeper
-    election a label table that splits true components."""
-    import pytest
-
+    election a label table that splits true components. A limit of 0
+    edges lets no residual fit a union-find task, so only rounds that
+    fully converge could end the loop."""
+    monkeypatch.setattr(cluster, "UNION_FIND_MAX_EDGES", 0)
     e = _edges(spark, [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(e, max_iterations=2).collect()
+
+
+@pytest.mark.parametrize("n", [80, 1000])
+def test_cc_shuffled_chain_converges_under_default_cap(spark, monkeypatch, n):
+    """A near-dup chain whose fids are not in chain order needs rounds
+    of the order of half its length from hash-min alone; both paths
+    resolve it within the default cap of 20, with union-find labels.
+    The forced limit is n // 5 edges."""
+    rng = random.Random(n)
+    nodes = [f"v{i:04d}" for i in range(n)]
+    rng.shuffle(nodes)
+    e = _edges(spark, [(nodes[i], nodes[i + 1]) for i in range(n - 1)])
+    uf = _labels(union_find_components(e))
+    assert set(uf.values()) == {"v0000"} and len(uf) == n
+    for mat in _both_paths(monkeypatch, forced_limit=n // 5):
+        assert _labels(connected_components(e, materialize=mat)) == uf
+
+
+def test_cc_zero_edges_give_empty_labels(spark, monkeypatch):
+    """No edges, no labels: on the union-find path, and on the round
+    path, forced here by a limit that not even an empty table fits."""
+    e = _edges(spark, [])
+    for mat in _both_paths(monkeypatch, forced_limit=-1, finish=False):
+        assert connected_components(e, materialize=mat).collect() == []
 
 
 def _random_graph(seed):
@@ -66,8 +130,6 @@ def _random_graph(seed):
     depends on the string order ("é" > "z" by code point; an astral
     character > U+FFFF in Spark's UTF-8 byte order, though it sorts
     below it in UTF-16)."""
-    import random
-
     rng = random.Random(seed)
     # a long chain in fid order, and a shorter one in shuffled order
     # (hash-min needs about half its length in rounds)
@@ -87,13 +149,15 @@ def _random_graph(seed):
     return edges
 
 
-def test_union_find_equals_connected_components(spark):
+def test_union_find_equals_connected_components(spark, monkeypatch):
     """The append-batch CC equals the full-run CC, node set and
-    min-fid component ids included, on seeded random graphs."""
+    min-fid component ids included, on seeded random graphs. Only the
+    round path makes this a check: on the default path the full run is
+    this same union-find."""
     e = _edges(spark, _random_graph(3) + _random_graph(11))
-    uf = {r.fid: r.component for r in union_find_components(e).collect()}
-    cc = {r.fid: r.component for r in connected_components(e).collect()}
-    assert uf == cc
+    uf = _labels(union_find_components(e))
+    for mat in _both_paths(monkeypatch, forced_limit=100):
+        assert _labels(connected_components(e, materialize=mat)) == uf
     assert uf["é"] == "z" and uf["\U0001d11e"] == "\uffff"
     assert "lonely" not in uf
 
@@ -163,49 +227,51 @@ def test_keeper_treat_bigger_as_original(spark):
     assert out["r/big_new.txt"].duplicate_of == "r/big_old.txt"
 
 
-def test_cc_durable_rounds_resume_without_recomputing_edges(spark):
+def test_cc_durable_rounds_resume_without_recomputing_edges(spark, monkeypatch):
     """Round-3 VERDICT item 6: with a checkpoint target configured, CC
-    rounds are parquet-backed (cc_edges / cc_r*), so the chain survives
-    executor loss and a rerun resumes from the round tables. Proven by
-    rerunning against the same checkpoint with a POISONED edge input:
-    if any round recomputed from edges instead of reading its stage
-    table, the rerun would raise (or labels would change)."""
+    stages are parquet-backed (cc_edges, cc_uf, and cc_r* per round),
+    so the chain survives executor loss and a rerun resumes from the
+    stage tables. Proven by rerunning against the same checkpoint with
+    a POISONED edge input: if any stage recomputed from edges instead
+    of reading its stage table, the rerun would raise (or labels would
+    change)."""
+    import os
     import tempfile
 
     from pyspark.sql import functions as F
 
     from deduplidog_spark.pipeline import _cc_materializer
 
-    cfg = DedupConfig(
-        mode="minhash", checkpoint_dir=tempfile.mkdtemp(prefix="cc_durable_")
-    )
     e = _edges(spark, [("a", "b"), ("b", "c"), ("e", "f")])
-    mat = _cc_materializer(cfg)
-    assert mat is not None
-    first = {
-        r.fid: r.component
-        for r in connected_components(e, materialize=mat).collect()
-    }
-    assert first == {"a": "a", "b": "a", "c": "a", "e": "e", "f": "e"}
-    # the stage tables are on disk, fingerprint-keyed like every stage
-    import os
-
-    run_dir = os.path.join(cfg.checkpoint_dir, cfg.fingerprint())
-    assert os.path.exists(os.path.join(run_dir, "cc_edges", "_SUCCESS"))
-    assert os.path.exists(os.path.join(run_dir, "cc_r0", "_SUCCESS"))
 
     # "kill the state": a rerun gets an edge plan that fails if it is
-    # ever evaluated — resume must come from the round tables alone
+    # ever evaluated — resume must come from the stage tables alone
     @F.udf("string")
     def boom(x):
         raise RuntimeError("edge plan re-evaluated during resume")
 
     poisoned = e.select(boom("id_a").alias("id_a"), boom("id_b").alias("id_b"))
-    again = {
-        r.fid: r.component
-        for r in connected_components(poisoned, materialize=mat).collect()
-    }
-    assert again == first
+    cfg = None  # a fresh checkpoint target per path
+
+    def durable(df, tag):
+        return _cc_materializer(cfg)(df, tag)
+
+    for forced, mat in enumerate(_both_paths(monkeypatch, forced_limit=1, inner=durable)):
+        cfg = DedupConfig(
+            mode="minhash", checkpoint_dir=tempfile.mkdtemp(prefix="cc_durable_")
+        )
+        assert _cc_materializer(cfg) is not None
+        first = _labels(connected_components(e, materialize=mat))
+        assert first == {"a": "a", "b": "a", "c": "a", "e": "e", "f": "e"}
+        # the stage tables are on disk, fingerprint-keyed like every stage
+        run_dir = os.path.join(cfg.checkpoint_dir, cfg.fingerprint())
+        written = {
+            d for d in os.listdir(run_dir)
+            if os.path.exists(os.path.join(run_dir, d, "_SUCCESS"))
+        }
+        assert {"cc_edges", "cc_uf"} <= written
+        assert ("cc_r0" in written) == bool(forced)
+        assert _labels(connected_components(poisoned, materialize=durable)) == first
 
 
 def test_cc_without_target_still_local(spark):

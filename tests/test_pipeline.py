@@ -227,6 +227,30 @@ def test_corpus_c_recall_vs_brute_force(spark):
     assert recall >= 0.99, f"recall {recall:.3f} over {len(truth)} true pairs"
 
 
+def test_corpus_c_rows_same_in_every_process():
+    """Corpus C is a function of its seed alone: two interpreters with
+    different string-hash salts (PYTHONHASHSEED) build identical rows."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "import hashlib\n"
+        "from deduplidog_spark import fixtures as FX\n"
+        "rows, _ = FX.corpus_c_rows(seed=3)\n"
+        "print(hashlib.sha256(repr([sorted(r.items()) for r in rows]).encode()).hexdigest())\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    digests = {
+        subprocess.run(
+            [sys.executable, "-c", script], cwd=root, check=True, text=True,
+            capture_output=True, env={**os.environ, "PYTHONHASHSEED": salt},
+        ).stdout
+        for salt in ("1", "2")
+    }
+    assert len(digests) == 1
+
+
 def test_banded_ingest_scan_matches_jvm_path(spark):
     """The fused mapInPandas scan (ingest stats + signatures + banding
     in Python) must be row-identical to the reference chain — JVM
