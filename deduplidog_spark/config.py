@@ -112,9 +112,10 @@ class DedupConfig:
     # is the helper for user aggregations over genuinely hot keys.
     # round cap of the full-run CC's hash-min phase
     # (cluster.connected_components): a graph that fits one union-find
-    # task takes no rounds, a larger one runs rounds until its residual
-    # fits, and it raises when none fits within this many; append
-    # batches resolve their contracted graph by union-find alone
+    # task takes no rounds, a larger one runs rounds until they converge
+    # or a residual fits, and it raises when neither happens within
+    # this many; append batches resolve their contracted graph by
+    # union-find alone
     cc_max_iterations: int = 20
 
     def __post_init__(self) -> None:

@@ -15,8 +15,9 @@ CC, ``connected_components`` (``pipeline.dedupe``, multimodal, the
 query suite), hands it the whole edge table when that fits, and
 otherwise runs distributed hash-min rounds (the label-propagation
 setting of Kiveris et al., "Connected Components in MapReduce and
-Beyond" — see PAPERS.md) until the graph contracted to the current
-labels fits, then finishes with it. The append-batch CC
+Beyond" — see PAPERS.md) until they converge or, once a round moves
+few enough labels, the graph contracted to the current labels fits,
+and then finishes with it. The append-batch CC
 (``incremental.incremental_labels``) contracts a batch's graph to its
 base components, which leaves at most the batch's edge count, and
 resolves that with it directly.
@@ -29,12 +30,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# The most edges one union-find task takes. ``_union_find`` on one core
-# measured 0.2 s at 87.5k edges, 4.9 s at 875k and 32 s at 3.5M on
-# shuffled-fid paths: the limit keeps the single task near 5 s, past
-# which its cost grows faster than the edge count (6.5x for 4x the
-# edges) on one core while hash-min rounds spread over the cluster.
-UNION_FIND_MAX_EDGES = 875_000
+# The most edges one union-find task takes, sized by the peak RSS of
+# the Python worker that runs it (Arrow batches, pandas strings,
+# factorized codes and output), measured as VmHWM on local Spark 4.1
+# over shuffled-fid paths. A worker holds about 123 MiB before the
+# task. With ~85-character fids it peaks at 183 MiB at 87.5k edges,
+# 245 MiB at 200k, 365 MiB at 350k and 681 MiB at 875k; with
+# ~165-character fids at 330 MiB at 200k. This limit keeps the peak
+# inside the default executor memoryOverhead of 384 MiB, which holds
+# the Python worker on YARN and Kubernetes; 875k edges, which one
+# core resolves in 5 s, would not fit. Time is no constraint here:
+# ``_union_find`` takes 0.5 s at 200k edges on one core, the whole
+# task about 3 s.
+UNION_FIND_MAX_EDGES = 200_000
 
 
 def connected_components(
@@ -61,30 +69,41 @@ def connected_components(
     joined with current labels, plus the shortcut join feeding the
     same aggregation. Its probe side is skewed by construction (one hot
     key per large component); AQE skew-join splitting (on in
-    session.get_spark) spreads it.
+    session.get_spark) spreads it. Each round's table carries the
+    node's previous label, so its probe is a filter-count of the labels
+    that moved — the job that also computes and caches the lazily
+    materialized round table — and a round that moves none is final.
 
-    After each round the edges whose endpoints' labels still differ,
-    contracted to (label, label) pairs, form the residual graph; its
-    count is the round's one probe job (two joins of the edge table
-    with the round's labels and a distinct), which also computes and
-    caches the lazily materialized round table. An empty residual
-    means the labels are final. Once the residual fits one task,
-    ``union_find_components`` resolves it and every label relabels
-    through that node → root map. Rounds alone would need rounds of
-    the order of half a chain's length when its fids are not in chain
-    order (a pure-Python replay: 23-55 at 80 nodes, 196-630 at 1,000);
-    the residual of such a 1,000-node chain holds about 170 edges after
-    4 rounds.
+    Rounds alone need rounds of the order of half a chain's length
+    when its fids are not in chain order (a pure-Python replay: 23-55
+    at 80 nodes, 196-630 at 1,000). So once a round moves at most
+    ``UNION_FIND_MAX_EDGES`` labels, the edges whose endpoints' labels
+    still differ, contracted to distinct (label, label) pairs, form the
+    residual graph; when it fits, ``union_find_components`` resolves it
+    and every label relabels through that node → root map. Every
+    residual edge has an endpoint whose label moved in the round (if
+    neither moved, each took the min over the other's label, so the
+    two are equal), so the moved count is the probe's free estimate of
+    the residual: replays on chains, cliques and stars found residuals
+    of up to 1.4 times it. A round that moves more labels than one
+    task takes skips the residual's two joins and distinct: it costs
+    its aggregation and the filter-count alone. A shuffled 1,000-node
+    chain moves about 670 labels in its first round and 190 in its
+    sixth, when its residual holds about 110 edges. An empty residual
+    means the labels are final. Rounds after a residual that does not
+    fit run on the full edge table again: rounds on the residual would
+    need their labels composed back onto every node.
 
-    ``max_iterations`` bounds the round phase only: when no residual
-    fits within that many rounds this raises RuntimeError, because
-    returning the unconverged table would hand the caller silently
-    WRONG cluster assignments — one true component split into many —
-    which keeper election and the action plan would then act on.
+    ``max_iterations`` bounds the round phase only: when the labels
+    still move after that many rounds and no residual fit, this
+    raises RuntimeError, because returning the unconverged table would
+    hand the caller silently WRONG cluster assignments — one true
+    component split into many — which keeper election and the action
+    plan would then act on.
 
     ``materialize(df, tag)`` is the lineage-truncation hook, called
-    with the tags ``edges``, ``r<i>`` and ``contracted<i>`` per
-    round, and ``uf`` for labels a union-find produced. Default
+    with the tags ``edges``, ``r<i>`` per round, ``contracted<i>``
+    per residual, and ``uf`` for labels a union-find produced. Default
     ``localCheckpoint(eager=False)``: the count or probe job that
     first scans a table computes and caches it, so materializing adds
     no job. The pipeline passes a durable parquet/table hook when a
@@ -129,26 +148,36 @@ def connected_components(
             new_labels = und.groupBy("src").agg(F.min("dst").alias("_mn")).select(
                 F.col("src").alias("fid"),
                 F.least(F.col("src"), F.col("_mn")).alias("component"),
+                F.col("src").alias("prev"),
             )
         else:
-            nbr = und.join(
-                labels.toDF("dst", "candidate"), "dst"
-            ).select(F.col("src").alias("fid"), "candidate")
-            own = labels.toDF("fid", "candidate")
+            # the node's own label rides along flagged is_self, so the
+            # same aggregation yields (new label, previous label)
+            nbr = und.join(labels.toDF("dst", "candidate"), "dst").select(
+                F.col("src").alias("fid"), "candidate", F.lit(False).alias("is_self")
+            )
+            own = labels.toDF("fid", "candidate").withColumn("is_self", F.lit(True))
             # pointer-doubling shortcut: x's label's label rides into
             # x's min, collapsing chains whose fids are in chain order
             shortcut = labels.join(
                 labels.toDF("component", "candidate"), "component"
-            ).select("fid", "candidate")
+            ).select("fid", "candidate", F.lit(False).alias("is_self"))
             new_labels = (
                 nbr.union(own)
                 .union(shortcut)
                 .groupBy("fid")
-                .agg(F.min("candidate").alias("component"))
+                .agg(
+                    F.min("candidate").alias("component"),
+                    F.max(F.when(F.col("is_self"), F.col("candidate"))).alias("prev"),
+                )
             )
-        # (fid, component) only: a round table written by an earlier
-        # version of this loop under the same checkpoint carries more
-        labels = materialize(new_labels, f"r{i}").select("fid", "component")
+        new_labels = materialize(new_labels, f"r{i}")
+        moved = new_labels.filter(F.col("component") != F.col("prev")).count()
+        labels = new_labels.select("fid", "component")
+        if moved == 0:
+            return labels
+        if moved > UNION_FIND_MAX_EDGES:
+            continue
         # the edges still open, contracted to their endpoints' labels
         residual = materialize(
             und.join(labels.toDF("src", "id_a"), "src")
@@ -171,11 +200,11 @@ def connected_components(
             )
     raise RuntimeError(
         "connected_components did not converge: after "
-        f"max_iterations={max_iterations} hash-min rounds the residual "
-        "graph still has more than UNION_FIND_MAX_EDGES="
-        f"{UNION_FIND_MAX_EDGES} edges, so no union-find task can finish "
-        "it, and returning the labels would silently split true "
-        "components; raise max_iterations"
+        f"max_iterations={max_iterations} hash-min rounds the labels "
+        "still move and no residual graph fit one union-find task "
+        f"(UNION_FIND_MAX_EDGES={UNION_FIND_MAX_EDGES}), so returning "
+        "the labels would silently split true components; raise "
+        "max_iterations"
     )
 
 

@@ -26,8 +26,8 @@ def _both_paths(monkeypatch, forced_limit, finish=True, inner=None):
     took. Under the default limit every graph of these tests fits one
     union-find task: the hook sees ``edges`` and ``uf`` only. Under
     ``forced_limit``, below the test graph's edge count, it takes
-    hash-min rounds and, when ``finish``, a union-find finish of its
-    residual, else converges in the rounds."""
+    hash-min rounds and, when ``finish``, ends with a union-find finish
+    of a non-empty residual, else converges in the rounds alone."""
     default = cluster.UNION_FIND_MAX_EDGES
     inner = inner or (lambda df, tag: df.localCheckpoint(eager=False))
     for limit in (default, forced_limit):
@@ -43,7 +43,10 @@ def _both_paths(monkeypatch, forced_limit, finish=True, inner=None):
             assert tags == ["edges", "uf"]
         else:
             assert tags[:2] == ["edges", "r0"], tags
-            assert (tags[-1] == "uf") == finish, tags
+            if finish:
+                assert tags[-1] == "uf" and tags[-2].startswith("contracted"), tags
+            else:
+                assert tags[-1].startswith("r"), tags
 
 
 def _labels(df):
@@ -68,7 +71,9 @@ def test_cc_converges_on_cycle(spark, monkeypatch):
 def test_cc_long_path_needs_iterations(spark, monkeypatch):
     n = 12
     e = _edges(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)])
-    for mat in _both_paths(monkeypatch, forced_limit=n // 2):
+    # a limit of 8 builds the first residual after round 3 (8 labels
+    # moved); it holds 4 edges
+    for mat in _both_paths(monkeypatch, forced_limit=8):
         labels = _labels(connected_components(e, max_iterations=30, materialize=mat))
         assert set(labels.values()) == {"n00"}
         assert len(labels) == n + 1
@@ -79,9 +84,11 @@ def test_cc_chain_longer_than_cap_converges_via_shortcut(spark, monkeypatch):
     evolving near-dup versions) converges WITHIN the default cap of
     20 — plain neighbor propagation moves the min one hop per round
     and would need 59. Before the shortcut this returned silently
-    WRONG labels (one true component split into dozens)."""
+    WRONG labels (one true component split into dozens). A limit of 1
+    edge admits no residual on this chain, so the forced side pins the
+    shortcut: it converges by rounds alone (8 of them)."""
     e = _edges(spark, [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)])
-    for mat in _both_paths(monkeypatch, forced_limit=29):
+    for mat in _both_paths(monkeypatch, forced_limit=1, finish=False):
         labels = _labels(connected_components(e, materialize=mat))
         assert set(labels.values()) == {"n000"}
         assert len(labels) == 60
@@ -89,9 +96,10 @@ def test_cc_chain_longer_than_cap_converges_via_shortcut(spark, monkeypatch):
 
 def test_cc_raises_instead_of_returning_unconverged_labels(spark, monkeypatch):
     """Exhausting max_iterations must raise, never hand keeper
-    election a label table that splits true components. A limit of 0
-    edges lets no residual fit a union-find task, so only rounds that
-    fully converge could end the loop."""
+    election a label table that splits true components. Under a limit
+    of 0 edges every round that leaves labels moving moves more labels
+    than that, so no residual is built and only rounds that fully
+    converge could end the loop."""
     monkeypatch.setattr(cluster, "UNION_FIND_MAX_EDGES", 0)
     e = _edges(spark, [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)])
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -229,12 +237,12 @@ def test_keeper_treat_bigger_as_original(spark):
 
 def test_cc_durable_rounds_resume_without_recomputing_edges(spark, monkeypatch):
     """Round-3 VERDICT item 6: with a checkpoint target configured, CC
-    stages are parquet-backed (cc_edges, cc_uf, and cc_r* per round),
-    so the chain survives executor loss and a rerun resumes from the
-    stage tables. Proven by rerunning against the same checkpoint with
-    a POISONED edge input: if any stage recomputed from edges instead
-    of reading its stage table, the rerun would raise (or labels would
-    change)."""
+    stages are parquet-backed (cc_edges, cc_uf, cc_r* per round and
+    cc_contracted* per residual), so the chain survives executor loss
+    and a rerun resumes from the stage tables. Proven by rerunning
+    against the same checkpoint with a POISONED edge input: if any
+    stage recomputed from edges instead of reading its stage table,
+    the rerun would raise (or labels would change)."""
     import os
     import tempfile
 
@@ -242,7 +250,7 @@ def test_cc_durable_rounds_resume_without_recomputing_edges(spark, monkeypatch):
 
     from deduplidog_spark.pipeline import _cc_materializer
 
-    e = _edges(spark, [("a", "b"), ("b", "c"), ("e", "f")])
+    e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("e", "f")])
 
     # "kill the state": a rerun gets an edge plan that fails if it is
     # ever evaluated — resume must come from the stage tables alone
@@ -256,13 +264,13 @@ def test_cc_durable_rounds_resume_without_recomputing_edges(spark, monkeypatch):
     def durable(df, tag):
         return _cc_materializer(cfg)(df, tag)
 
-    for forced, mat in enumerate(_both_paths(monkeypatch, forced_limit=1, inner=durable)):
+    for forced, mat in enumerate(_both_paths(monkeypatch, forced_limit=2, inner=durable)):
         cfg = DedupConfig(
             mode="minhash", checkpoint_dir=tempfile.mkdtemp(prefix="cc_durable_")
         )
         assert _cc_materializer(cfg) is not None
         first = _labels(connected_components(e, materialize=mat))
-        assert first == {"a": "a", "b": "a", "c": "a", "e": "e", "f": "e"}
+        assert first == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e", "f": "e"}
         # the stage tables are on disk, fingerprint-keyed like every stage
         run_dir = os.path.join(cfg.checkpoint_dir, cfg.fingerprint())
         written = {
@@ -271,6 +279,7 @@ def test_cc_durable_rounds_resume_without_recomputing_edges(spark, monkeypatch):
         }
         assert {"cc_edges", "cc_uf"} <= written
         assert ("cc_r0" in written) == bool(forced)
+        assert ("cc_contracted1" in written) == bool(forced)
         assert _labels(connected_components(poisoned, materialize=durable)) == first
 
 
