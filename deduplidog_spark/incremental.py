@@ -31,8 +31,9 @@ Cost model per batch (B = batch size, N = base size, B << N):
   list is batch-sized whatever the size of the components it touches;
 - connected components run on those edges CONTRACTED to base
   components (``incremental_labels``): one edge per new edge, resolved
-  by union-find in one task (components can merge when a batch doc
-  bridges two of them — handled, tested); members of touched
+  by ``connected_components`` — one union-find task while the graph
+  fits it, hash-min rounds past that (components can merge when a
+  batch doc bridges two of them — handled, tested); members of touched
   components relabel through the broadcast node → root map, and
   keepers are elected among the affected fids only;
 - untouched base labels pass through via an anti-join.
@@ -54,7 +55,7 @@ from deduplidog_spark.config import DedupConfig
 from deduplidog_spark.operators import simhash as sh
 from deduplidog_spark.operators.actions import action_plan, run_metrics
 from deduplidog_spark.operators.candidates import _bucket_pairs
-from deduplidog_spark.operators.cluster import elect_keepers, union_find_components
+from deduplidog_spark.operators.cluster import connected_components, elect_keepers
 from deduplidog_spark.operators.exact import sha_groups, sha_representatives
 from deduplidog_spark.operators.verify import verify_candidate_pairs
 from deduplidog_spark.pipeline import BAND_MODES, band_rows, scan_tables, split_scan
@@ -170,7 +171,7 @@ def incremental_candidate_pairs(
     members = base_hits.unionByName(
         new_rows.select("fid", "band_id", "band_hash", F.lit(True).alias("is_new"))
     )
-    # no materialize: the bucket table is batch-sized here
+    # no materialize: the bucket key table is batch-sized here
     return _bucket_pairs(members, cfg, lambda d: d)
 
 
@@ -238,14 +239,16 @@ def incremental_labels(
     or to itself when it has no label (a batch fid or a base
     singleton), and contracted self-loops drop. The contracted graph
     has at most one edge per batch edge however large the touched
-    components are, so ``union_find_components`` resolves it in one
-    task. Component ids stay min-member-fid: a base component's id is
-    its min fid and is the node standing for it, so components merged
-    by a batch bridge take the min over their parts exactly as a full
-    recompute would (equivalence is tested). Members of the touched
-    components relabel through the small broadcast node → root map;
-    the affected labels are those members plus the unlabelled
-    endpoints. The touched fids' components are probed with a
+    components are; ``connected_components`` resolves it, in one
+    union-find task while it fits ``UNION_FIND_MAX_EDGES`` and by
+    hash-min rounds past that, so no batch grows one worker past the
+    limit the full run keeps. Component ids stay min-member-fid: a
+    base component's id is its min fid and is the node standing for
+    it, so components merged by a batch bridge take the min over their
+    parts exactly as a full recompute would (equivalence is tested).
+    Members of the touched components relabel through the small
+    broadcast node → root map; the affected labels are those members
+    plus the unlabelled endpoints. The touched fids' components are probed with a
     batch-keyed semi-join, so the label view is read base-wide once,
     for the members."""
     # the touched fids' base components: the edge endpoints (duplicates
@@ -269,12 +272,11 @@ def incremental_labels(
             F.coalesce("id_b_node", "id_b").alias("id_b"),
         )
     )
-    # materialized once: both the members and the unlabelled probe read
-    # it, and each would otherwise run its own union-find task
+    # connected_components materializes its labels, which both the
+    # members and the unlabelled probe read. Contracted duplicates are
+    # possible; they change no label, and its size guard counts them
     roots = F.broadcast(
-        union_find_components(contracted)
-        .toDF("node", "root")
-        .localCheckpoint(eager=False)
+        connected_components(contracted, assume_unique_edges=True).toDF("node", "root")
     )
     members = base_labels.join(
         roots, F.col("component") == F.col("node")

@@ -1,7 +1,8 @@
 """LSH candidate-pair generation with skew guards (SURVEY §2.4 J5, §4.3).
 
 The shared machinery behind the minhash / simhash / substring modes:
-band rows (fid, band_id, band_hash) self-join into candidate pairs.
+band rows (fid, band_id, band_hash) self-join, bucket by bucket, into
+candidate pairs.
 
 Scale analysis (the stage that decides 100 TB viability):
 - the join key (band_id, band_hash) is high-cardinality; honest buckets
@@ -38,23 +39,23 @@ def _bucket_pairs(
     compact key row per distinct (band_id, band_hash) per partition)
     classifies every bucket: > ``max_bucket_size`` → dropped and
     *logged*, per standard LSH practice (SURVEY §4.3); == 1 → can never
-    emit a pair. Only the 2..cap keys — the REAL candidate buckets, tiny
-    relative to the band table because honest buckets are singletons —
-    reach the collect_list, so per-group state is bounded at cap × fid
-    bytes and the group-side exchange carries only pair-producing rows
-    (bench: 5.8M band rows → ~0.4M). When the multi-key set fits the
-    broadcast threshold AQE turns the probe into a map-side semi join,
-    removing the full-table exchange outright (guide §2.3/§2.4); on a
-    high-dup-rate corpus where it outgrows the threshold, AQE falls
-    back to a shuffled join.
+    emit a pair. Only the members of the 2..cap buckets — the REAL
+    candidate buckets, tiny relative to the band table because honest
+    buckets are singletons — pass a semi-join on those keys (bench:
+    5.8M band rows → ~0.4M); AQE broadcasts the key set when it fits.
+    The survivors equi-join themselves on (band_id, band_hash): the
+    member rows shuffle once (the other join side reuses that
+    exchange), and the join, the pair filter and the partial dedup run
+    in whole-stage codegen.
 
     The report carries ``n_base`` (members with ``is_new`` false) and
     ``base_kept_divergence``: true ⇔ the base run kept this bucket (its
     base-only size was under the cap) but the new rows pushed it over,
     so base labels may retain edges a full recompute would not emit.
 
-    ``materialize`` is applied exactly once, to the 2..cap bucket
-    table (fid lists per bucket)."""
+    ``materialize`` is applied exactly once, to the 2..cap bucket key
+    table; only its keys are read back, so a stage that also carries
+    other columns serves as well."""
     cap = cfg.max_bucket_size
     counts = members.groupBy("band_id", "band_hash").agg(
         F.count("*").alias("bucket_size"),
@@ -63,34 +64,22 @@ def _bucket_pairs(
     dropped_report = counts.filter(F.col("bucket_size") > cap).withColumn(
         "base_kept_divergence", (F.col("n_base") > 0) & (F.col("n_base") <= cap)
     )
-    multi = counts.filter(
-        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= cap)
-    ).select("band_id", "band_hash")
-    buckets = materialize(
-        members.join(multi, ["band_id", "band_hash"], "left_semi")
-        .groupBy("band_id", "band_hash")
-        .agg(F.collect_list(F.struct("fid", "is_new")).alias("ms"))
-    )
-    # element i pairs with every j > i: transform over indices, slice
-    # for the tail, flatten + explode — stays in whole-stage codegen
-    ms = F.col("ms")
-    combos = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.size(ms)),
-                lambda y: F.struct(
-                    F.least(x["fid"], y["fid"]).alias("id_a"),
-                    F.greatest(x["fid"], y["fid"]).alias("id_b"),
-                    (x["is_new"] | y["is_new"]).alias("touches_new"),
-                ),
-            ),
+    key = ["band_id", "band_hash"]
+    multi = materialize(
+        counts.filter((F.col("bucket_size") > 1) & (F.col("bucket_size") <= cap))
+        .select(*key)
+    ).select(*key)
+    kept = members.join(multi, key, "left_semi")
+
+    def side(s: str) -> DataFrame:
+        return kept.select(
+            *key, F.col("fid").alias(f"id_{s}"), F.col("is_new").alias(f"new_{s}")
         )
-    )
+
     pairs = (
-        buckets.select(F.explode(combos).alias("p"))
-        .filter(F.col("p.touches_new"))
-        .select("p.id_a", "p.id_b")
+        side("a").join(side("b"), key)
+        .filter((F.col("id_a") < F.col("id_b")) & (F.col("new_a") | F.col("new_b")))
+        .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
     return pairs, dropped_report
@@ -102,20 +91,18 @@ def lsh_candidate_pairs(
     """band rows (fid, band_id, band_hash) → distinct pairs
     (id_a < id_b). Returns (pairs, dropped_buckets_report).
 
-    Grouped pair generation, not a self-join: every row is marked new
-    and fed to the shared bucket kernel (``_bucket_pairs``), which
-    expands in-bucket pairs by a JVM transform/slice expression inside
-    the aggregated partition.
+    Every row is marked new and fed to the shared bucket kernel
+    (``_bucket_pairs``), which self-joins the members of the 2..cap
+    buckets.
 
-    ``materialize`` is the caller's checkpoint hook for the bucket
-    table (the pipeline passes its parquet ``_ckpt`` so the table
-    survives executor loss and resumes across runs, instead of pinning
-    rows in executor storage via localCheckpoint)."""
+    ``materialize`` is the caller's checkpoint hook for the 2..cap
+    bucket key table (the pipeline passes its parquet ``_ckpt`` so the
+    table survives executor loss and resumes across runs, instead of
+    pinning rows in executor storage via localCheckpoint)."""
     if materialize is None:
-        # eager=False: the bucket table has exactly one consumer (the
-        # in-bucket pair expansion, a full scan), so the lazy form
-        # caches identically while skipping the separate
-        # materialization job + driver barrier
+        # eager=False: the key table has exactly one consumer (the
+        # member semi-join, a full scan), so the lazy form caches
+        # identically while skipping the separate materialization job
         materialize = lambda d: d.localCheckpoint(eager=False)  # noqa: E731
     return _bucket_pairs(
         band_rows.select("fid", "band_id", "band_hash", F.lit(True).alias("is_new")),
@@ -144,7 +131,7 @@ def drop_oversized_groups(
     """Group skew cap: count pre-pass + broadcast anti-join.
 
     Removes groups larger than ``cap`` BEFORE any per-group state
-    (bucket lists, inverted lists, owner lists) materializes. The
+    (inverted lists, owner lists) materializes. The
     groupBy count partial-aggregates map-side — its shuffle carries
     ~one row per distinct key per partition — and the oversized key
     set is tiny by construction, so it broadcasts. The window-count

@@ -20,7 +20,7 @@ few enough labels, the graph contracted to the current labels fits,
 and then finishes with it. The append-batch CC
 (``incremental.incremental_labels``) contracts a batch's graph to its
 base components, which leaves at most the batch's edge count, and
-resolves that with it directly.
+resolves that with ``connected_components`` too.
 """
 
 from __future__ import annotations
@@ -135,7 +135,7 @@ def connected_components(
         # (id_a < id_b) duplicate-free edges and skips it.
         und = und.distinct()
     und = materialize(und, "edges")
-    if und.count() <= 2 * UNION_FIND_MAX_EDGES:
+    if _row_count(und) <= 2 * UNION_FIND_MAX_EDGES:
         one_way = und.filter(F.col("src") < F.col("dst"))
         return materialize(
             union_find_components(one_way.toDF("id_a", "id_b")), "uf"
@@ -172,7 +172,7 @@ def connected_components(
                 )
             )
         new_labels = materialize(new_labels, f"r{i}")
-        moved = new_labels.filter(F.col("component") != F.col("prev")).count()
+        moved = _row_count(new_labels.filter(F.col("component") != F.col("prev")))
         labels = new_labels.select("fid", "component")
         if moved == 0:
             return labels
@@ -187,7 +187,7 @@ def connected_components(
             .distinct(),
             f"contracted{i}",
         )
-        open_edges = residual.count()
+        open_edges = _row_count(residual)
         if open_edges == 0:
             return labels
         if open_edges <= UNION_FIND_MAX_EDGES:
@@ -206,6 +206,13 @@ def connected_components(
         "the labels would silently split true components; raise "
         "max_iterations"
     )
+
+
+def _row_count(df: DataFrame) -> int:
+    """Rows of ``df`` counted by one job over its RDD: ``df.count()``
+    plans an aggregate whose exchange adaptive execution runs as a
+    second job."""
+    return df._jdf.queryExecution().toRdd().count()
 
 
 def _union_find(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -245,10 +252,10 @@ def union_find_components(edges: DataFrame) -> DataFrame:
     ``connected_components``, computed in ONE task (a single-group
     ``applyInPandas``) with one job and no round loop.
 
-    For graphs of at most ``UNION_FIND_MAX_EDGES`` edges: an append
-    batch's edges contracted to their base components
-    (``incremental.incremental_labels``), and the full run's edge table
-    or its residual after hash-min rounds (``connected_components``).
+    For graphs of at most ``UNION_FIND_MAX_EDGES`` edges: the edge
+    table ``connected_components`` is handed (a full run's, or an
+    append batch's contracted to its base components) or its residual
+    after hash-min rounds.
     Self-loops are dropped and duplicate edges are harmless."""
     return (
         edges.filter(F.col("id_a") != F.col("id_b"))

@@ -79,7 +79,8 @@ def fork_pairs(
     them lets a pipeline drop or keeper-elect entire repos before any
     per-file LSH work. Input needs (repo, sha) — the ingest projection.
 
-    Scale shape (mirrors candidates.lsh_candidate_pairs):
+    Scale shape (a count pre-pass and cap like
+    candidates.lsh_candidate_pairs, but its own list expansion):
     - one distinct over slim (repo, sha) rows — content never moves;
     - hot-sha guard: a sha present in > ``max_sha_repos`` repos
       (vendored licences, empty __init__.py, boilerplate) contributes

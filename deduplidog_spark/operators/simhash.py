@@ -92,7 +92,7 @@ def hamming_band_exprs(col, max_hamming: int):
       bits per band and C(q, r) ≤ 45 band rows per doc. This is the
       symmetric fix; the media path uses asymmetric multi-probe
       instead because its two sides are built independently, while
-      this path's bands feed the shared grouped bucket expansion
+      this path's bands feed the shared bucket self-join
       (candidates.lsh_candidate_pairs), which has no probe side.
     - radius > 8: falls back to single chunks — combination width
       degrades below usefulness there too, and radii that wide on a

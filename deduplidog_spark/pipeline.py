@@ -224,12 +224,12 @@ def near_dup_edges(
     # (≤ 3% of input bytes) and shuffling the corpus itself.
     contents = files.select("fid", "content")
 
-    def _mat(d):  # band-table checkpoint hook → parquet/table when resumable.
-        # reuse=False: in the grouped-LSH design the bucket table has
-        # exactly ONE consumer (in-bucket pair expansion), so without a
-        # checkpoint target an eager localCheckpoint here is a pure
-        # driver barrier — stay lazy and let the single downstream
-        # materialization pull the chain once.
+    def _mat(d):  # bucket-key checkpoint hook → parquet/table when resumable.
+        # reuse=False: the 2..cap bucket key table has exactly ONE
+        # consumer (the member semi-join), so without a checkpoint
+        # target an eager localCheckpoint here is a pure driver barrier
+        # — stay lazy and let the single downstream job pull the chain
+        # once.
         return _ckpt(d, cfg, "lsh_buckets", reuse=False)
 
     if cfg.mode not in BAND_MODES:

@@ -111,6 +111,30 @@ def test_incremental_labels_equal_full_recompute(spark, incr_run):
     assert inc == ful
 
 
+def test_append_labels_past_union_find_limit_take_rounds(spark, incr_run, monkeypatch):
+    """A batch whose contracted graph exceeds UNION_FIND_MAX_EDGES goes
+    to hash-min rounds, not one union-find task (which would raise
+    here), and its labels still equal a full recompute."""
+    import deduplidog_spark.operators.cluster as cluster
+
+    cfg, state, _, full, batch_raw = incr_run
+
+    def no_union_find(edges):
+        raise AssertionError("union-find task past UNION_FIND_MAX_EDGES")
+
+    monkeypatch.setattr(cluster, "UNION_FIND_MAX_EDGES", 0)
+    monkeypatch.setattr(cluster, "union_find_components", no_union_find)
+    res = incremental_dedupe(
+        batch_raw, cfg, state,
+        base_contents=_df(spark, BASE_ROWS).select(
+            F.concat_ws("/", "repo", "path").alias("fid"), "content"
+        ),
+    )
+    inc = {r.fid: r.component for r in res.labels.collect()}
+    ful = {r.fid: r.component for r in full.clusters.select("fid", "component").collect()}
+    assert inc == ful
+
+
 def test_bridge_merges_base_components(spark, incr_run):
     _, _, res, _, _ = incr_run
     lab = {r.fid: r.component for r in res.labels.collect()}
@@ -267,7 +291,7 @@ def test_batch_edge_touching_large_base_component_is_contracted(spark, monkeypat
     input holds those edges contracted to base components (never the
     touched component's members), and the labels still equal a full
     recompute."""
-    import deduplidog_spark.incremental as inc
+    import deduplidog_spark.operators.cluster as cluster
     from deduplidog_spark.operators.cluster import union_find_components
 
     uf_inputs = []
@@ -276,7 +300,7 @@ def test_batch_edge_touching_large_base_component_is_contracted(spark, monkeypat
         uf_inputs.append(edges)
         return union_find_components(edges)
 
-    monkeypatch.setattr(inc, "union_find_components", spy)
+    monkeypatch.setattr(cluster, "union_find_components", spy)
     cfg = _cfg(None)  # in-memory runs: this test is about the labels
     base_rows = [("base", f"a{i:03d}.py", A) for i in range(300)]
     base_rows += [BASE_ROWS[2], BASE_ROWS[3], BASE_ROWS[4]]  # b1, b2, c1
@@ -306,7 +330,8 @@ def test_batch_edge_touching_large_base_component_is_contracted(spark, monkeypat
     edges = [(r.id_a, r.id_b) for r in res.edges.collect()]
     assert len(edges) <= 2 * len(batch_rows)
     assert all(a in batch_fids or b in batch_fids for a, b in edges)
-    (uf_in,) = uf_inputs
+    # one union-find each: the base run, the batch, the full recompute
+    _, uf_in, _ = uf_inputs
     contracted = [(r.id_a, r.id_b) for r in uf_in.collect()]
     assert 1 <= len(contracted) <= len(edges)
     nodes = {n for e in contracted for n in e}

@@ -1282,6 +1282,77 @@ def test_fork_pairs_jaccard_and_hot_sha_guard(spark):
     assert keys == {("fork", "up"): 0.9, ("partial", "up"): 0.1818}
 
 
+def test_bucket_pairs_equal_brute_force_expansion(spark):
+    """The LSH bucket kernel against a pure-Python expansion of the
+    same capped buckets, on seeded random band rows with mixed is_new
+    flags plus planted buckets: one of exactly max_bucket_size, one of
+    cap + 1 that the base run kept (dropped, divergence), one all-new
+    over the cap (dropped, no divergence), a singleton, and a fid that
+    is both a base and a new row. Same pairs and the same dropped
+    report, through the append kernel and the full-run entry point; a
+    key stage carrying extra columns (the older bucket-list layout)
+    is read for its keys only."""
+    import itertools
+    import random
+    from collections import defaultdict
+
+    from deduplidog_spark.config import DedupConfig
+    from deduplidog_spark.operators.candidates import _bucket_pairs, lsh_candidate_pairs
+
+    cap = 4
+    rng = random.Random(13)
+    rows = [
+        (f"f{i:02d}", band, rng.randrange(40), rng.random() < 0.4)
+        for i in range(60)
+        for band in range(3)
+    ]
+    rows += [(f"c{i}", 9, 1, i == 0) for i in range(cap)]  # exactly cap
+    rows += [(f"d{i}", 9, 2, i < 2) for i in range(cap + 1)]  # n_base 3 <= cap
+    rows += [(f"e{i}", 9, 3, True) for i in range(cap + 2)]  # n_base 0
+    rows += [("s0", 9, 4, False)]  # singleton
+    rows += [("both", 9, 5, False), ("both", 9, 5, True), ("x", 9, 5, False)]
+
+    def brute(rows):
+        buckets = defaultdict(list)
+        for fid, band, h, new in rows:
+            buckets[(band, h)].append((fid, new))
+        pairs, dropped = set(), {}
+        for key, ms in buckets.items():
+            if len(ms) > cap:
+                n_base = sum(not new for _, new in ms)
+                dropped[key] = (len(ms), n_base, 0 < n_base <= cap)
+                continue
+            for (f1, n1), (f2, n2) in itertools.combinations(ms, 2):
+                if f1 != f2 and (n1 or n2):
+                    pairs.add((min(f1, f2), max(f1, f2)))
+        return pairs, dropped
+
+    def got(pairs, dropped):
+        return (
+            {(r.id_a, r.id_b) for r in pairs.collect()},
+            {
+                (r.band_id, r.band_hash): (r.bucket_size, r.n_base, r.base_kept_divergence)
+                for r in dropped.collect()
+            },
+        )
+
+    cfg = DedupConfig(mode="minhash", max_bucket_size=cap)
+    df = spark.createDataFrame(rows, "fid string, band_id int, band_hash long, is_new boolean")
+    want_pairs, want_dropped = brute(rows)
+    assert ("both", "x") in want_pairs and ("c0", "c1") in want_pairs
+    assert want_dropped[(9, 2)] == (cap + 1, 3, True)
+    assert want_dropped[(9, 3)] == (cap + 2, 0, False)
+    assert len(want_dropped) > 2  # the random rows drop buckets too
+    assert got(*_bucket_pairs(df, cfg, lambda d: d)) == (want_pairs, want_dropped)
+
+    all_new = [(f, b, h, True) for f, b, h, _ in rows]
+    old_stage = lambda d: d.withColumn("ms", F.lit("unused"))  # noqa: E731
+    assert got(*lsh_candidate_pairs(df.drop("is_new"), cfg, materialize=old_stage)) == (
+        brute(all_new)[0],
+        {k: (size, 0, False) for k, (size, _, _) in brute(all_new)[1].items()},
+    )
+
+
 def test_language_id_multi_new_profiles_and_cjk_gate(spark):
     """r4 VERDICT next-round #6: es/it/pt/nl profiles and the CJK
     char-class gate. The gate fires only at >= 30% CJK chars (integer
